@@ -30,19 +30,23 @@ FILES_PER_TABLE = 8
 
 # Generator parameters per workload. Changing any value changes the cache key.
 PARAMS = {
-    # one doc_id holds 5% of events/probes: far below max(1M, total/cores),
-    # so hot-key detection routes 0 keys
+    # 20k docs x (12 events + 2 probes) = 280k rows; one doc_id holds 5% of
+    # them (14k), far below the 1M-row spill floor, so 0 keys are routed
     "flagship": {"kind": "flagship", "n_docs": 20_000, "events_per_doc": 12,
                  "probes_per_doc": 2, "hot_pct": 5, "max_tokens": 64},
-    # one doc_id holds 70% of 1.68M rows = 1.18M rows: above both 1M and
-    # total/cores for any core count, so exactly 1 key is routed
-    "flagship-skewed": {"kind": "flagship", "n_docs": 20_000, "events_per_doc": 60,
+    # 20k docs x (75 events + 2 probes) = 1.54M rows; one doc_id holds 88% of
+    # them (1.36M): 35% above the 1M-row spill floor, and above total/cores
+    # on 2 or more cores, so exactly 1 key is routed there. On 1 core no
+    # key can exceed total/cores, and none is routed.
+    "flagship-skewed": {"kind": "flagship", "n_docs": 20_000, "events_per_doc": 75,
                         "probes_per_doc": 2, "hot_pct": 88, "max_tokens": 64},
-    # driver `events` schema; clicks are the probes. 1M rows in total can
+    # driver `events` schema; clicks are the probes. 60k rows in total can
     # never clear the 1M-row spill floor, so 0 keys are routed
-    "featuregen": {"kind": "events", "n_events": 150_000, "click_pct": 20,
+    "featuregen": {"kind": "events", "n_events": 60_000, "click_pct": 20,
                    "n_users": 10_000},
 }
+# hot keys each workload must route; a rep that routes another number fails
+ROUTED = {"flagship": 0, "flagship-skewed": 1, "featuregen": 0}
 
 
 def cache_key(workload: str, seed: int) -> str:

@@ -28,7 +28,7 @@ sys.path.insert(0, REPO)
 # The engine and the job are imported first: outside a checkout of the
 # repository this fails before any input is written or any result printed.
 import workloads as W  # noqa: E402
-from inputs import PARAMS, SEQ_BUCKETS, ensure_inputs  # noqa: E402
+from inputs import PARAMS, ROUTED, SEQ_BUCKETS, ensure_inputs  # noqa: E402
 from spans import FIELDS, LAYERS, Tracer, median_of  # noqa: E402
 
 from pyspark.sql import SparkSession  # noqa: E402
@@ -44,14 +44,27 @@ SHUFFLE_WIDTH = SEQ_BUCKETS
 # rep, so peak RSS tracks what the engine retains, not GC sizing decisions.
 DRIVER_MEM = "4g"
 YOUNG_GEN = "1g"
-SETUPS = 3  # session restarts whose median is setup_s
-MIN_REPS = 1
-# Untimed reps after the cold one. Flagship reps keep getting faster for
-# about three reps while the JIT compiles the generated code (5.5, 4.3, 3.9,
-# 3.6, 3.7 s on 4 cores); featuregen reps show no such trend (13.2, 11.9,
-# 12.6 s) and each costs 12 s, so it takes none and measures one rep.
-WARMUP_REPS = {"flagship": 2, "flagship-skewed": 1, "featuregen": 0}
-FG_KILL_AFTER = 2
+# Spark's generated-class cache holds 100 entries by default. The flagship
+# compiles about 90 classes, and the cache evicted about half of them
+# between reps: each steady rep compiled 48 classes again, and HotSpot then
+# had to JIT-compile them afresh. Reps took 3.4-7.2 s, depending on how the
+# evictions fell. With room for every class, steady reps compile none. The
+# cold rep still compiles every class once, as each spark-submit does.
+CODEGEN_CACHE = 2000
+SETUPS = 5  # session restarts whose median is setup_s
+# Steady reps whose median is rows_per_s: at least this many, and more
+# while the --seconds budget lasts.
+MIN_REPS = 3
+# Untimed reps after the cold one, while HotSpot is still compiling the
+# hot paths. On 4 cores the JIT spent 30, 14, 9, 7 and 4 s of compiler
+# time in the first five flagship reps (15.5, 6.1, 5.0, 4.7, 4.1 s wall),
+# and 48, 17, 10, 6 and 4 s in the first five featuregen reps (25.7, 13.3,
+# 12.1, 9.1, 9.2 s). With one warm-up rep, the three steady reps of a run
+# still fell from first to last in about half the runs of either workload
+# (flagship 5.0, 4.7, 3.5 s; featuregen 9.8, 6.5, 6.6 s), and the median
+# moved with how far the JIT had got. Two warm-up reps level that out.
+WARMUP_REPS = {"flagship": 2, "flagship-skewed": 1, "featuregen": 2}
+FG_KILL_AFTER = 1  # of the 2 chunks: half the pids stay pending
 
 
 def cores() -> int:
@@ -89,6 +102,7 @@ def build_session(traced: bool = False) -> SparkSession:
         .config("spark.sql.autoBroadcastJoinThreshold", "-1")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE))
     )
     # glibc's per-thread malloc arenas make the JVM's RSS vary run to run
     os.environ["MALLOC_ARENA_MAX"] = "2"
@@ -149,13 +163,14 @@ def kill_leg(root: str, out_dir: str) -> int:
         time.sleep(0.1)
     if rc != 42:
         raise RuntimeError(f"killed featuregen job exited {rc}, want 42")
-    return len(W.CheckpointManager(W.ParquetJournalTableIO(out_dir), 32).pending())
+    return len(W.CheckpointManager(W.ParquetJournalTableIO(out_dir), W.FG_PIDS).pending())
 
 
 class Runner:
     def __init__(self, workload: str, seed: int, seconds: float, trace: bool):
         self.workload, self.seconds, self.trace = workload, seconds, trace
         self.kind = PARAMS[workload]["kind"]
+        self.routed = ROUTED[workload]
         self.root, self.ref, self.gen_s = ensure_inputs(WORK, workload, seed)
         self.out = os.path.join(WORK, "out", workload)
         self.attempted = self.failed = 0
@@ -175,11 +190,11 @@ class Runner:
             if self.kind == "flagship":
                 info = W.flagship_rep(spark, self.root, out, tr)
                 wall = time.perf_counter() - t0
-                errs = W.check_flagship(out, self.ref, info)
+                errs = W.check_flagship(out, self.ref, info, self.routed)
             else:
                 W.run_featuregen(self.root, out, tr)
                 wall = time.perf_counter() - t0
-                errs = W.check_featuregen(spark, out, self.ref)
+                errs = W.check_featuregen(spark, out, self.ref, self.routed)
         except Exception:
             errs = [traceback.format_exc(limit=3)]
         if errs:
@@ -189,33 +204,32 @@ class Runner:
         return wall
 
     def _reps(self, spark):
-        """Cold rep, warm-up reps, the featuregen resume leg (traced runs),
-        then steady untraced reps and, on traced runs, traced reps."""
+        """Cold rep, the featuregen resume leg (traced runs), warm-up reps,
+        then steady untraced reps; on traced runs, untraced and traced reps
+        alternate, so both sample the same stretch of JIT warm-up."""
         off = Tracer(spark, False)
         cold = self.rep(spark, off)
-        for _ in range(WARMUP_REPS[self.workload]):
-            self.rep(spark, off)
         resume = self.resume_leg(spark) if self.kind == "events" and self.trace else None
+        # the resumed job warms the JVM as a warm-up rep would
+        for _ in range(0 if resume else WARMUP_REPS[self.workload]):
+            self.rep(spark, off)
         steady, traced, layers = [], [], []
-        budget = self.seconds / 2 if self.trace else self.seconds
+        tr = Tracer(spark, True)
+        min_reps = 1 if self.trace else MIN_REPS
         t_start = time.perf_counter()
-        while len(steady) < MIN_REPS or time.perf_counter() - t_start < budget:
+        while (len(steady) < min_reps or (self.trace and not traced)
+               or time.perf_counter() - t_start < self.seconds):
             wall = self.rep(spark, off)
             if wall is not None:
                 steady.append(wall)
-            if self.attempted > 100:
-                break
-        if self.trace:
-            tr = Tracer(spark, True)
-            t_start = time.perf_counter()
-            while not traced or time.perf_counter() - t_start < budget:
+            if self.trace:
                 tr.reset()
                 wall = self.rep(spark, tr)
                 if wall is not None:
                     traced.append(wall)
                     layers.append(tr.layer_metrics(cores()))
-                if self.attempted > 100:
-                    break
+            if self.attempted > 100:
+                break
         return cold, resume, steady, traced, layers
 
     def resume_leg(self, spark) -> float | None:
@@ -227,8 +241,8 @@ class Runner:
             t0 = time.perf_counter()
             W.run_featuregen(self.root, d)
             wall = time.perf_counter() - t0
-            errs = W.check_featuregen(spark, d, self.ref)
-            if pending != 32 - 8 * FG_KILL_AFTER:
+            errs = W.check_featuregen(spark, d, self.ref, self.routed)
+            if pending != W.FG_PIDS - W.FG_CHUNK * FG_KILL_AFTER:
                 errs.append(f"pending after kill: {pending}")
         except Exception:
             errs = [traceback.format_exc(limit=3)]

@@ -15,7 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import run  # noqa: E402
 import workloads as W  # noqa: E402
-from inputs import bucket_ids, ensure_inputs  # noqa: E402
+from inputs import ROUTED, bucket_ids, ensure_inputs  # noqa: E402
 
 SEED = 1
 
@@ -28,13 +28,13 @@ def spark():
     run.stop_jvm(s)
 
 
-@pytest.mark.parametrize("workload,routed", [("flagship", 0), ("flagship-skewed", 1)])
-def test_flagship_routing(spark, workload, routed):
+@pytest.mark.parametrize("workload", ["flagship", "flagship-skewed"])
+def test_flagship_routing(spark, workload):
     root, _, _ = ensure_inputs(run.WORK, workload, SEED)
     probes = spark.read.parquet(os.path.join(root, "probes"))
     ev = spark.read.parquet(os.path.join(root, "seq_events"))
     _, hot = W.detect_hot_docs(spark, probes, ev)
-    assert len(hot) == routed
+    assert len(hot) == ROUTED[workload]
 
 
 def test_featuregen_routes_nothing_and_kill_leaves_half(spark):

@@ -25,6 +25,11 @@ from jobs import featuregen
 from inputs import SEQ_BUCKETS, duckdb_connect
 
 SEQ_TABLE = "perfbench_sequences"
+# featuregen.main's default 32 pids, in 2 chunks of 16 rather than its
+# default 4 of 8. Every pid is still its own commit; the two chunks halve
+# the per-chunk lowering, write and footer-count jobs, which made a
+# featuregen run too long for the time budget of a comparison.
+FG_PIDS, FG_CHUNK = 32, 16
 # 6h time buckets for routed hot keys, as in the flagship composition
 BUCKET_S = 6 * 3600
 
@@ -119,10 +124,10 @@ def flagship_rep(spark, root: str, out_dir: str, tr) -> dict:
     with tr.span("cache"):
         released = cache.release_all()
     tr.count("cache.frames_released", released)
-    return {"stats_count": sum(r["fvalue_last_count"] for r in rows)}
+    return {"stats_count": sum(r["fvalue_last_count"] for r in rows), "hot_keys": len(hot)}
 
 
-def check_flagship(out_dir: str, ref: dict, info: dict) -> list[str]:
+def check_flagship(out_dir: str, ref: dict, info: dict, routed: int) -> list[str]:
     con = duckdb_connect()
     rows, matched, sess, fv, bad_tok = con.execute(f"""
         SELECT sum(n), sum(matched), sum(sessions), sum(fv), sum(bad) FROM (
@@ -135,7 +140,8 @@ def check_flagship(out_dir: str, ref: dict, info: dict) -> list[str]:
     errs = []
     for name, got, want in (("rows", rows, ref["rows"]), ("matched", matched, ref["matched"]),
                             ("sessions", sess, ref["sessions"]),
-                            ("stats_count", info["stats_count"], fv), ("bad_tokens", bad_tok, 0)):
+                            ("stats_count", info["stats_count"], fv), ("bad_tokens", bad_tok, 0),
+                            ("hot keys routed", info["hot_keys"], routed)):
         if got != want:
             errs.append(f"{name}: got {got}, want {want}")
     return errs
@@ -234,7 +240,7 @@ def _traced_featuregen(tr):
 
 def run_featuregen(root: str, out_dir: str, tr=None, kill_after: int = 0) -> int:
     """One ``jobs.featuregen.main`` invocation with its prints on stderr."""
-    argv = ["--input", root, "--output", out_dir]
+    argv = ["--input", root, "--output", out_dir, "--chunk-size", str(FG_CHUNK)]
     if kill_after:
         argv += ["--kill-after-chunks", str(kill_after)]
     with contextlib.redirect_stdout(sys.stderr):
@@ -250,17 +256,20 @@ def run_featuregen(root: str, out_dir: str, tr=None, kill_after: int = 0) -> int
         return rc
 
 
-def check_featuregen(spark, out_dir: str, ref: dict) -> list[str]:
+def check_featuregen(spark, out_dir: str, ref: dict, routed: int) -> list[str]:
     io = ParquetJournalTableIO(out_dir)
     df = io.read_all(spark)
     got = df.agg(F.count(F.lit(1)).alias("n"),
                  F.countDistinct("event_id").alias("d")).collect()[0]
-    journal_rows = sum(r["metrics"]["rows_out"] for r in io.read_journal())
-    errs = []
+    journal = io.read_journal()
+    journal_rows = sum(r["metrics"]["rows_out"] for r in journal)
+    errs = [f"pid {r['partition_id']}: {r['lineage']['params']['n_hot_keys']} hot keys "
+            f"routed, want {routed}"
+            for r in journal if r["lineage"]["params"]["n_hot_keys"] != routed]
     for name, val, want in (("journal rows", journal_rows, ref["rows"]),
                             ("read_all rows", got["n"], ref["rows"]),
                             ("distinct event_id", got["d"], ref["rows"]),
-                            ("committed pids", len(io.committed_partitions()), 32)):
+                            ("committed pids", len(io.committed_partitions()), FG_PIDS)):
         if val != want:
             errs.append(f"{name}: got {val}, want {want}")
     return errs
