@@ -123,8 +123,14 @@ def straggler_hot_keys(
     Returns the same shape as ``detect_hot_keys``. An empty list is the
     correct result for "no key can straggle here" — the fused chain
     degenerates to the plain single-window plan on it.
+
+    ``total_rows`` must be the row count of ``df``: when it is at or below
+    the bar, no key can clear it, and the empty list is returned without
+    launching the detection job.
     """
     thr = straggler_threshold(total_rows, cores, spill_floor)
+    if total_rows <= thr:
+        return []
     return detect_hot_keys(
         df, keys, thr + 1, max_keys=max_keys, sample_fraction=sample_fraction
     )

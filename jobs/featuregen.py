@@ -31,7 +31,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession, functions as F
 
 from engine import cache
-from engine.checkpoint import PID_COL, CheckpointManager, ParquetJournalTableIO, with_partition_id
+from engine.checkpoint import (
+    PID_COL, CheckpointManager, ParquetJournalTableIO, repartition_by_pid, with_partition_id,
+)
 from engine.io import read_table
 from engine.plan import FeatureEngine
 
@@ -58,7 +60,10 @@ def build_features(probes, state, entity, probe_ts, values, gap, lags,
     return eng.to_df(hot_keys=keys), eng.plan
 
 
-def stage_inputs(spark, probes_p, state_p, stage_dir, files_per_pid: int = 8):
+ROLE_COL = "__role"
+
+
+def stage_inputs(spark, probes_p, state_p, stage_dir):
     """Write the pid-partitioned inputs ONCE so each chunk's scan
     partition-prunes (PartitionFilters on __pid) to its own pids instead of
     re-decoding the full input. Without staging, the chunk filter is a
@@ -67,29 +72,38 @@ def stage_inputs(spark, probes_p, state_p, stage_dir, files_per_pid: int = 8):
     (measured: 63% overhead at 8M docs / 4 chunks; staged overhead in the
     same record, BENCH/BASELINE.md).
 
-    Cost model at scale: staging = one extra full-input exchange + write,
-    amortized across all chunks; the repartition keys on (pid, sub-bucket)
-    so each pid lands in ~files_per_pid files and no single task serializes
-    a whole pid. Resume-safe/idempotent: a table is reused only when its
-    write completed (_SUCCESS); pid assignment is data-determined, so a
-    restaged table is bit-identical.
+    Probes and state are staged as ONE table, so staging is one exchange +
+    write job. Its layout follows the chunk scans that read it: it is
+    partitioned by ``__pid`` and a ``__role`` column, so a chunk's scan of
+    either side prunes to its own pids AND role, and each
+    ``__pid=X/__role=Y`` directory holds exactly one file
+    (:func:`engine.checkpoint.repartition_by_pid`). Measured 2026-10-17 on
+    the perfbench featuregen workload (60k events, 32 pids, chunks of 16,
+    local[4]): two tables hash-split 8 ways per pid wrote 328 files, this
+    writes 64, and traced featuregen time (mostly staging) fell
+    2.63 s → 1.09 s.
+
+    Resume-safe/idempotent: the table is reused only when its write
+    completed (_SUCCESS); pid assignment is data-determined, so a restaged
+    table holds identical rows.
     """
-    out = {}
-    for name, df in (("probes", probes_p), ("state", state_p)):
-        d = os.path.join(stage_dir, name)
-        sub = F.pmod(
-            F.xxhash64(*[F.col(c) for c in df.columns if c != PID_COL]),
-            F.lit(files_per_pid),
+    staged = probes_p.withColumn(ROLE_COL, F.lit("probes")).unionByName(
+        state_p.withColumn(ROLE_COL, F.lit("state")), allowMissingColumns=True
+    )
+    d = os.path.join(stage_dir, "inputs")
+    if not os.path.exists(os.path.join(d, "_SUCCESS")):
+        (
+            repartition_by_pid(staged, (ROLE_COL,))
+            .write.mode("overwrite")
+            .partitionBy(PID_COL, ROLE_COL)
+            .parquet(d)
         )
-        if not os.path.exists(os.path.join(d, "_SUCCESS")):
-            (
-                df.repartition(F.col(PID_COL), sub)
-                .write.mode("overwrite")
-                .partitionBy(PID_COL)
-                .parquet(d)
-            )
-        out[name] = spark.read.parquet(d)
-    return out["probes"], out["state"]
+    table = spark.read.schema(staged.schema).parquet(d)
+
+    def role(name, df):
+        return table.where(F.col(ROLE_COL) == name).select(*df.columns)
+
+    return role("probes", probes_p), role("state", state_p)
 
 
 def main(argv=None):
@@ -128,6 +142,15 @@ def main(argv=None):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.sparkContext.setLogLevel("WARN")
 
+    io = ParquetJournalTableIO(args.output, extra_partition_cols=args.output_partition_by)
+    mgr = CheckpointManager(io, args.partitions)
+    pending = mgr.pending()
+    print(f"partitions={args.partitions} pending={len(pending)} "
+          f"committed={args.partitions - len(pending)}")
+    if not pending:
+        # a finished job: no input scan, hot-key detection or staging
+        return 0
+
     if args.synthetic:
         from engine.datagen import gen_probes, gen_seq_events, gen_sequences
 
@@ -151,21 +174,16 @@ def main(argv=None):
         # when its serial window task would actually straggle the job —
         # below that bar the fused plan degenerates to the plain chain,
         # which is faster (the hybrid machinery's fixed costs are real).
-        from engine.skew import straggler_hot_keys
+        from engine.skew import straggler_hot_keys, straggler_threshold
 
         n = probes.count() + state.count()
+        cores = spark.sparkContext.defaultParallelism
         hot_keys = straggler_hot_keys(
             probes.select(entity).unionByName(state.select(entity)), entity, n,
-            cores=spark.sparkContext.defaultParallelism,
-            sample_fraction=0.05 if n > 1_000_000 else None,
+            cores=cores, sample_fraction=0.05 if n > 1_000_000 else None,
         )
-        print(f"hot keys routed (straggler condition): {len(hot_keys)}")
-
-    io = ParquetJournalTableIO(args.output, extra_partition_cols=args.output_partition_by)
-    mgr = CheckpointManager(io, args.partitions)
-    pending = mgr.pending()
-    print(f"partitions={args.partitions} pending={len(pending)} "
-          f"committed={args.partitions - len(pending)}")
+        print(f"hot keys routed (straggler condition): total_rows={n} cores={cores} "
+              f"threshold={straggler_threshold(n, cores)} routed={len(hot_keys)}")
 
     probes_p = with_partition_id(probes, entity, args.partitions)
     state_p = with_partition_id(state, entity, args.partitions)

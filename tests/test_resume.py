@@ -2,6 +2,7 @@
 assert (a) final output identical to an uninterrupted run and (b) committed
 partitions were NOT recomputed (journal records untouched)."""
 
+import glob
 import json
 import os
 import subprocess
@@ -14,11 +15,11 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 JOB = os.path.join(REPO, "jobs", "featuregen.py")
 
 
-def _run(outdir, *extra):
+def _run(outdir, *extra, env=None):
     cmd = [sys.executable, JOB, "--input", "/root/testdata/sf0.001",
            "--output", outdir, "--partitions", "8", "--chunk-size", "4",
            "--parallelism", "8", *extra]
-    return subprocess.run(cmd, capture_output=True, text=True, timeout=420)
+    return subprocess.run(cmd, capture_output=True, text=True, timeout=420, env=env)
 
 
 def _read_output(spark, outdir):
@@ -158,11 +159,73 @@ def test_stage_input_default_and_escape_hatch(tmp_path):
     staged = str(tmp_path / "staged")
     r = _run(staged)
     assert r.returncode == 0, r.stdout + r.stderr
-    for side in ("probes", "state"):
-        assert os.path.exists(os.path.join(staged, "_staged", side, "_SUCCESS"))
+    assert os.path.exists(os.path.join(staged, "_staged", "inputs", "_SUCCESS"))
 
     nostage = str(tmp_path / "nostage")
     r2 = _run(nostage, "--no-stage-input")
     assert r2.returncode == 0, r2.stdout + r2.stderr
     assert not os.path.exists(os.path.join(nostage, "_staged"))
     assert "SUMMARY" in r2.stdout
+
+
+def _parquet_files(d):
+    return sum(f.endswith(".parquet") for f in os.listdir(d))
+
+
+@pytest.mark.slow
+def test_one_file_per_pid_directory(spark, tmp_path):
+    """Staged input and committed output hold exactly one parquet file per
+    partition directory, with and without staging, and under an extra
+    ``source`` level; staging changes no output row. AQE partition
+    coalescing is off, as it is at sizes where every shuffle partition is
+    big: at test size it would merge the 8-wide exchanges into one task and
+    hide a layout that spreads a pid over several files."""
+    # the job's session is created in the subprocess, from these submit args
+    env = {**os.environ, "PYSPARK_SUBMIT_ARGS":
+           "--conf spark.sql.adaptive.coalescePartitions.enabled=false pyspark-shell"}
+    staged, nostage = str(tmp_path / "staged"), str(tmp_path / "nostage")
+    r = _run(staged, env=env)
+    assert r.returncode == 0, r.stdout + r.stderr
+    r2 = _run(nostage, "--no-stage-input", env=env)
+    assert r2.returncode == 0, r2.stdout + r2.stderr
+    pd.testing.assert_frame_equal(_read_output(spark, staged), _read_output(spark, nostage))
+
+    nested = str(tmp_path / "nested")
+    r3 = _run(nested, "--synthetic", "400", "--output-partition-by", "source", env=env)
+    assert r3.returncode == 0, r3.stdout + r3.stderr
+    dirs = {
+        "staged data": glob.glob(os.path.join(staged, "data", "__pid=*")),
+        "staged input": glob.glob(os.path.join(staged, "_staged", "inputs", "__pid=*", "__role=*")),
+        "unstaged data": glob.glob(os.path.join(nostage, "data", "__pid=*")),
+        "nested data": glob.glob(os.path.join(nested, "data", "__pid=*", "source=*")),
+    }
+    for name, ds in dirs.items():
+        assert ds, name
+        assert {d: _parquet_files(d) for d in ds} == {d: 1 for d in ds}, name
+
+
+def test_rerun_of_finished_job_writes_nothing(spark, sf_dir, tmp_path, capsys):
+    """A re-run into a completed output returns right after the pending
+    check: no Spark job (no input count, hot-key detection, staging or
+    write) and every data file keeps its mtime."""
+    from jobs import featuregen
+
+    out = str(tmp_path / "out")
+    argv = ["--input", sf_dir, "--output", out,
+            "--partitions", "4", "--chunk-size", "4", "--parallelism", "8"]
+    assert featuregen.main(argv) == 0
+    files = [os.path.join(root, f) for root, _, fs in os.walk(out) for f in fs]
+    assert any(f.endswith(".parquet") for f in files)
+    mtimes = {f: os.path.getmtime(f) for f in files}
+    capsys.readouterr()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("featuregen-rerun", "featuregen-rerun")
+    try:
+        assert featuregen.main(argv) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("featuregen-rerun")) == []
+    assert "pending=0 committed=4" in capsys.readouterr().out
+    assert {f: os.path.getmtime(f) for f in mtimes} == mtimes
+    assert sorted(os.path.join(root, f) for root, _, fs in os.walk(out) for f in fs) == sorted(mtimes)

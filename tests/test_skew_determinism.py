@@ -119,6 +119,37 @@ def test_straggler_hot_keys_cost_condition(spark):
     assert routed == ["doc000000000000"]
 
 
+def test_straggler_hot_keys_no_job_below_the_bar(spark):
+    """When the whole input is at or below the straggler bar no key can clear
+    it, so the detection returns [] without launching a Spark job."""
+    from engine.skew import straggler_hot_keys
+
+    ev = gen_seq_events(spark, n_docs=40, seed=11, hot_frac_pct=50, partitions=4)
+    n = ev.count()
+    sc = spark.sparkContext
+
+    def jobs_in_group(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    hot, jobs = jobs_in_group(
+        "straggler-below-bar",
+        lambda: straggler_hot_keys(ev.select("doc_id"), "doc_id", n, cores=4),
+    )
+    assert hot == [] and list(jobs) == []
+    # control: above the bar the same group tracking sees the detection job
+    hot, jobs = jobs_in_group(
+        "straggler-above-bar",
+        lambda: straggler_hot_keys(ev.select("doc_id"), "doc_id", n, cores=4,
+                                   spill_floor=50),
+    )
+    assert hot == ["doc000000000000"] and list(jobs)
+
+
 def test_hot_broadcast_join_equals_plain_join(spark):
     """hot_broadcast_join must equal the plain join exactly — hot keys are a
     routing choice, never a semantic one (including unmatched left rows)."""
