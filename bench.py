@@ -271,21 +271,8 @@ def flagship_pipeline(spark, root: str, strategy: str = "hybrid", hot_keys=None,
                 "doc_id", n, cores=spark.sparkContext.defaultParallelism,
                 sample_fraction=0.05,
             )
-        # AFG_FCAT_DICT=1: dictionary-encode the low-cardinality fcat
-        # string to an int code BEFORE exchange 1 and decode right after
-        # the fused chain (r4 verdict task #6 A/B). The string's UnsafeRow
-        # cost (8 B offset/len + padded bytes) rides E1 inside the payload
-        # struct and E2 as side-1 pass-through; the code is one fixed 8 B
-        # slot. The substring encode is the measurement probe (zero extra
-        # compute, isolates exchange bytes); a production dictionary is a
-        # broadcast dim join with the identical exchange effect. Verdict of
-        # the measured A/B lives in BENCH/envelope.json (fcat_dict_ab).
-        fcat_dict = os.environ.get("AFG_FCAT_DICT", "0") == "1"
-        ev_in = ev
-        if fcat_dict:
-            ev_in = ev.withColumn("fcat", F.substring("fcat", 4, 8).cast("int"))
         feat = fused_feature_chain(
-            probes, ev_in, on="doc_id", probe_ts="asof_ts", state_ts="ts",
+            probes, ev, on="doc_id", probe_ts="asof_ts", state_ts="ts",
             values=["fvalue", "fcat"], suffix="_last",
             lag_cols=["fvalue_last"], lags=[1, 2],
             session_gap="1 hour",
@@ -294,13 +281,6 @@ def flagship_pipeline(spark, root: str, strategy: str = "hybrid", hot_keys=None,
             bucket=BUCKET_US / 1e6,
             hot_keys=hot,
         )
-        if fcat_dict:
-            # decode before the persist so everything downstream (stats,
-            # token join, output schema) is byte-identical to the baseline
-            feat = feat.withColumn(
-                "fcat_last",
-                F.concat(F.lit("cat"), F.col("fcat_last").cast("string")),
-            )
     else:
         feat = plain_chain(probes, ev)
     # The feature frame feeds BOTH outputs — cache it (narrow columns, no
@@ -825,19 +805,6 @@ work at every parallelism).
                             f"  | local[{cores}] | {ts['cpu_s']} | {ts['gc_s']} | "
                             f"{ts['shuffle_write_mb']} | {ts['shuffle_read_mb']} | "
                             f"{ts.get('spill_disk_mb', 0)} |\n")
-        fd = recs.get("fcat_dict_ab")
-        if fd:
-            fh.write(f"""
-## fcat dictionary-encode A/B (dated record, measured {fd['measured']})
-
-scripts/flagship_ab.py at local[{fd['cores']}], {fd['bench_docs']}-doc
-corpus, tmpfs shuffle, {len(fd['baseline_reps'])} reps/leg. Baseline
-(fcat string through E1/E2): {fd['baseline_reps']} s (best
-{min(fd['baseline_reps'])}). AFG_FCAT_DICT=1 (int code through the
-exchanges, decoded after the chain — output byte-identical, equality-
-checked): {fd['dict_reps']} s (best {min(fd['dict_reps'])}).
-**Verdict: {fd['verdict']}.** {fd.get('context', '')}
-""")
         ck = recs.get("checkpoint_overhead")
         if ck:
             staged = ""

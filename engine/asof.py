@@ -4,7 +4,7 @@ Requirement: BASELINE.json:6 — "sorted-partition as-of merge (range-partition 
 entity hash, secondary sort by event timestamp, merge-join with last-known-value
 semantics)" with zero temporal leakage (BASELINE.json:14). SURVEY.md §2.3 A1/A2.
 
-Two physical strategies, identical semantics (tests assert equality):
+Three physical strategies, identical semantics (tests assert equality):
 
 * ``strategy="union"`` (default, pure JVM): tag the two sides, ``unionByName``,
   one window ``last(payload, ignorenulls).over(partitionBy(entity).orderBy(ts,
@@ -29,16 +29,10 @@ Two physical strategies, identical semantics (tests assert equality):
   buckets| — tiny relative to the fact table WHEN keys are hot. Identical
   semantics (equality asserted in tests), unbounded parallelism in the time
   dimension. Overhead note: when applied to millions of COLD keys the carry
-  table degenerates to fact-table cardinality — that is what ``hybrid`` is
-  for.
-
-* ``strategy="hybrid"`` (the production default for skewed corpora): one
-  cheap partial-aggregated count per key decides, per entity, which physical
-  path it takes — keys above ``hot_threshold`` rows go through the bucketed
-  time-split path (parallel despite skew), the long tail goes through the
-  plain union window (zero overhead). Results are unioned; semantics
-  identical. This is the standard hot/cold split used for skewed shuffles,
-  applied to the as-of axis where AQE cannot help.
+  table degenerates to fact-table cardinality — so only hot keys take it: the
+  fused chain (``engine.fused``) folds the same time split into its bucket id
+  for the keys ``engine.skew.straggler_hot_keys`` routes, and the hot path of
+  ``rolling_aggregates(method="prefix")`` resolves its cutoffs through it.
 
 Last-known-value semantics match ``pd.merge_asof(direction='backward')``: the
 probe receives the values of the most recent state ROW (which may itself hold
@@ -85,8 +79,6 @@ def asof_join(
     include_state_ts: str | None = None,
     num_partitions: int | None = None,
     bucket: str | int | float = "1 day",
-    hot_threshold: int | None = None,
-    hot_keys: list | None = None,
     persist_intermediate: bool = False,
 ) -> DataFrame:
     """Backward as-of join: each probe row gains the latest state values.
@@ -98,7 +90,8 @@ def asof_join(
         probe_ts / state_ts: event-time columns (state_ts defaults to probe_ts).
         values: state columns to fetch (default: all but key + ts).
         strict: True → only state with ts strictly < probe ts (no exact ties).
-        strategy: "union" (JVM window) or "merge" (cogrouped pd.merge_asof).
+        strategy: "union" (JVM window), "merge" (cogrouped pd.merge_asof)
+            or "bucketed" (time-split window for hot keys).
         suffix: appended to fetched value column names (collision control).
         include_state_ts: if set, also emit the matched state timestamp under
             this name (null when no match).
@@ -106,14 +99,7 @@ def asof_join(
         bucket: time-bucket width for the bucketed strategy (SQL interval
             string, e.g. "1 day", "6 hours") — pick ~(time span / desired
             per-hot-key parallelism).
-        hot_threshold: (hybrid) combined probe+state rows per key above which
-            the key is routed through the bucketed path. None → auto: 4× the
-            mean rows per shuffle partition, floored at 100_000 — i.e. a key
-            only counts as hot when it would meaningfully unbalance a task.
-        hot_keys: (hybrid) explicit pre-detected hot keys (e.g. from
-            ``engine.skew.detect_hot_keys``) — skips the count job, so a
-            pipeline detecting once can share the list across operators.
-        persist_intermediate: (bucketed/hybrid) cache the tagged union that
+        persist_intermediate: (bucketed) cache the tagged union that
             the bucketed plan's three consumers (in-bucket window, per-bucket
             last-state aggregate, bucket axis) all read — one evaluation
             instead of three. MEMORY_AND_DISK; intended when the input is
@@ -141,11 +127,6 @@ def asof_join(
         return _asof_bucketed(
             probes, state, keys, probe_ts, state_ts, values, out_names,
             strict, include_state_ts, bucket, persist_intermediate,
-        )
-    if strategy == "hybrid":
-        return _asof_hybrid(
-            probes, state, keys, probe_ts, state_ts, values, out_names,
-            strict, include_state_ts, bucket, hot_threshold, hot_keys,
         )
     raise ValueError(f"unknown asof strategy: {strategy!r}")
 
@@ -330,71 +311,6 @@ def _asof_bucketed(
     return resolved.select(
         *_probe_projection(probe_cols, keys, out_names, include_state_ts)
     )
-
-
-_MAX_HOT_KEYS = 10_000
-
-
-def _asof_hybrid(
-    probes: DataFrame,
-    state: DataFrame,
-    keys: list[str],
-    probe_ts: str,
-    state_ts: str,
-    values: list[str],
-    out_names: list[str],
-    strict: bool,
-    include_state_ts: str | None,
-    bucket: str,
-    hot_threshold: int | None,
-    hot_keys: list | None = None,
-) -> DataFrame:
-    """Hot/cold split: bucketed path for keys whose row count would serialize
-    a window task, plain union window for the long tail.
-
-    The hot-key scan is one partially-aggregated count (map-side combine means
-    the shuffle carries ~one row per key, not per fact row); the driver
-    collects at most ``_MAX_HOT_KEYS`` hot keys and compiles them into a
-    literal predicate, so both branch filters push down to the scans. With no
-    hot keys this degenerates to the union strategy at zero extra plan cost.
-    """
-    spark = probes.sparkSession
-    if hot_keys is None:
-        if hot_threshold is None:
-            # keys that would meaningfully unbalance one shuffle task: 4x the
-            # mean rows per partition, floored so small inputs never split
-            n = probes.count() + state.count()
-            parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-            hot_threshold = max(100_000, (4 * n) // max(parts, 1))
-        hot_keys = (
-            probes.select(*keys)
-            .unionByName(state.select(*keys))
-            .groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__afg_n"))
-            .where(F.col("__afg_n") >= hot_threshold)
-            .select(*keys)
-            .limit(_MAX_HOT_KEYS + 1)
-            .collect()
-        )
-    args = (keys, probe_ts, state_ts, values, out_names, strict, include_state_ts)
-    if not hot_keys:
-        return _asof_union(probes, state, *args)
-    if len(hot_keys) > _MAX_HOT_KEYS:
-        # pathological: most keys hot — time-split everything
-        return _asof_bucketed(probes, state, *args, bucket)
-
-    from engine.hotwin import hot_predicate
-
-    pred = hot_predicate(keys, hot_keys)
-
-    cold = _asof_union(probes.where(~pred), state.where(~pred), *args)
-    # hot side is bounded (≤ _MAX_HOT_KEYS keys), so caching its tagged
-    # union across the bucketed plan's three consumers is safe
-    hot = _asof_bucketed(
-        probes.where(pred), state.where(pred), *args, bucket,
-        persist_intermediate=True,
-    )
-    return cold.unionByName(hot)
 
 
 def _asof_merge(

@@ -3,8 +3,8 @@
 Several operators persist bounded intermediates because Spark has no
 DataFrame branch reuse (a frame referenced by two consumers re-evaluates
 its whole upstream per consumer): the shared shingle pass in near-dup
-dedup, the exploded LSH band table, the hot-branch chain in the hybrid
-skew split, the prefix-rolling cum frame. Those persists used to leak —
+dedup, the exploded LSH band table, the fused chain's mid frame and carry
+table, the prefix-rolling cum frame. Those persists used to leak —
 nothing ever unpersisted them, so a long-running multi-corpus job (the
 chunked jobs/featuregen.py loop, a bench process running many queries)
 accumulated cache blocks for the life of the application.
@@ -46,19 +46,19 @@ def tracked_persist(df: DataFrame, level=None) -> DataFrame:
 
 
 def chain_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Plan-lineage barrier for ITERATIVELY CHAINED operators (the hot
-    branch of the hybrid skew split): ``localCheckpoint`` truncates the
-    logical plan to a LogicalRDD.
+    """Plan-lineage barrier for ITERATIVELY CHAINED operators (connected-
+    components rounds, the prefix-rolling hot path): ``localCheckpoint``
+    truncates the logical plan to a LogicalRDD.
 
     Why persist() is NOT enough here: persist registers the plan in the
     CacheManager but the downstream LOGICAL tree still nests the full
     upstream plan — and every bucketed operator references its input
     several times (carry tables), so chaining multiplies the analyzed plan
-    ~6x PER STEP. Measured on a 60-doc fixture the 4-step hot chain built a
-    26-million-character plan and spent ~24 s of DRIVER time (analyzer /
-    optimizer / codegen) executing 200 rows; with chain_checkpoint the plan
-    stays ~200k chars and execution is ~1.5 s. That driver cost is fixed
-    per-job, unscalable, and was the hybrid pipeline's dominant overhead.
+    ~6x PER STEP. Measured on a 60-doc fixture a 4-step chain of bucketed
+    operators built a 26-million-character plan and spent ~24 s of DRIVER
+    time (analyzer / optimizer / codegen) executing 200 rows; with
+    chain_checkpoint the plan stays ~200k chars and execution is ~1.5 s.
+    That driver cost is fixed per-job and does not shrink with cores.
 
     The checkpointed blocks are MEMORY_AND_DISK RDD cache entries owned by
     Spark's ContextCleaner: they are freed when the DataFrame is

@@ -1,14 +1,16 @@
 """Fused feature chain: as-of + lag/lead + sessionize + prefix rolling in
 TWO wide shuffles — with an optional built-in hot/cold skew split.
 
-Why this exists: the hybrid skew split routes hot entities through the
-time-bucketed operators in ``engine.hotwin`` / ``engine.asof``. Each of
-those is correct and individually skew-proof, but each pays its own wide
-exchange, carry aggregation, and carry join — chained, the hot branch of the
-flagship pipeline compiled to ~10 wide shuffles plus 2 plan-truncation
-checkpoints, and its wall time was dominated by per-stage fixed costs that
-do not shrink with cores (measured ~0.5 scaling efficiency 4→16 cores for
-the hot branch while the cold chain sat near the CPU ceiling).
+Why this exists: a per-op skew split (since removed) routed hot entities
+through the time-bucketed operators in ``engine.hotwin`` / ``engine.asof``.
+Each of those is correct and individually skew-proof, but each pays its own
+wide exchange, carry aggregation, and carry join — chained, the hot branch
+of the flagship pipeline compiled to ~10 wide shuffles plus 2
+plan-truncation checkpoints, and its wall time was dominated by per-stage
+fixed costs that do not shrink with cores (measured ~0.5 scaling efficiency
+4→16 cores for the hot branch while the cold chain sat near the CPU
+ceiling). ``engine.plan.lower(hot_keys=...)`` now compiles matching plans
+here and lowers every other plan plainly.
 
 The fusion observation: every op in the chain wants the SAME physical
 layout — rows hash-clustered by ``(entity, time_bucket)`` and sorted by

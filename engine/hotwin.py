@@ -25,7 +25,9 @@ boundaries with carry tables that hold ONE row per (entity, active bucket):
 These are not exposed directly: the public ops in ``engine.window_ops`` take
 ``hot_keys=``/``bucket=`` and route hot keys here while cold keys keep the
 plain single-window plan (zero overhead for the long tail). Equality with
-the plain plans is asserted in tests/test_hotwin.py.
+the plain plans is asserted in tests/test_hotwin.py. A whole pipeline is
+skew-proofed by ``engine.plan.lower(hot_keys=...)``, which compiles to the
+fused chain (``engine.fused``) — one split for the pipeline, not one per op.
 """
 
 from __future__ import annotations
@@ -55,10 +57,11 @@ def hot_predicate(entity: str | Sequence[str], hot_keys: list) -> Column:
     holds scalar values for a single-column entity, tuples/Rows otherwise.
 
     Single-column keys compile to ``isin`` (Catalyst In/InSet — O(1) set
-    probe, push-down-able, and safe for the up-to-10k-key lists the asof
-    hybrid auto path produces). The old left-nested eqNullSafe OR chain —
-    kept only for composite keys, which stay small — built a ~10k-deep
-    expression tree that risked analyzer stack overflow (round-1 advice).
+    probe, push-down-able, and safe for the up-to-10k-key lists
+    ``engine.skew.detect_hot_keys`` returns). The old left-nested
+    eqNullSafe OR chain — kept only for composite keys, which stay small —
+    built a ~10k-deep expression tree that risked analyzer stack overflow
+    (round-1 advice).
     ``isin`` never matches NULL, so a NULL hot key is handled with an
     explicit isNull branch to preserve eqNullSafe semantics."""
     ents = _as_list(entity)
@@ -256,93 +259,6 @@ def bucketed_forward_fill(
             ),
         )
     return d.select(*in_cols, *[c + out_suffix for c in cols])
-
-
-def bucketed_cumulative_stats(
-    df: DataFrame,
-    entity: str | Sequence[str],
-    ts: str,
-    aggs: dict[str, Sequence[str]],
-    bucket_us: int = 86_400_000_000,
-) -> DataFrame:
-    """W7 for hot keys. sum/count stitch via per-bucket totals; min/max
-    decompose for EXPANDING frames (running min = min(in-bucket running min,
-    carry min)) — unlike sliding frames, where they don't."""
-    ents = _as_list(entity)
-    in_cols = df.columns
-    d = with_bucket(df, ts, bucket_us)
-    ts_us = epoch_micros(ts)
-    w_in = (
-        Window.partitionBy(*ents, _B)
-        .orderBy(ts_us)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_c = (
-        Window.partitionBy(*ents)
-        .orderBy(F.col(_B))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    tot_exprs, carry_exprs, seen = [], [], set()
-
-    def need_partial(c, n):
-        nm = f"__t_{c}_{n}"
-        if nm in seen:
-            return
-        seen.add(nm)
-        base = {"sum": F.sum, "count": F.count, "min": F.min, "max": F.max}[n]
-        tot_exprs.append(base(c).alias(nm))
-        merge = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}[n]
-        carry_exprs.append(merge(nm).over(w_c).alias(f"__o_{c}_{n}"))
-
-    for c, names in aggs.items():
-        for n in names:
-            if n in ("sum", "count", "min", "max"):
-                need_partial(c, n)
-            elif n == "avg":
-                need_partial(c, "sum")
-                need_partial(c, "count")
-            else:
-                raise ValueError(f"unsupported cumulative agg: {n}")
-    tot = d.groupBy(*ents, _B).agg(*tot_exprs)
-    carry = tot.select(*ents, _B, *carry_exprs)
-    d = d.join(carry, on=[*ents, _B], how="left")
-    out_cols = []
-    for c, names in aggs.items():
-        for n in names:
-            o = f"{c}_cum{n}"
-            out_cols.append(o)
-            if n == "count":
-                d = d.withColumn(
-                    o,
-                    (F.count(c).over(w_in)
-                     + F.coalesce(F.col(f"__o_{c}_count"), F.lit(0))).cast("long"),
-                )
-            elif n == "sum":
-                in_s = F.sum(c).over(w_in)
-                off = F.col(f"__o_{c}_sum")
-                d = d.withColumn(
-                    o,
-                    F.when(
-                        in_s.isNull() & off.isNull(), F.lit(None)
-                    ).otherwise(F.coalesce(in_s, F.lit(0)) + F.coalesce(off, F.lit(0))),
-                )
-            elif n == "min":
-                d = d.withColumn(
-                    o, F.least(F.min(c).over(w_in), F.col(f"__o_{c}_min"))
-                )
-            elif n == "max":
-                d = d.withColumn(
-                    o, F.greatest(F.max(c).over(w_in), F.col(f"__o_{c}_max"))
-                )
-            elif n == "avg":
-                cnt = F.count(c).over(w_in) + F.coalesce(
-                    F.col(f"__o_{c}_count"), F.lit(0)
-                )
-                sm = F.coalesce(F.sum(c).over(w_in), F.lit(0)) + F.coalesce(
-                    F.col(f"__o_{c}_sum"), F.lit(0)
-                )
-                d = d.withColumn(o, F.when(cnt > 0, sm / cnt))
-    return d.select(*in_cols, *out_cols)
 
 
 def bucketed_expanding_sums(

@@ -20,6 +20,7 @@ at v0 (/root/reference/README.md:1).
 from __future__ import annotations
 
 import json
+import logging
 from dataclasses import asdict, dataclass, field
 from typing import Any, Mapping
 
@@ -38,6 +39,8 @@ from engine.window_ops import (
 )
 
 CODE_VERSION = "afg-spark-0.2"
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass(frozen=True)
@@ -101,7 +104,6 @@ def _lower_asof(df, plan, p, tables):
         state_ts=p.get("state_ts", "ts"), values=p.get("values"),
         strict=p.get("strict", False), strategy=p.get("strategy", "union"),
         suffix=p.get("suffix", ""), bucket=p.get("bucket", "1 day"),
-        hot_threshold=p.get("hot_threshold"),
     )
 
 
@@ -163,7 +165,7 @@ def _fused_split(plan: "FeaturePlan"):
     """``(n_fused, kwargs)`` when the plan's leading window steps form the
     asof → lag? → sessionize? → rolling? pattern ``fused_feature_chain``
     compiles to two wide exchanges, and NO per-entity step follows them —
-    else ``None`` (the per-op hot/cold split below stays the fallback).
+    else ``None`` (``lower`` then ignores its hot keys and lowers plainly).
 
     Disqualifiers: ``lag`` with leads (the fused carry tails are
     backward-only), non-decomposable rolling aggs (min/max need the frame
@@ -223,85 +225,12 @@ def _fused_split(plan: "FeaturePlan"):
     return run, kw
 
 
-def _is_split_barrier(plan: "FeaturePlan", step: Step) -> bool:
-    """True for steps that must see the WHOLE frame, not a hot/cold branch.
-
-    An aggregate keyed on anything other than the entity mixes rows from
-    both branches into one group — lowering it per-branch and unioning
-    would emit two partial rows per group (round-1 advice, medium). Every
-    per-entity op is branch-safe because the split itself is by entity;
-    per-row ops (row_features) are trivially safe."""
-    if step.op != "agg_features":
-        return False
-    key = step.params.get("key", plan.entity)
-    keys = [key] if isinstance(key, str) else list(key)
-    return keys != [plan.entity]
-
-
-def _lower_hot_step(df, plan, step, tables, bucket_us):
-    """Time-bucketed lowering for the hot branch (engine.hotwin / bucketed
-    as-of). Ops without a bucketed variant (bfill, non-entity steps) fall
-    back to the plain lowering — an O(n) serial task per hot key at worst."""
-    from engine import hotwin
-    from engine.window_ops import parse_duration_seconds
-
-    p = step.params
-    if step.op == "asof":
-        state = tables[p["state"]]
-        values = p.get("values")
-        return asof_join(
-            df, state, on=plan.entity, probe_ts=plan.ts,
-            state_ts=p.get("state_ts", "ts"), values=values,
-            strict=p.get("strict", False), suffix=p.get("suffix", ""),
-            strategy="bucketed", bucket=bucket_us / 1e6,
-            persist_intermediate=True,
-        )
-    if step.op == "lag":
-        return hotwin.bucketed_lag_features(
-            df, plan.entity, plan.ts, p["cols"],
-            lags=p.get("lags", [1]), leads=p.get("leads", []),
-            bucket_us=bucket_us,
-        )
-    if step.op == "ffill":
-        return hotwin.bucketed_forward_fill(
-            df, plan.entity, plan.ts, p["cols"],
-            out_suffix=p.get("out_suffix", "_f"), bucket_us=bucket_us,
-        )
-    if step.op == "sessionize":
-        gap_us = int(parse_duration_seconds(p.get("gap", "30 minutes")) * 1_000_000)
-        return hotwin.bucketed_sessionize(
-            df, plan.entity, plan.ts, gap_us, bucket_us=bucket_us
-        )
-    if step.op == "rolling":
-        # hot branch prefers the O(n) prefix method (frame would be
-        # O(rows x frame) serial); min/max do not decompose into prefix
-        # sums, so such plans — valid under the default method='frame' —
-        # fall back to the plain frame lowering on the hot branch (correct,
-        # one serial hot task) instead of raising (round-1 advice fix).
-        _DECOMP = {"count", "sum", "avg", "mean", "stddev"}
-        if all(n in _DECOMP for ns in p["aggs"].values() for n in ns):
-            return rolling_aggregates(
-                df, plan.entity, plan.ts, p["aggs"], window=p["window"],
-                method="prefix", _bucket_us=bucket_us,
-            )
-        return _LOWERERS["rolling"](df, plan, p, tables)
-    if step.op == "cumulative":
-        try:
-            return hotwin.bucketed_cumulative_stats(
-                df, plan.entity, plan.ts, p["aggs"], bucket_us=bucket_us
-            )
-        except ValueError:  # unsupported agg (e.g. stddev): plain fallback
-            pass
-    return _LOWERERS[step.op](df, plan, p, tables)
-
-
 def lower(
     probes: DataFrame,
     plan: FeaturePlan,
     tables: Mapping[str, DataFrame] | None = None,
     hot_keys: list | None = None,
     bucket: str | int | float = "1 day",
-    persist_hot: bool = True,
 ) -> DataFrame:
     """FeaturePlan → DataFrame by composing §2 operators in step order.
 
@@ -309,99 +238,41 @@ def lower(
     plans ONE shuffle for the whole chain (verified: the flagship 5-step
     plan compiles to a single Exchange).
 
-    ``hot_keys`` (e.g. from ``engine.skew.detect_hot_keys``): pipeline-level
-    hot/cold split — the plan is lowered TWICE, once plainly over the cold
-    keys and once with the time-bucketed variants over the hot keys, then
-    unioned. Splitting once per pipeline keeps both chains linear (per-op
-    splitting would fork the DAG at every step). ``persist_hot`` caches the
-    hot branch between per-entity steps (bucketed ops aggregate their own
-    input for carry tables; the hot subset is bounded by construction).
+    ``hot_keys`` (e.g. from ``engine.skew.straggler_hot_keys``): when the
+    plan's leading window steps match :func:`_fused_split`, they compile
+    to the whole-pipeline fused chain (``engine.fused`` — TWO wide
+    exchanges, hot keys time-split by ``bucket`` inside them) and the
+    remaining steps lower plainly on its output. Any other plan lowers
+    plainly: same results, but its hot keys are not skew-proofed — the
+    lowering logs a warning saying so.
     """
     tables = tables or {}
-    if not hot_keys:
-        df = probes
-        for step in plan.steps:
-            try:
-                fn = _LOWERERS[step.op]
-            except KeyError:
-                raise ValueError(f"unknown plan op: {step.op!r}") from None
-            df = fn(df, plan, step.params, tables)
-        return df
+    df, rest = probes, plan.steps
+    if hot_keys:
+        fused = _fused_split(plan)
+        if fused is None:
+            _log.warning(
+                "plan %s does not fuse; its %d hot_keys are ignored and it "
+                "lowers plainly (hot entities run as serial window tasks)",
+                [s.op for s in plan.steps], len(hot_keys),
+            )
+        else:
+            from engine.fused import fused_feature_chain
 
-    # Preferred hybrid lowering: when the plan's window steps form the
-    # asof → lag? → sessionize? → rolling? pattern, compile them to the
-    # whole-pipeline fused plan (engine.fused — TWO wide exchanges with the
-    # hot/cold split folded into the bucket id) instead of the two-branch
-    # per-op chain below (~10 wide shuffles on the hot branch, measured
-    # ~0.5 scaling efficiency 4→16 cores vs 0.94 for the fused plan).
-    # Unknown ops inside the prefix surface as unknown-op errors below.
-    fused = _fused_split(plan)
-    if fused is not None:
-        from engine.fused import fused_feature_chain
-
-        n_fused, kw = fused
-        state = tables[kw.pop("state_name")]
-        df = fused_feature_chain(
-            probes, state, on=plan.entity, probe_ts=plan.ts,
-            bucket=bucket, hot_keys=list(hot_keys), **kw,
-        )
-        for step in plan.steps[n_fused:]:
-            if step.op not in _LOWERERS:
-                raise ValueError(f"unknown plan op: {step.op!r}")
-            df = _LOWERERS[step.op](df, plan, step.params, tables)
-        return df
-
-    # Split-lower only the prefix of branch-safe steps; re-merge the
-    # branches before the first step that needs the whole frame (a
-    # non-entity-keyed aggregate), then lower the remainder plainly.
-    barrier = next(
-        (i for i, s in enumerate(plan.steps) if _is_split_barrier(plan, s)), None
-    )
-    if barrier is not None:
-        head = FeaturePlan(plan.entity, plan.ts, plan.steps[:barrier])
-        merged = lower(
-            probes, head, tables, hot_keys=hot_keys, bucket=bucket,
-            persist_hot=persist_hot,
-        )
-        df = merged
-        for step in plan.steps[barrier:]:
-            if step.op not in _LOWERERS:
-                raise ValueError(f"unknown plan op: {step.op!r}")
-            df = _LOWERERS[step.op](df, plan, step.params, tables)
-        return df
-
-    from pyspark.sql import functions as F
-
-    from engine import hotwin
-    from engine.window_ops import parse_duration_seconds
-
-    bucket_us = int(parse_duration_seconds(bucket) * 1_000_000)
-    pred = hotwin.hot_predicate(plan.entity, hot_keys)
-    not_hot = ~F.coalesce(pred, F.lit(False))
-
-    def filt(df, cond):
-        return df.where(cond) if plan.entity in df.columns else df
-
-    cold = lower(
-        filt(probes, not_hot), plan,
-        {k: filt(v, not_hot) for k, v in tables.items()},
-    )
-    hot_tables = {k: filt(v, pred) for k, v in tables.items()}
-    hot = filt(probes, pred)
-    for step in plan.steps:
-        if step.op not in _LOWERERS:
-            raise ValueError(f"unknown plan op: {step.op!r}")
-        hot = _lower_hot_step(hot, plan, step, hot_tables, bucket_us)
-        if persist_hot and step.op in _PER_ENTITY_OPS:
-            # chain barrier, not persist: every bucketed op references its
-            # input several times (carry tables), so chaining multiplies the
-            # LOGICAL plan ~6x per step — localCheckpoint truncates it (see
-            # engine.cache.chain_checkpoint; measured 26M-char plan / ~24 s
-            # of driver time for a 4-step chain without it)
-            from engine.cache import chain_checkpoint
-
-            hot = chain_checkpoint(hot)
-    return cold.unionByName(hot.select(*cold.columns))
+            n_fused, kw = fused
+            state = tables[kw.pop("state_name")]
+            df = fused_feature_chain(
+                probes, state, on=plan.entity, probe_ts=plan.ts,
+                bucket=bucket, hot_keys=list(hot_keys), **kw,
+            )
+            rest = plan.steps[n_fused:]
+    for step in rest:
+        try:
+            fn = _LOWERERS[step.op]
+        except KeyError:
+            raise ValueError(f"unknown plan op: {step.op!r}") from None
+        df = fn(df, plan, step.params, tables)
+    return df
 
 
 class FeatureEngine:
@@ -440,8 +311,7 @@ class FeatureEngine:
         return self._step("cumulative", aggs=aggs)
 
     def agg_features(self, aggs, key=None) -> "FeatureEngine":
-        """Aggregate step; ``key`` defaults to the entity. A non-entity key
-        is a split barrier under hot_keys lowering (see _is_split_barrier)."""
+        """Aggregate step; ``key`` defaults to the entity."""
         return self._step("agg_features", aggs=aggs, **({"key": key} if key else {}))
 
     def row_features(self, specs) -> "FeatureEngine":

@@ -19,12 +19,15 @@ available (resume-stable), else from ``rand(seed)`` — never from
 
 from __future__ import annotations
 
+import logging
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _SALT = "__afg_salt"
+
+_log = logging.getLogger(__name__)
 
 
 def _as_list(x: str | Sequence[str]) -> list[str]:
@@ -55,12 +58,14 @@ def detect_hot_keys(
 ) -> list:
     """Keys with ≥ ``threshold`` rows — ONE partially-aggregated count job
     (the shuffle carries ~one row per key, not per fact row). Returns scalar
-    values for a single key column, Rows for composite keys; capped at
-    ``max_keys`` (by definition at most |df| / threshold keys qualify).
+    values for a single key column, Rows for composite keys, hottest first
+    (ties by key). At most ``max_keys`` are returned (by definition at most
+    |df| / threshold keys qualify): the cap keeps the hottest keys and logs a
+    warning when it drops any.
 
-    Used to route hot entities to the time-bucketed plans (as-of hybrid
-    strategy, engine.hotwin window ops) while the long tail keeps the plain
-    single-window plans.
+    Used to route hot entities to the time-bucketed plans (the fused chain
+    of ``engine.plan.lower(hot_keys=...)``, the engine.hotwin window ops)
+    while the long tail keeps the plain single-window plans.
 
     ``sample_fraction``: detect on a Bernoulli sample (threshold scaled
     accordingly) — hot keys are by definition orders of magnitude above the
@@ -75,10 +80,17 @@ def detect_hot_keys(
         df.groupBy(*keylist)
         .agg(F.count(F.lit(1)).alias("__afg_n"))
         .where(F.col("__afg_n") >= threshold)
+        .orderBy(F.col("__afg_n").desc(), *keylist)
         .select(*keylist)
-        .limit(max_keys)
+        .limit(max_keys + 1)
         .collect()
     )
+    if len(rows) > max_keys:
+        rows = rows[:max_keys]
+        _log.warning(
+            "detect_hot_keys: more than max_keys=%d keys have >= %d rows; "
+            "kept the %d hottest", max_keys, threshold, max_keys,
+        )
     if len(keylist) == 1:
         return [r[keylist[0]] for r in rows]
     return rows
@@ -94,7 +106,7 @@ def straggler_hot_keys(
     sample_fraction: float | None = None,
 ) -> list:
     """Hot keys that would actually STRAGGLE a per-entity window plan — the
-    cost-based routing condition for the hybrid/fused skew split.
+    cost-based routing condition for the fused chain's skew split.
 
     A key only hurts the makespan when its single serial task outlasts the
     balanced remainder of the job, so bucketing it must clear BOTH bars
@@ -102,7 +114,7 @@ def straggler_hot_keys(
     :func:`straggler_threshold`):
 
     * ``cnt > spill_floor`` — the absolute cliff: a single-task sort below
-      ~1M rows stays in the in-memory sorter, and at that size the hybrid
+      ~1M rows stays in the in-memory sorter, and at that size the routed
       plan's fixed stages (role explode, carry scaffolding) dominate
       anything routing could save. Measured: a 250k-row hot key at 500k
       docs / 16 cores made the routed plan 3.0× SLOWER than the plain

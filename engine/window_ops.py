@@ -361,26 +361,8 @@ def cumulative_stats(
     entity: str | Sequence[str],
     ts: str,
     aggs: dict[str, Sequence[str]],
-    hot_keys: list | None = None,
-    bucket: str | int | float = "1 day",
 ) -> DataFrame:
-    """W7: running aggregates per entity since the start of its history.
-
-    ``hot_keys``/``bucket``: skew-proof time-bucketed routing, see lag_features
-    (min/max also stitch across buckets — expanding frames decompose).
-    """
-    if hot_keys:
-        from engine import hotwin
-
-        pred = hotwin.hot_predicate(entity, hot_keys)
-        cold = cumulative_stats(
-            df.where(~F.coalesce(pred, F.lit(False))), entity, ts, aggs
-        )
-        hot = hotwin.bucketed_cumulative_stats(
-            df.where(pred), entity, ts, aggs,
-            bucket_us=int(parse_duration_seconds(bucket) * 1_000_000),
-        )
-        return cold.unionByName(hot.select(*cold.columns))
+    """W7: running aggregates per entity since the start of its history."""
     w = _entity_window(entity, ts).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     fns = {"count": F.count, "sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max}
     exprs = [

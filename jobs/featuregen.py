@@ -39,25 +39,23 @@ from engine.plan import FeatureEngine
 
 
 def build_features(probes, state, entity, probe_ts, values, gap, lags,
-                   asof_strategy="hybrid", hot_keys=None):
+                   hot_keys=None):
     """Build the flagship pipeline through the FeaturePlan IR (§3.1) so the
     serialized plan rides in the checkpoint lineage — a resumed job can
     prove exactly what pipeline produced each committed partition.
 
-    With ``asof_strategy='hybrid'`` the hot/cold split happens at the
-    PIPELINE level (engine.plan.lower hot_keys=...): the plan steps stay
-    'union' and the lowering routes pre-detected hot keys through the
-    time-bucketed variants of every per-entity operator."""
-    step_strategy = "union" if asof_strategy == "hybrid" else asof_strategy
+    The plan is the as-of → lag → sessionize → prefix-rolling pattern that
+    ``engine.plan.lower`` compiles to the fused chain, so pre-detected
+    ``hot_keys`` are time-split inside its two exchanges; with no hot keys
+    it lowers to the plain single-window chain."""
     eng = (
         FeatureEngine(probes, entity=entity, ts=probe_ts)
-        .asof(state, values=values, suffix="_last", strategy=step_strategy)
+        .asof(state, values=values, suffix="_last")
         .lag([values[0] + "_last"], lags=list(lags))
         .sessionize(gap)
         .rolling({values[0] + "_last": ["count", "sum"]}, "1 day", method="prefix")
     )
-    keys = hot_keys if asof_strategy == "hybrid" else None
-    return eng.to_df(hot_keys=keys), eng.plan
+    return eng.to_df(hot_keys=hot_keys), eng.plan
 
 
 ROLE_COL = "__role"
@@ -117,9 +115,6 @@ def main(argv=None):
     ap.add_argument("--gap", default="30 minutes")
     ap.add_argument("--lags", type=int, nargs="+", default=[1])
     ap.add_argument("--parallelism", type=int, default=0, help="spark.sql.shuffle.partitions")
-    ap.add_argument("--asof-strategy", default="hybrid",
-                    choices=["union", "merge", "bucketed", "hybrid"],
-                    help="physical as-of strategy; hybrid = hot/cold skew split")
     ap.add_argument("--output-partition-by", nargs="*", default=[],
                     help="extra hive-partition columns under the pid layout "
                          "(P4 pruning for downstream readers), e.g. source")
@@ -167,23 +162,23 @@ def main(argv=None):
             "user_id", "ts", "value", "event_type"
         )
 
-    hot_keys = None
-    if args.asof_strategy == "hybrid":
-        # per-input metadata, detected once (sampled partial-agg count).
-        # Cost-based (r3): a key is only routed to the time-bucketed plan
-        # when its serial window task would actually straggle the job —
-        # below that bar the fused plan degenerates to the plain chain,
-        # which is faster (the hybrid machinery's fixed costs are real).
-        from engine.skew import straggler_hot_keys, straggler_threshold
+    # per-input metadata, detected once (sampled partial-agg count).
+    # Cost-based (r3): a key is only routed to the time-bucketed plan when
+    # its serial window task would actually straggle the job — below that
+    # bar the fused plan degenerates to the plain chain, which is faster
+    # (the time split's fixed costs are real). Imported here, not at module
+    # level, so a replaced ``engine.skew.straggler_hot_keys`` (perfbench's
+    # tracer wraps it) is the one called.
+    from engine.skew import straggler_hot_keys, straggler_threshold
 
-        n = probes.count() + state.count()
-        cores = spark.sparkContext.defaultParallelism
-        hot_keys = straggler_hot_keys(
-            probes.select(entity).unionByName(state.select(entity)), entity, n,
-            cores=cores, sample_fraction=0.05 if n > 1_000_000 else None,
-        )
-        print(f"hot keys routed (straggler condition): total_rows={n} cores={cores} "
-              f"threshold={straggler_threshold(n, cores)} routed={len(hot_keys)}")
+    n = probes.count() + state.count()
+    cores = spark.sparkContext.defaultParallelism
+    hot_keys = straggler_hot_keys(
+        probes.select(entity).unionByName(state.select(entity)), entity, n,
+        cores=cores, sample_fraction=0.05 if n > 1_000_000 else None,
+    )
+    print(f"hot keys routed (straggler condition): total_rows={n} cores={cores} "
+          f"threshold={straggler_threshold(n, cores)} routed={len(hot_keys)}")
 
     probes_p = with_partition_id(probes, entity, args.partitions)
     state_p = with_partition_id(state, entity, args.partitions)
@@ -201,20 +196,18 @@ def main(argv=None):
         cp = probes_p.where(F.col(PID_COL).isin(chunk))
         cs = state_p.where(F.col(PID_COL).isin(chunk)).drop(PID_COL)
         feat, plan = build_features(cp, cs, entity, probe_ts, values, args.gap,
-                                    args.lags, asof_strategy=args.asof_strategy,
-                                    hot_keys=hot_keys)
+                                    args.lags, hot_keys=hot_keys)
         if lineage is None:
             lineage = {
                 "inputs": {"input": args.input, "synthetic": args.synthetic, "seed": args.seed},
                 "params": {"gap": args.gap, "lags": args.lags, "partitions": args.partitions,
-                           "asof_strategy": args.asof_strategy,
                            "stage_input": args.stage_input,
-                           "n_hot_keys": len(hot_keys or [])},
+                           "n_hot_keys": len(hot_keys)},
                 "plan": plan.to_dict(),
                 "code_version": os.environ.get("AFG_CODE_VERSION", "dev"),
             }
         stats = mgr.run_chunk(chunk, feat, lineage)
-        # drop the hot-branch / as-of intermediates this chunk persisted —
+        # drop the fused-chain / as-of intermediates this chunk persisted —
         # without this the chunked loop pins new cache blocks per chunk for
         # the life of the application
         cache.release_all()

@@ -171,8 +171,8 @@ def main() -> None:
     ))
 
     # Production lowering (r3): the SAME fused shape must come out of the
-    # FeaturePlan IR — jobs/featuregen.py --asof-strategy hybrid lowers
-    # through engine.plan.lower, which pattern-matches the
+    # FeaturePlan IR — jobs/featuregen.py passes its detected hot keys to
+    # engine.plan.lower, which pattern-matches the
     # asof→lag→sessionize→rolling prefix onto fused_feature_chain.
     from engine.plan import FeatureEngine
 
@@ -189,7 +189,7 @@ def main() -> None:
     secs.append(section(
         "FeaturePlan hybrid lowering (production path = fused chain)",
         "The identical pipeline expressed through the FeaturePlan IR "
-        "(what `jobs/featuregen.py --asof-strategy hybrid` runs) lowers to "
+        "(what `jobs/featuregen.py` runs, with its detected hot keys) lowers to "
         "the SAME two-fact-scale-exchange fused plan — hard-asserted at the "
         "same exchange cap as the direct call above.",
         lowered,

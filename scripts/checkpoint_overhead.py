@@ -61,7 +61,7 @@ def main() -> None:
     def build(p, s):
         feat, _plan = build_features(
             p, s, entity, probe_ts, values, "30 minutes", [1],
-            asof_strategy="hybrid", hot_keys=hot_keys,
+            hot_keys=hot_keys,
         )
         return feat
 

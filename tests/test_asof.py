@@ -46,23 +46,32 @@ def test_all_strategies_agree(seq_fixtures):
 @pytest.mark.parametrize("strict", [False, True])
 @pytest.mark.parametrize("hot_threshold", [None, 10])
 def test_hybrid_matches_oracle(seq_fixtures, pdata, strict, hot_threshold):
-    """hot_threshold=10 forces nearly every key down the bucketed path;
-    None auto-detects (fixture's hot doc only)."""
-    got = asof_join(
-        seq_fixtures["probes"],
-        seq_fixtures["seq_events"],
-        on="doc_id",
-        probe_ts="asof_ts",
-        state_ts="ts",
-        values=["fvalue", "fcat"],
-        strict=strict,
-        strategy="hybrid",
-        hot_threshold=hot_threshold,
-    ).toPandas()
-    probes, state = pdata
-    want = oracle_asof(
-        probes, state, "doc_id", "asof_ts", "ts", ["fvalue", "fcat"], strict=strict
+    """The production skew path: an as-of plan lowered with hot_keys runs
+    the fused chain. hot_threshold=10 routes every key with >= 10
+    probe+state rows (the hot doc and part of the long tail) hot, so hot
+    keys are time-split by 6-hour buckets and the rest stay one window
+    group each; None uses the job's own routing rule
+    (``straggler_hot_keys``), which routes nothing at fixture size, so the
+    plan lowers plainly. Every case must match the merge_asof oracle."""
+    from engine.plan import FeatureEngine, _fused_split
+    from engine.skew import detect_hot_keys, straggler_hot_keys
+
+    probes, state = seq_fixtures["probes"], seq_fixtures["seq_events"]
+    ids = probes.select("doc_id").unionByName(state.select("doc_id"))
+    if hot_threshold is None:
+        cores = probes.sparkSession.sparkContext.defaultParallelism
+        hot = straggler_hot_keys(ids, "doc_id", ids.count(), cores=cores)
+        assert hot == []
+    else:
+        hot = detect_hot_keys(ids, "doc_id", hot_threshold)
+        n_docs = state.select("doc_id").distinct().count()
+        assert 0 < len(hot) < n_docs, "want both hot and cold keys"
+    eng = FeatureEngine(probes, entity="doc_id", ts="asof_ts").asof(
+        state, values=["fvalue", "fcat"], strict=strict
     )
+    assert _fused_split(eng.plan) is not None
+    got = eng.to_df(hot_keys=hot, bucket="6 hours").toPandas()
+    want = oracle_asof(*pdata, "doc_id", "asof_ts", "ts", ["fvalue", "fcat"], strict=strict)
     assert_frames_allclose(got, want)
 
 

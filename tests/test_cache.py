@@ -59,8 +59,9 @@ def test_tracked_scope_releases_on_error(spark, sf_dir):
 
 
 def test_hot_split_plan_releases(spark):
-    """The hybrid hot/cold lowering persists per-step hot intermediates;
-    all of them must be tracked (ADVICE round 1: plan.py:265 leak)."""
+    """The fused chain a hot_keys lowering compiles to persists its mid
+    frame and carry table; all of them must be tracked (ADVICE round 1:
+    plan.py:265 leak)."""
     from engine.plan import FeatureEngine
 
     cache.release_all()
@@ -68,8 +69,11 @@ def test_hot_split_plan_releases(spark):
     df = spark.createDataFrame(rows, "user_id long, t long, v double").withColumn(
         "ts", F.timestamp_micros(F.col("t") * 60_000_000)
     )
+    state = df.select("user_id", (F.col("ts") - F.expr("INTERVAL 30 SECONDS")).alias("ts"),
+                      (F.col("v") * 2).alias("s"))
     out = (
         FeatureEngine(df, entity="user_id", ts="ts")
+        .asof(state, values=["s"], suffix="_last")
         .lag(["v"], lags=[1])
         .sessionize("30 minutes")
         .to_df(hot_keys=[0], bucket="1 hour")

@@ -3,7 +3,13 @@ shuffles) with the composition of the public operators it replaces:
 asof_join → lag_features → sessionize → rolling_aggregates(prefix).
 """
 
+import io
+import logging
+import re
+from contextlib import redirect_stdout
+
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -141,6 +147,15 @@ def test_fused_hybrid_all_hot(sides):
     )
 
 
+def n_exchanges(df):
+    """Real exchanges in the formatted physical plan, counted like
+    scripts/audit_plans.py on detail headers (reused subtrees once)."""
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return len(re.findall(r"^\(\d+\) Exchange\b", buf.getvalue(), re.M))
+
+
 def fused_chain_hybrid(probes, ev, bucket, hot_keys, window=WIN, gap=GAP):
     return fused_feature_chain(
         probes, ev, on="doc_id", probe_ts="asof_ts", state_ts="ts",
@@ -173,32 +188,20 @@ def test_plan_lowering_routes_through_fused(sides):
     hybrid = build().to_df(hot_keys=[HOT], bucket="6 hours")
     assert_equal(plain, hybrid)
     # plan shape: the lowering must emit EXACTLY the fused plan (same real
-    # exchange count as calling fused_feature_chain directly — counted like
-    # scripts/audit_plans.py on formatted detail headers, so reused subtrees
-    # aren't double-counted), and strictly fewer than the per-op two-branch
-    # fallback it replaces. Absolute caps live in the plan audit, which runs
-    # on uncached parquet inputs.
-    import io
-    import re
-    from contextlib import redirect_stdout
-
-    def n_ex(df):
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        return len(re.findall(r"^\(\d+\) Exchange\b", buf.getvalue(), re.M))
-
+    # exchange count as calling fused_feature_chain directly). Absolute caps
+    # live in the plan audit, which runs on uncached parquet inputs.
     direct = fused_chain_hybrid(probes, ev, "6 hours", hot_keys=[HOT])
     lowered = build().to_df(hot_keys=[HOT], bucket="6 hours")
     from engine.plan import _fused_split
 
     assert _fused_split(build().plan) is not None
-    assert n_ex(lowered) == n_ex(direct), (n_ex(lowered), n_ex(direct))
+    assert n_exchanges(lowered) == n_exchanges(direct), (
+        n_exchanges(lowered), n_exchanges(direct))
 
 
 def test_plan_lowering_fused_fallback_on_leads(sides):
     """A lag step with leads can't fuse (carries are backward-only): the
-    lowering must fall back to the per-op hot/cold split, still correct."""
+    lowering ignores the hot keys and lowers plainly, still correct."""
     from engine.plan import FeatureEngine
 
     probes, ev = sides
@@ -220,6 +223,46 @@ def test_plan_lowering_fused_fallback_on_leads(sides):
             assert np.allclose(
                 a[c].astype(float), b[c].astype(float), equal_nan=True
             ), c
+
+
+def test_plan_lowering_unfusable_lowers_plainly(sides, caplog):
+    """asof → rolling min/max cannot fuse (min/max need the frame method):
+    under hot_keys it lowers exactly like the plain plan — same rows, same
+    exchanges — and logs that its hot keys were ignored."""
+    from engine.plan import FeatureEngine, _fused_split
+
+    probes, ev = sides
+
+    def build():
+        return (
+            FeatureEngine(probes, entity="doc_id", ts="asof_ts")
+            .asof(ev, values=["fvalue", "fcat"], suffix="_last")
+            .rolling({"fvalue_last": ["min", "max"]}, WIN)
+        )
+
+    assert _fused_split(build().plan) is None
+    plain = build().to_df()
+    with caplog.at_level(logging.WARNING, logger="engine.plan"):
+        hot = build().to_df(hot_keys=[HOT], bucket="6 hours")
+    assert any("hot_keys are ignored" in r.getMessage() for r in caplog.records)
+    assert n_exchanges(hot) == n_exchanges(plain)
+    key = ["doc_id", "asof_ts", "probe_id"]
+    a = plain.toPandas().sort_values(key, kind="mergesort").reset_index(drop=True)
+    b = hot.toPandas().sort_values(key, kind="mergesort").reset_index(drop=True)
+    pd.testing.assert_frame_equal(a, b)
+
+
+def test_featuregen_plan_fuses(sides):
+    """The production job's plan must keep matching the fused pattern, or
+    its detected hot keys would silently stop being time-split."""
+    from engine.plan import _fused_split
+    from jobs.featuregen import build_features
+
+    probes, ev = sides
+    _df, plan = build_features(
+        probes, ev, "doc_id", "asof_ts", ["fvalue", "fcat"], "30 minutes", [1, 2]
+    )
+    assert _fused_split(plan) is not None
 
 
 @pytest.mark.parametrize("bucket,hot", [("6 hours", None), ("47 minutes", [HOT]), ("6 hours", [])])

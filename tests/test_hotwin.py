@@ -89,23 +89,6 @@ def test_ffill_hot_matches_plain(ev, hot_keys):
     )
 
 
-def test_cumulative_hot_matches_plain(ev, hot_keys):
-    from engine.window_ops import cumulative_stats
-
-    aggs = {"fvalue": ["sum", "count", "min", "max", "avg"]}
-    plain = cumulative_stats(ev, "doc_id", "ts", aggs).toPandas()
-    hot = cumulative_stats(
-        ev, "doc_id", "ts", aggs, hot_keys=hot_keys, bucket="12 hours"
-    ).toPandas()
-    key = ["doc_id", "ts", "fvalue"]
-    a, b = _sorted(plain, key), _sorted(hot, key)
-    for n in ["sum", "count", "min", "max", "avg"]:
-        c = f"fvalue_cum{n}"
-        assert np.allclose(
-            a[c].astype(float), b[c].astype(float), equal_nan=True
-        ), c
-
-
 def test_rolling_frame_with_hot_keys_rejected(ev, hot_keys):
     with pytest.raises(ValueError, match="prefix"):
         rolling_aggregates(
@@ -141,25 +124,6 @@ def test_plan_level_hot_lowering_matches_plain(seq_fixtures, hot_keys):
         assert np.allclose(a[c].astype(float), b[c].astype(float), equal_nan=True), c
     assert (a["session_id"].astype("int64").values
             == b["session_id"].astype("int64").values).all()
-
-
-def test_asof_hybrid_precomputed_hot_keys(seq_fixtures, hot_keys):
-    from engine.asof import asof_join
-
-    kw = dict(on="doc_id", probe_ts="asof_ts", state_ts="ts", values=["fvalue", "fcat"])
-    u = asof_join(
-        seq_fixtures["probes"], seq_fixtures["seq_events"], strategy="union", **kw
-    ).toPandas()
-    h = asof_join(
-        seq_fixtures["probes"], seq_fixtures["seq_events"], strategy="hybrid",
-        hot_keys=hot_keys, **kw,
-    ).toPandas()
-    key = ["doc_id", "asof_ts"]
-    a, b = _sorted(u, key), _sorted(h, key)
-    assert np.allclose(
-        a["fvalue"].astype(float), b["fvalue"].astype(float), equal_nan=True
-    )
-    assert (a["fcat"].fillna("∅") == b["fcat"].fillna("∅")).all()
 
 
 def test_hot_predicate_compiles_to_isin_and_handles_nulls(spark):

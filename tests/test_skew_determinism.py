@@ -179,3 +179,25 @@ def test_hot_broadcast_join_equals_plain_join(spark):
     with redirect_stdout(buf):
         hot_broadcast_join(fact, dim, "k", hot_keys=[0]).explain()
     assert "BroadcastHashJoin" in buf.getvalue()
+
+
+def test_detect_hot_keys_cap_keeps_the_hottest(spark, caplog):
+    """When more keys qualify than ``max_keys``, the cap keeps the hottest
+    (ties by key) and says so in a warning — it never drops a hotter key
+    for a colder one."""
+    import logging
+
+    from engine.skew import detect_hot_keys
+
+    # keys 0..49 hold 5 rows each, key 37 holds 40; spread over 8 partitions
+    df = spark.range(50 * 5).select((F.col("id") % 50).alias("k")).unionByName(
+        spark.range(35).select(F.lit(37).cast("long").alias("k"))
+    ).repartition(8)
+    with caplog.at_level(logging.WARNING, logger="engine.skew"):
+        assert detect_hot_keys(df, "k", threshold=2, max_keys=1) == [37]
+    assert any("max_keys=1" in r.getMessage() for r in caplog.records)
+    assert detect_hot_keys(df, "k", threshold=2, max_keys=3) == [37, 0, 1]
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger="engine.skew"):
+        assert len(detect_hot_keys(df, "k", threshold=2)) == 50
+    assert not caplog.records
