@@ -1715,29 +1715,33 @@ def q_grouping_sets(spark, sf_dir):
 
 def q_hotwin_family(spark, sf_dir):
     """W8 oracle coverage: the full per-entity window family (ffill → lag →
-    sessionize → prefix rolling) with a hot-key list routing users 0-4
-    through the time-bucketed skew-proof plans (engine/hotwin.py). Semantics
-    are identical to the plain single-window plans — the oracle is plain
-    window SQL. (This intentionally exercises the public per-op hot_keys=
-    API; production pipelines split once per pipeline via engine.plan.lower.)"""
-    hot = [0, 1, 2, 3, 4]
-    bucket = "6 hours"
+    sessionize → prefix rolling) with users 0-4 routed hot, lowered through
+    ``engine.plan.lower(hot_keys=...)`` — the engine's one skew mechanism.
+    Forward fill is an inclusive as-of join against the non-null rows, so
+    the plan matches the fused as-of → lag → sessionize → rolling pattern
+    and compiles to the fused chain (engine/fused.py), time-splitting the
+    hot users into 6-hour buckets. Semantics are identical to the plain
+    single-window plans — the oracle is plain window SQL."""
+    from engine.plan import FeatureEngine
+
     e = _events_with_nulls(spark, sf_dir)
-    f = forward_fill(e, "user_id", "ts", ["value_n"], out_suffix="_f",
-                     hot_keys=hot, bucket=bucket)
-    f = lag_features(f, "user_id", "ts", ["value_n_f"], lags=[1],
-                     hot_keys=hot, bucket=bucket)
-    f = sessionize(f, "user_id", "ts", gap="30 minutes",
-                   hot_keys=hot, bucket=bucket)
-    f = f.withColumn("vdec", F.col("value_n_f").cast("decimal(18,2)"))
-    r = rolling_aggregates(f, "user_id", "ts", {"vdec": ["count", "sum"]},
-                           window="1 hour", method="prefix",
-                           hot_keys=hot, bucket=bucket)
+    state = e.where(F.col("value_n").isNotNull()).select(
+        "user_id", "ts", "value_n",
+        F.col("value_n").cast("decimal(18,2)").alias("vdec"),
+    )
+    r = (
+        FeatureEngine(e, "user_id", "ts")
+        .asof(state, values=["value_n", "vdec"], suffix="_f")
+        .lag(["value_n_f"], lags=[1])
+        .sessionize("30 minutes")
+        .rolling({"vdec_f": ["count", "sum"]}, "1 hour", method="prefix")
+        .to_df(hot_keys=[0, 1, 2, 3, 4], bucket="6 hours")
+    )
     return r.select(
         "event_id", "user_id", "ts", "value_n", "value_n_f",
         "value_n_f_lag1", "session_id",
-        F.col("vdec_count_1hour").alias("n_1h"),
-        F.col("vdec_sum_1hour").cast("double").alias("sum_1h"),
+        F.col("vdec_f_count_1hour").alias("n_1h"),
+        F.col("vdec_f_sum_1hour").cast("double").alias("sum_1h"),
     )
 
 

@@ -29,10 +29,10 @@ Three physical strategies, identical semantics (tests assert equality):
   buckets| — tiny relative to the fact table WHEN keys are hot. Identical
   semantics (equality asserted in tests), unbounded parallelism in the time
   dimension. Overhead note: when applied to millions of COLD keys the carry
-  table degenerates to fact-table cardinality — so only hot keys take it: the
-  fused chain (``engine.fused``) folds the same time split into its bucket id
-  for the keys ``engine.skew.straggler_hot_keys`` routes, and the hot path of
-  ``rolling_aggregates(method="prefix")`` resolves its cutoffs through it.
+  table degenerates to fact-table cardinality — so pipelines time-split only
+  their hot keys: the fused chain (``engine.fused``, emitted by
+  ``engine.plan.lower(hot_keys=...)``) folds the same time split into its
+  bucket id for the keys ``engine.skew.straggler_hot_keys`` routes.
 
 Last-known-value semantics match ``pd.merge_asof(direction='backward')``: the
 probe receives the values of the most recent state ROW (which may itself hold
@@ -79,7 +79,6 @@ def asof_join(
     include_state_ts: str | None = None,
     num_partitions: int | None = None,
     bucket: str | int | float = "1 day",
-    persist_intermediate: bool = False,
 ) -> DataFrame:
     """Backward as-of join: each probe row gains the latest state values.
 
@@ -99,12 +98,6 @@ def asof_join(
         bucket: time-bucket width for the bucketed strategy (SQL interval
             string, e.g. "1 day", "6 hours") — pick ~(time span / desired
             per-hot-key parallelism).
-        persist_intermediate: (bucketed) cache the tagged union that
-            the bucketed plan's three consumers (in-bucket window, per-bucket
-            last-state aggregate, bucket axis) all read — one evaluation
-            instead of three. MEMORY_AND_DISK; intended when the input is
-            already reduced to hot keys (bounded size), not for a full
-            10^12-row corpus.
     """
     keys = _as_list(on)
     state_ts = state_ts or probe_ts
@@ -126,7 +119,7 @@ def asof_join(
     if strategy == "bucketed":
         return _asof_bucketed(
             probes, state, keys, probe_ts, state_ts, values, out_names,
-            strict, include_state_ts, bucket, persist_intermediate,
+            strict, include_state_ts, bucket,
         )
     raise ValueError(f"unknown asof strategy: {strategy!r}")
 
@@ -239,7 +232,6 @@ def _asof_bucketed(
     strict: bool,
     include_state_ts: str | None,
     bucket: str,
-    persist_intermediate: bool = False,
 ) -> DataFrame:
     """Skew-proof as-of: window over (entity, time-bucket) + cross-bucket carry.
 
@@ -264,12 +256,6 @@ def _asof_bucketed(
     unioned = unioned.withColumn(
         _BUCKET, F.floor(F.col(_TS_KEY) / F.lit(bucket_us))
     )
-    if persist_intermediate:
-        from pyspark import StorageLevel
-
-        from engine.cache import tracked_persist
-
-        unioned = tracked_persist(unioned, StorageLevel.MEMORY_AND_DISK)
 
     tie = F.col(_TAG).asc() if not strict else F.col(_TAG).desc()
     w_in = (

@@ -4,7 +4,7 @@ Several operators persist bounded intermediates because Spark has no
 DataFrame branch reuse (a frame referenced by two consumers re-evaluates
 its whole upstream per consumer): the shared shingle pass in near-dup
 dedup, the exploded LSH band table, the fused chain's mid frame and carry
-table, the prefix-rolling cum frame. Those persists used to leak —
+table. Those persists used to leak —
 nothing ever unpersisted them, so a long-running multi-corpus job (the
 chunked jobs/featuregen.py loop, a bench process running many queries)
 accumulated cache blocks for the life of the application.
@@ -46,16 +46,17 @@ def tracked_persist(df: DataFrame, level=None) -> DataFrame:
 
 
 def chain_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Plan-lineage barrier for ITERATIVELY CHAINED operators (connected-
-    components rounds, the prefix-rolling hot path): ``localCheckpoint``
-    truncates the logical plan to a LogicalRDD.
+    """Plan-lineage barrier for ITERATIVELY CHAINED operators (the
+    connected-components rounds in ``engine.corpus.dedup``):
+    ``localCheckpoint`` truncates the logical plan to a LogicalRDD.
 
     Why persist() is NOT enough here: persist registers the plan in the
     CacheManager but the downstream LOGICAL tree still nests the full
-    upstream plan — and every bucketed operator references its input
-    several times (carry tables), so chaining multiplies the analyzed plan
-    ~6x PER STEP. Measured on a 60-doc fixture a 4-step chain of bucketed
-    operators built a 26-million-character plan and spent ~24 s of DRIVER
+    upstream plan — and an operator that references its input several
+    times (a CC round reads the previous labels twice: for the neighbour
+    minimum and to merge it back) multiplies the analyzed plan per step. Measured on a 60-doc fixture, a
+    4-step chain of such operators (the since-removed per-op time-bucketed
+    windows) built a 26-million-character plan and spent ~24 s of DRIVER
     time (analyzer / optimizer / codegen) executing 200 rows; with
     chain_checkpoint the plan stays ~200k chars and execution is ~1.5 s.
     That driver cost is fixed per-job and does not shrink with cores.

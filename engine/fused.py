@@ -1,16 +1,17 @@
-"""Fused feature chain: as-of + lag/lead + sessionize + prefix rolling in
-TWO wide shuffles — with an optional built-in hot/cold skew split.
+"""Fused feature chain: as-of + ffill + lag + sessionize + prefix rolling in
+TWO wide shuffles, with the engine's one hot/cold skew split built in.
 
-Why this exists: a per-op skew split (since removed) routed hot entities
-through the time-bucketed operators in ``engine.hotwin`` / ``engine.asof``.
-Each of those is correct and individually skew-proof, but each pays its own
-wide exchange, carry aggregation, and carry join — chained, the hot branch
-of the flagship pipeline compiled to ~10 wide shuffles plus 2
-plan-truncation checkpoints, and its wall time was dominated by per-stage
-fixed costs that do not shrink with cores (measured ~0.5 scaling efficiency
-4→16 cores for the hot branch while the cold chain sat near the CPU
-ceiling). ``engine.plan.lower(hot_keys=...)`` now compiles matching plans
-here and lowers every other plan plainly.
+Why this exists: per-op skew splits (since removed) routed hot entities
+through a time-bucketed variant of each window operator. Each variant was
+correct and individually skew-proof, but each paid its own wide exchange,
+carry aggregation, and carry join — chained, the hot branch of the
+flagship pipeline compiled to ~10 wide shuffles plus 2 plan-truncation
+checkpoints, and its wall time was dominated by per-stage fixed costs that
+do not shrink with cores (measured ~0.5 scaling efficiency 4→16 cores for
+the hot branch while the cold chain sat near the CPU ceiling). This module
+is now the engine's only way to time-split hot keys:
+``engine.plan.lower(hot_keys=...)`` compiles matching plans here and
+lowers every other plan plainly.
 
 The fusion observation: every op in the chain wants the SAME physical
 layout — rows hash-clustered by ``(entity, time_bucket)`` and sorted by
@@ -33,7 +34,7 @@ the whole chain collapses to:
   cums; buckets that hold no earlier row fall back to a broadcast
   per-bucket start-offset table.
 
-**Hybrid mode (``hot_keys=``)** — the whole-pipeline skew split collapses
+**Hot/cold split (``hot_keys=``)** — the whole-pipeline skew split collapses
 into the SAME two exchanges: the bucket id becomes
 ``B = hot(entity) ? floor(ts/bucket) : 0``, so hot entities are time-split
 across tasks while every cold entity keeps a single per-entity group
@@ -51,9 +52,10 @@ broadcastable (e.g. 10k hot keys × 120 buckets ≈ 1.2M tiny rows).
 Semantics are IDENTICAL to composing the public operators
 (``asof_join`` → ``lag_features`` → ``sessionize`` →
 ``rolling_aggregates(method="prefix")``); tests/test_fused.py asserts
-row-level equality against that composition, in both modes. Determinism
-requires unique ``(entity, ts)`` probe rows (same as the composed ops —
-window ordering among exact ties is engine-chosen either way).
+row-level equality against that composition for no, some, and all
+entities hot. Determinism requires unique ``(entity, ts)`` probe rows
+(same as the composed ops — window ordering among exact ties is
+engine-chosen either way).
 """
 
 from __future__ import annotations
@@ -63,10 +65,16 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from engine.asof import _PAYLOAD, _TAG, _TS_KEY, _tagged_union
+from engine.asof import _PAYLOAD, _TAG, _TS_KEY, _tagged_union, asof_join
 from engine.cache import tracked_persist
 from engine.hotwin import hot_predicate
-from engine.window_ops import parse_duration_seconds
+from engine.window_ops import (
+    forward_fill,
+    lag_features,
+    parse_duration_seconds,
+    rolling_aggregates,
+    sessionize,
+)
 
 _B = "__fx_b"
 _SK = "__fx_sk"
@@ -97,7 +105,7 @@ def fused_feature_chain(
     rolling: dict[str, Sequence[str]] | None = None,
     rolling_window: str | int | float = "1 day",
     bucket: str | int | float = "6 hours",
-    hot_keys: Sequence | None = None,
+    hot_keys: Sequence = (),
     ffill_cols: Sequence[str] = (),
     ffill_suffix: str = "_ffill",
 ) -> DataFrame:
@@ -123,13 +131,12 @@ def fused_feature_chain(
     use the composed operators) — ffill outputs are assembled after the
     in-bucket lag/cum expressions.
 
-    ``hot_keys=None`` buckets EVERY entity by time (the pure hot-branch
-    plan — feed it pre-filtered hot slices). ``hot_keys=[...]`` is the
-    whole-pipeline hybrid: listed entities are time-bucketed, everything
-    else runs as a plain per-entity group in the same two exchanges, and
-    the carry tables are built from the (tiny, persisted) hot slices only.
-    An empty list means "no skew": the plan degenerates to the plain
-    single-window chain.
+    ``hot_keys`` (e.g. from ``engine.skew.straggler_hot_keys``): listed
+    entities are time-bucketed by ``bucket``, everything else runs as a
+    plain per-entity group in the same two exchanges, and the carry tables
+    are built from the (tiny, persisted) hot slices only. Listing every
+    entity time-splits them all. An empty list means "no skew": the plan
+    degenerates to the plain single-window chain.
     """
     keys = _as_list(on)
     state_ts = state_ts or probe_ts
@@ -166,7 +173,8 @@ def fused_feature_chain(
         else f"{int(rolling_window)}s"
     )
 
-    if hot_keys is not None and not list(hot_keys):
+    hot_keys = list(hot_keys)
+    if not hot_keys:
         # Degenerate case (r3 verdict #3): an empty hot list means no entity
         # needs time-splitting, so the two-exchange scaffolding (carry
         # aggregations, the E2 role explode's second shuffle of 2× rows)
@@ -183,14 +191,6 @@ def fused_feature_chain(
         # docs/16 cores and a consistent 25-35% cost at 500k docs across
         # two sessions, so the plain keys stay. The _SK win lives in the
         # fused two-exchange plan where it was measured.)
-        from engine.asof import asof_join
-        from engine.window_ops import (
-            forward_fill,
-            lag_features,
-            rolling_aggregates,
-            sessionize,
-        )
-
         out = asof_join(
             probes, state, on=keys, probe_ts=probe_ts, state_ts=state_ts,
             values=values, strict=strict, suffix=suffix, strategy="union",
@@ -221,20 +221,12 @@ def fused_feature_chain(
         ]
         return out.select(*keep)
 
-    pred: Column | None = None
-    if hot_keys is not None:
-        hot_keys = list(hot_keys)
-        pred = hot_predicate(on, hot_keys) if hot_keys else F.lit(False)
-
-    def time_b(col: Column) -> Column:
-        return F.floor(col / F.lit(bucket_us))
+    pred = hot_predicate(on, hot_keys)
 
     def bucket_of(col: Column) -> Column:
-        """Hybrid: only hot entities are time-split; a cold entity keeps one
-        group (B=0), making its in-bucket window the complete computation."""
-        if pred is None:
-            return time_b(col)
-        return F.when(pred, time_b(col)).otherwise(F.lit(0))
+        """Only hot entities are time-split; a cold entity keeps one group
+        (B=0), making its in-bucket window the complete computation."""
+        return F.when(pred, F.floor(col / F.lit(bucket_us))).otherwise(F.lit(0))
 
     # rolling partial specs — identical to rolling_aggregates(method="prefix")
     specs: dict[str, Column] = {}
@@ -255,7 +247,7 @@ def fused_feature_chain(
     # state row last(payload) up to itself is its own payload, so the
     # overwrite is the identity on states). The result is persisted and
     # feeds four consumers — the main probe chain, the per-bucket state
-    # carry, the bucket axis, and the hybrid hot branch — so the fact
+    # carry, the bucket axis, and the hot-slice carry-2 source — so the fact
     # tables are scanned exactly once and no carry subtree rescans them
     # (the previous design's hot-slice scans + second mini-pipeline were
     # measured at ~0.5 scaling efficiency 4→16 cores: near-constant cost).
@@ -282,27 +274,24 @@ def fused_feature_chain(
     mid_full = unioned.withColumn(
         _PAYLOAD, F.last(_PAYLOAD, ignorenulls=True).over(w_asof)
     )
-    # Persist ONLY what downstream consumers read: every probe row, plus (in
-    # hybrid mode) the hot rows that seed the carry tables. A COLD state row's
-    # whole job ends inside the window pass above — its payload has already
-    # been folded into the probe rows of its group, and the carries are built
-    # from hot slices only — so caching it is pure waste. At the bench's 5%
+    # Persist ONLY what downstream consumers read: every probe row, plus the
+    # hot rows that seed the carry tables. A COLD state row's whole job ends
+    # inside the window pass above — its payload has already been folded
+    # into the probe rows of its group, and the carries are built from hot
+    # slices only — so caching it is pure waste. At the bench's 5%
     # hot fraction this shrinks the persisted mid-frame ~4x (80M rows -> 20M);
     # the filter runs in the same stage as the window (no extra exchange) and
     # preserves the (entity, B) hash partitioning + sort order for the
-    # downstream window reuse. Plain mode (hot_keys=None) keeps everything:
-    # there the carries are built from every entity's state rows.
-    if pred is not None:
-        mid_full = mid_full.where((F.col(_TAG) == 1) | pred)
-    mid_all = tracked_persist(mid_full)
+    # downstream window reuse.
+    mid_all = tracked_persist(mid_full.where((F.col(_TAG) == 1) | pred))
 
     # ---- as-of cross-bucket carry (tiny, broadcast) ---------------------
     # Per-(entity, bucket) last state payload (max_by — ties resolved as in
     # engine.asof._asof_bucketed), forward-filled over the union of probe
-    # and state bucket axes. Hybrid mode restricts to hot entities: a cold
-    # row misses the carry join and coalesces to the no-earlier-bucket
-    # defaults, which is exactly its single-group semantics.
-    carry_src = mid_all if pred is None else mid_all.where(pred)
+    # and state bucket axes, for hot entities only: a cold row misses the
+    # carry join and coalesces to the no-earlier-bucket defaults, which is
+    # exactly its single-group semantics.
+    carry_src = mid_all.where(pred)
     # _SK leads every carry grouping too: it's a pure function of the keys
     # (groups unchanged) and keeps the carry aggregations satisfiable by the
     # E1 exchange's (_SK, keys, B) clustering — no re-shuffle of the frame.
@@ -378,12 +367,11 @@ def fused_feature_chain(
         return m
 
     mid = probe_chain(mid_all)
-    # carry-2 source: in hybrid mode an explicit cheap re-window over the
-    # cached HOT rows only (the entity-level filter keeps window groups
-    # complete); plain mode re-windows the full cached frame — a second
-    # sorted pass over the cache instead of a checkpoint materialization.
-    # Either way `mid` itself stays a single-consumer linear plan.
-    mid_c = probe_chain(mid_all if pred is None else mid_all.where(pred))
+    # carry-2 source: an explicit cheap re-window over the cached HOT rows
+    # only (the entity-level filter keeps window groups complete) — a second
+    # sorted pass over the cache instead of a checkpoint materialization, so
+    # `mid` itself stays a single-consumer linear plan.
+    mid_c = probe_chain(carry_src)
 
     # ---- carry 2 (tiny, broadcast): per-bucket stats + K-row tails ------
     agg_exprs = [
@@ -478,8 +466,8 @@ def fused_feature_chain(
     out = mid.join(F.broadcast(carry2), on=[_SK, *keys, _B], how="left")
 
     # ffill finals: in-bucket fill, else the cross-bucket carry. Cold rows
-    # in hybrid mode never match carry2: __ffo is null and the in-bucket
-    # fill IS the complete per-entity fill (single group).
+    # never match carry2: __ffo is null and the in-bucket fill IS the
+    # complete per-entity fill (single group).
     ffill_names = []
     for c in ffill_cols:
         name = c + ffill_suffix
@@ -490,8 +478,8 @@ def fused_feature_chain(
 
     # lag finals: in-bucket lag when enough in-bucket history, else the
     # (k − rn + 1)-th element from the end of the cross-bucket tail.
-    # Cold rows in hybrid mode never match carry2: __prevk is null, the
-    # fallback is null — correct, a single-group entity has no earlier bucket.
+    # Cold rows never match carry2: __prevk is null, the fallback is null —
+    # correct, a single-group entity has no earlier bucket.
     lag_names = []
     for c in lag_cols:
         for k in lags:
@@ -599,8 +587,8 @@ def fused_feature_chain(
     # start offsets: for a cutoff landing in a bucket with no earlier
     # feature row, the base is the stitched cum at the end of the last
     # feature bucket strictly BEFORE it — an as-of over the tiny bucket
-    # axis. Hot-only in hybrid mode: a cold cutoff shares its rows' single
-    # bucket, so a missing base correctly falls back to zero.
+    # axis. Hot-only: a cold cutoff shares its rows' single bucket, so a
+    # missing base correctly falls back to zero.
     kh = (win_us + 1) // bucket_us
     ends = c2.select(
         _SK,

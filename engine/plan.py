@@ -263,7 +263,7 @@ def lower(
             state = tables[kw.pop("state_name")]
             df = fused_feature_chain(
                 probes, state, on=plan.entity, probe_ts=plan.ts,
-                bucket=bucket, hot_keys=list(hot_keys), **kw,
+                bucket=bucket, hot_keys=hot_keys, **kw,
             )
             rest = plan.steps[n_fused:]
     for step in rest:

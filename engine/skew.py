@@ -63,9 +63,10 @@ def detect_hot_keys(
     |df| / threshold keys qualify): the cap keeps the hottest keys and logs a
     warning when it drops any.
 
-    Used to route hot entities to the time-bucketed plans (the fused chain
-    of ``engine.plan.lower(hot_keys=...)``, the engine.hotwin window ops)
-    while the long tail keeps the plain single-window plans.
+    Used to route hot entities to the time-bucketed fused chain of
+    ``engine.plan.lower(hot_keys=...)`` while the long tail keeps the plain
+    single-window plan. An empty result routes nothing
+    (``engine.hotwin.hot_predicate`` of ``[]`` is ``lit(False)``).
 
     ``sample_fraction``: detect on a Bernoulli sample (threshold scaled
     accordingly) — hot keys are by definition orders of magnitude above the
@@ -206,12 +207,9 @@ def hot_broadcast_join(
     from engine.hotwin import hot_predicate
 
     keys = _as_list(on)
-    pred_f = hot_predicate(keys if len(keys) > 1 else keys[0], hot_keys)
-    pred_d = hot_predicate(keys if len(keys) > 1 else keys[0], hot_keys)
-    cold = fact.where(~F.coalesce(pred_f, F.lit(False))).join(dim, keys, how)
-    hot = fact.where(pred_f).join(
-        F.broadcast(dim.where(pred_d)), keys, how
-    )
+    pred = hot_predicate(keys, hot_keys)
+    cold = fact.where(~F.coalesce(pred, F.lit(False))).join(dim, keys, how)
+    hot = fact.where(pred).join(F.broadcast(dim.where(pred)), keys, how)
     return cold.unionByName(hot)
 
 

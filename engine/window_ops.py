@@ -54,25 +54,8 @@ def forward_fill(
     ts: str,
     cols: Iterable[str],
     out_suffix: str = "_ffill",
-    hot_keys: list | None = None,
-    bucket: str | int | float = "1 day",
 ) -> DataFrame:
-    """W1: per entity ordered by ts, nulls replaced by the last earlier non-null.
-
-    ``hot_keys``/``bucket``: skew-proof time-bucketed routing, see lag_features.
-    """
-    if hot_keys:
-        from engine import hotwin
-
-        pred = hotwin.hot_predicate(entity, hot_keys)
-        cold = forward_fill(
-            df.where(~F.coalesce(pred, F.lit(False))), entity, ts, cols, out_suffix
-        )
-        hot = hotwin.bucketed_forward_fill(
-            df.where(pred), entity, ts, cols, out_suffix,
-            bucket_us=int(parse_duration_seconds(bucket) * 1_000_000),
-        )
-        return cold.unionByName(hot.select(*cold.columns))
+    """W1: per entity ordered by ts, nulls replaced by the last earlier non-null."""
     w = _entity_window(entity, ts).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     for c in cols:
         df = df.withColumn(c + out_suffix, F.last(c, ignorenulls=True).over(w))
@@ -100,27 +83,8 @@ def lag_features(
     cols: Iterable[str],
     lags: Sequence[int] = (1,),
     leads: Sequence[int] = (),
-    hot_keys: list | None = None,
-    bucket: str | int | float = "1 day",
 ) -> DataFrame:
-    """W3: c_lag{k} / c_lead{k} per entity ordered by ts (leads = labels only).
-
-    ``hot_keys``: keys routed through the time-bucketed skew-proof plan
-    (engine.hotwin) instead of serializing into one window task; ``bucket``
-    is its time-split width. Cold keys keep this plain single-window plan.
-    """
-    if hot_keys:
-        from engine import hotwin
-
-        pred = hotwin.hot_predicate(entity, hot_keys)
-        cold = lag_features(
-            df.where(~F.coalesce(pred, F.lit(False))), entity, ts, cols, lags, leads
-        )
-        hot = hotwin.bucketed_lag_features(
-            df.where(pred), entity, ts, cols, lags, leads,
-            bucket_us=int(parse_duration_seconds(bucket) * 1_000_000),
-        )
-        return cold.unionByName(hot.select(*cold.columns))
+    """W3: c_lag{k} / c_lead{k} per entity ordered by ts (leads = labels only)."""
     w = _entity_window(entity, ts)
     exprs = []
     for c in cols:
@@ -137,29 +101,14 @@ def sessionize(
     ts: str,
     gap: str | int | float = "30 minutes",
     session_col: str = "session_id",
-    hot_keys: list | None = None,
-    bucket: str | int | float = "1 day",
 ) -> DataFrame:
     """W4: new session when the gap since the previous event exceeds ``gap``.
 
     ``session_col`` is a per-entity ordinal starting at 1 (first event of the
     first session = 1). Timestamp math goes through epoch_micros (TIMESTAMP_NTZ
-    rule, SURVEY.md §0.1). ``hot_keys``/``bucket``: see ``lag_features``.
+    rule, SURVEY.md §0.1).
     """
     gap_us = int(parse_duration_seconds(gap) * 1_000_000)
-    if hot_keys:
-        from engine import hotwin
-
-        pred = hotwin.hot_predicate(entity, hot_keys)
-        cold = sessionize(
-            df.where(~F.coalesce(pred, F.lit(False))), entity, ts,
-            gap=gap, session_col=session_col,
-        )
-        hot = hotwin.bucketed_sessionize(
-            df.where(pred), entity, ts, gap_us, session_col=session_col,
-            bucket_us=int(parse_duration_seconds(bucket) * 1_000_000),
-        )
-        return cold.unionByName(hot.select(*cold.columns))
     w = _entity_window(entity, ts)
     wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ts_us = epoch_micros(ts)
@@ -175,9 +124,6 @@ def rolling_aggregates(
     aggs: dict[str, Sequence[str]],
     window: str | int | float = "1 hour",
     method: str = "frame",
-    hot_keys: list | None = None,
-    bucket: str | int | float = "1 day",
-    _bucket_us: int | None = None,
 ) -> DataFrame:
     """W5: trailing time-range aggregates per entity — events in [t-W, t].
 
@@ -195,33 +141,21 @@ def rolling_aggregates(
       wide frames costs n·w in ONE task.
     * ``method="prefix"``: decomposable aggregates (count/sum/avg/stddev)
       as running cumulative sums (incremental expanding frame, O(n)) minus
-      their value at the window cutoff, fetched via the engine's own as-of
-      join (strategy U) at ``t − W − 1µs``. Turns the hot-key cost from
-      O(n·w) serial into O(n) — the scalable path for skewed corpora (used
-      by the flagship job). Float results are allclose-but-not-bitwise vs
-      "frame" (subtraction of prefix sums). min/max do not decompose and
-      are rejected under this method.
+      their value at the window cutoff ``t − W − 1µs``. The cutoff is
+      resolved in a single pass: each row explodes into a state role (its
+      cums at ``t``) and a probe role (keyed at the cutoff), and one window
+      carries the last state cums forward to each probe — no join, the
+      upstream is evaluated once. Turns the hot-key cost from O(n·w) serial
+      into O(n); the fused chain (``engine.fused``) uses the same
+      decomposition. Float results are allclose-but-not-bitwise vs "frame"
+      (subtraction of prefix sums). min/max do not decompose and are
+      rejected under this method.
     """
     win_us = int(parse_duration_seconds(window) * 1_000_000)
     suffix = (
         window.replace(" ", "") if isinstance(window, str) else f"{int(window)}s"
     )
     ents = _as_list(entity)
-    if hot_keys:
-        if method != "prefix":
-            raise ValueError("hot_keys requires method='prefix' (frame is O(n·w) serial per key)")
-        from engine import hotwin
-
-        pred = hotwin.hot_predicate(entity, hot_keys)
-        cold = rolling_aggregates(
-            df.where(~F.coalesce(pred, F.lit(False))), entity, ts, aggs,
-            window=window, method="prefix",
-        )
-        hot = rolling_aggregates(
-            df.where(pred), entity, ts, aggs, window=window, method="prefix",
-            _bucket_us=int(parse_duration_seconds(bucket) * 1_000_000),
-        )
-        return cold.unionByName(hot.select(*cold.columns))
     if method == "frame":
         order = epoch_micros(ts)
         w = (
@@ -247,8 +181,6 @@ def rolling_aggregates(
     if bad:
         raise ValueError(f"method='prefix' cannot compute {bad}; use method='frame'")
 
-    from engine.asof import asof_join  # local import: asof.py imports this module
-
     specs: dict[str, Column] = {}
     for c, names in aggs.items():
         need = set(names)
@@ -260,80 +192,53 @@ def rolling_aggregates(
             specs[f"__cq_{c}"] = F.col(c) * F.col(c)
     partials = list(specs)
 
-    if _bucket_us:
-        # hot-key path: bucket-stitched expanding sums (engine.hotwin) and a
-        # time-bucketed as-of for the cutoff lookup — no serial hot task
-        from engine.hotwin import bucketed_expanding_sums
-
-        d = bucketed_expanding_sums(df, ents, ts, specs, bucket_us=_bucket_us)
-        cut = "__afg_cutoff_ts"
-        state_ts = "__afg_prefix_ts"
-        d = d.withColumn(cut, F.timestamp_micros(epoch_micros(ts) - F.lit(win_us + 1)))
-        # This path runs on hot keys only (bounded input); the cutoff as-of
-        # reads d twice (probe + state side) AND its own bucketed machinery
-        # references d repeatedly — checkpoint to truncate the plan (a
-        # persist would leave the full upstream tree nested in each
-        # reference; see engine.cache.chain_checkpoint)
-        from engine.cache import chain_checkpoint
-
-        d = chain_checkpoint(d)
-        # State rows at tied timestamps carry identical range-frame cums, so
-        # the as-of's arbitrary pick among ties cannot change the result.
-        state = d.select(*ents, F.col(ts).alias(state_ts), *partials)
-        joined = asof_join(
-            d, state, on=ents, probe_ts=cut, state_ts=state_ts,
-            values=partials, suffix="_b", strategy="bucketed",
-            bucket=_bucket_us / 1e6, persist_intermediate=True,
+    # Single-pass cutoff resolution. A plain self-as-of would reference this
+    # DataFrame twice (probe + state side), making Spark compute the
+    # whole upstream chain twice per run. Instead each row explodes into
+    # its two roles — a state row at ts carrying the cums, and a probe
+    # row keyed at ts − W − 1µs — and ONE window resolves the cutoff
+    # cums: upstream is evaluated exactly once, no join.
+    wcum = (
+        Window.partitionBy(*ents)
+        .orderBy(epoch_micros(ts))
+        .rangeBetween(Window.unboundedPreceding, 0)  # peer-inclusive, incremental
+    )
+    d = df
+    for name, expr in specs.items():
+        d = d.withColumn(name, F.sum(expr).over(wcum))
+    ts_us = epoch_micros(ts)
+    pay = F.struct(*[F.col(p) for p in partials])
+    role = F.explode(
+        F.array(
+            F.struct(
+                F.lit(0).alias("__side"), ts_us.alias("__key"), pay.alias("__pay")
+            ),
+            F.struct(
+                F.lit(1).alias("__side"),
+                (ts_us - F.lit(win_us + 1)).alias("__key"),
+                # typed NULL of the same struct type, no string plumbing
+                F.when(F.lit(False), pay).alias("__pay"),
+            ),
         )
-    else:
-        # FUSED single-pass plan. A plain self-as-of would reference this
-        # DataFrame twice (probe + state side), making Spark compute the
-        # whole upstream chain twice per run. Instead each row explodes into
-        # its two roles — a state row at ts carrying the cums, and a probe
-        # row keyed at ts − W − 1µs — and ONE window resolves the cutoff
-        # cums: upstream is evaluated exactly once, no join.
-        wcum = (
-            Window.partitionBy(*ents)
-            .orderBy(epoch_micros(ts))
-            .rangeBetween(Window.unboundedPreceding, 0)  # peer-inclusive, incremental
-        )
-        d = df
-        for name, expr in specs.items():
-            d = d.withColumn(name, F.sum(expr).over(wcum))
-        ts_us = epoch_micros(ts)
-        pay = F.struct(*[F.col(p) for p in partials])
-        role = F.explode(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("__side"), ts_us.alias("__key"), pay.alias("__pay")
-                ),
-                F.struct(
-                    F.lit(1).alias("__side"),
-                    (ts_us - F.lit(win_us + 1)).alias("__key"),
-                    # typed NULL of the same struct type, no string plumbing
-                    F.when(F.lit(False), pay).alias("__pay"),
-                ),
-            )
-        )
-        e = d.withColumn("__role", role)
-        e = e.select("*", "__role.__side", "__role.__key", "__role.__pay").drop("__role")
-        # state (0) sorts before probe (1) at equal keys: a state row at
-        # exactly ts − W − 1µs is ≤ the cutoff, hence inside the base prefix.
-        w_res = (
-            Window.partitionBy(*ents)
-            .orderBy(F.col("__key").asc(), F.col("__side").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        resolved = e.withColumn("__pay", F.last("__pay", ignorenulls=True).over(w_res))
-        joined = resolved.where(F.col("__side") == 1).select(
-            *[c for c in d.columns],
-            *[F.col(f"__pay.{p}").alias(p + "_b") for p in partials],
-        )
+    )
+    e = d.withColumn("__role", role)
+    e = e.select("*", "__role.__side", "__role.__key", "__role.__pay").drop("__role")
+    # state (0) sorts before probe (1) at equal keys: a state row at
+    # exactly ts − W − 1µs is ≤ the cutoff, hence inside the base prefix.
+    w_res = (
+        Window.partitionBy(*ents)
+        .orderBy(F.col("__key").asc(), F.col("__side").asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    resolved = e.withColumn("__pay", F.last("__pay", ignorenulls=True).over(w_res))
+    out = resolved.where(F.col("__side") == 1).select(
+        *[c for c in d.columns],
+        *[F.col(f"__pay.{p}").alias(p + "_b") for p in partials],
+    )
 
     def minus(cur, base):
         return F.col(cur) - F.coalesce(F.col(base), F.lit(0))
 
-    out = joined
     for c, names in aggs.items():
         n_w = minus(f"__cn_{c}", f"__cn_{c}_b")
         s_w = minus(f"__cs_{c}", f"__cs_{c}_b") if f"__cs_{c}" in partials else None
@@ -352,8 +257,7 @@ def rolling_aggregates(
                     o,
                     F.when(n_w > 1, F.sqrt(F.greatest(var, F.lit(0.0)))),
                 )
-    drop = ["__afg_cutoff_ts", *partials, *[p + "_b" for p in partials]]
-    return out.drop(*drop)
+    return out.drop(*partials, *[p + "_b" for p in partials])
 
 
 def cumulative_stats(

@@ -48,14 +48,13 @@ def reference_chain(probes, ev, window=WIN, gap=GAP):
     )
 
 
+def all_ids(probes):
+    return [r[0] for r in probes.select("doc_id").distinct().collect()]
+
+
 def fused_chain(probes, ev, bucket, window=WIN, gap=GAP):
-    return fused_feature_chain(
-        probes, ev, on="doc_id", probe_ts="asof_ts", state_ts="ts",
-        values=["fvalue", "fcat"], suffix="_last",
-        lag_cols=["fvalue_last"], lags=[1, 2],
-        session_gap=gap, rolling={"fvalue_last": ["count", "sum", "avg"]},
-        rolling_window=window, bucket=bucket,
-    )
+    """Every probe entity hot: all of them time-split by ``bucket``."""
+    return fused_chain_hybrid(probes, ev, bucket, all_ids(probes), window, gap)
 
 
 def assert_equal(ref, fus):
@@ -138,12 +137,11 @@ def test_fused_hybrid_empty_hot_list(sides):
 
 
 def test_fused_hybrid_all_hot(sides):
-    """Every entity hot ≡ the always-bucketed legacy mode."""
+    """Every entity hot: the whole frame is time-split."""
     probes, ev = sides
-    all_ids = [r[0] for r in probes.select("doc_id").distinct().collect()]
     assert_equal(
         reference_chain(probes, ev),
-        fused_chain_hybrid(probes, ev, "6 hours", hot_keys=all_ids),
+        fused_chain_hybrid(probes, ev, "6 hours", hot_keys=all_ids(probes)),
     )
 
 
@@ -269,12 +267,14 @@ def test_featuregen_plan_fuses(sides):
 def test_fused_ffill_matches_composition(sides, bucket, hot):
     """ffill_cols= (W1 inside the fused chain): in-bucket last(ignorenulls)
     + cross-bucket last-non-null carry must equal composing forward_fill
-    after the as-of join — plain, hybrid, and degenerate-empty modes.
+    after the as-of join — all ids hot (``None``), one hot, and none hot.
     fvalue_last is null for before-first probes and for null state values,
     so the fill is genuinely exercised across bucket boundaries."""
     from engine.window_ops import forward_fill
 
     probes, ev = sides
+    if hot is None:
+        hot = all_ids(probes)
     ref = forward_fill(
         reference_chain(probes, ev), "doc_id", "asof_ts", ["fvalue_last"]
     )

@@ -1,6 +1,12 @@
-"""Equality of the skew-proof (time-bucketed, engine.hotwin) window plans
-with the plain single-window plans, on the skewed fixture (hot doc holds a
-large share of rows) plus forced-hot long-tail keys."""
+"""The engine's one hot/cold skew mechanism: ``engine.plan.lower(hot_keys=...)``
+compiling to the fused chain. Equality with the plain lowering on the skewed
+fixture (hot doc holds a large share of rows) plus forced-hot long-tail keys,
+the ``hotwin_family`` driver query's route through it, and the
+``engine.hotwin.hot_predicate`` membership predicate it is built on."""
+
+import io
+import logging
+from contextlib import redirect_stdout
 
 import numpy as np
 import pytest
@@ -8,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from engine.skew import detect_hot_keys
-from engine.window_ops import lag_features, rolling_aggregates, sessionize
 
 
 @pytest.fixture(scope="module")
@@ -20,7 +25,7 @@ def ev(seq_fixtures):
 def hot_keys(ev):
     ks = detect_hot_keys(ev, "doc_id", threshold=50)
     assert ks, "fixture should contain at least one hot doc"
-    # add a couple of cold keys to force the bucketed path on sparse series too
+    # add a couple of cold keys to time-split sparse series too
     extra = [
         r["doc_id"]
         for r in ev.select("doc_id").distinct().orderBy("doc_id").limit(3).collect()
@@ -30,71 +35,6 @@ def hot_keys(ev):
 
 def _sorted(pdf, cols):
     return pdf.sort_values(cols, kind="mergesort").reset_index(drop=True)
-
-
-def test_lag_hot_matches_plain(ev, hot_keys):
-    plain = lag_features(ev, "doc_id", "ts", ["fvalue"], lags=[1, 2], leads=[1]).toPandas()
-    hot = lag_features(
-        ev, "doc_id", "ts", ["fvalue"], lags=[1, 2], leads=[1],
-        hot_keys=hot_keys, bucket="2 days",
-    ).toPandas()
-    key = ["doc_id", "ts", "fvalue"]
-    a, b = _sorted(plain, key), _sorted(hot, key)
-    for c in ["fvalue_lag1", "fvalue_lag2", "fvalue_lead1"]:
-        assert np.allclose(
-            a[c].astype(float), b[c].astype(float), equal_nan=True
-        ), c
-
-
-def test_sessionize_hot_matches_plain(ev, hot_keys):
-    plain = sessionize(ev, "doc_id", "ts", gap="6 hours").toPandas()
-    hot = sessionize(
-        ev, "doc_id", "ts", gap="6 hours", hot_keys=hot_keys, bucket="2 days"
-    ).toPandas()
-    key = ["doc_id", "ts", "fvalue"]
-    a, b = _sorted(plain, key), _sorted(hot, key)
-    assert (a["session_id"].astype("int64").values
-            == b["session_id"].astype("int64").values).all()
-
-
-def test_rolling_hot_matches_plain(ev, hot_keys):
-    aggs = {"fvalue": ["count", "sum", "avg"]}
-    plain = rolling_aggregates(
-        ev, "doc_id", "ts", aggs, window="2 days", method="prefix"
-    ).toPandas()
-    hot = rolling_aggregates(
-        ev, "doc_id", "ts", aggs, window="2 days", method="prefix",
-        hot_keys=hot_keys, bucket="12 hours",
-    ).toPandas()
-    key = ["doc_id", "ts", "fvalue"]
-    a, b = _sorted(plain, key), _sorted(hot, key)
-    for c in ["fvalue_count_2days", "fvalue_sum_2days", "fvalue_avg_2days"]:
-        assert np.allclose(
-            a[c].astype(float), b[c].astype(float), equal_nan=True
-        ), c
-
-
-def test_ffill_hot_matches_plain(ev, hot_keys):
-    from engine.window_ops import forward_fill
-
-    plain = forward_fill(ev, "doc_id", "ts", ["fvalue"]).toPandas()
-    hot = forward_fill(
-        ev, "doc_id", "ts", ["fvalue"], hot_keys=hot_keys, bucket="2 days"
-    ).toPandas()
-    key = ["doc_id", "ts", "fvalue"]
-    a, b = _sorted(plain, key), _sorted(hot, key)
-    assert np.allclose(
-        a["fvalue_ffill"].astype(float), b["fvalue_ffill"].astype(float),
-        equal_nan=True,
-    )
-
-
-def test_rolling_frame_with_hot_keys_rejected(ev, hot_keys):
-    with pytest.raises(ValueError, match="prefix"):
-        rolling_aggregates(
-            ev, "doc_id", "ts", {"fvalue": ["sum"]}, window="1 day",
-            method="frame", hot_keys=hot_keys,
-        )
 
 
 def test_plan_level_hot_lowering_matches_plain(seq_fixtures, hot_keys):
@@ -149,3 +89,39 @@ def test_hot_predicate_compiles_to_isin_and_handles_nulls(spark):
     # composite keys keep the conjunction path
     comp = hot_predicate(["k", "v"], [(1, "a"), (3, "d")])
     assert df.where(comp).count() == 2
+
+    # an empty hot list (detect_hot_keys routed nothing) is lit(False) for
+    # single and composite keys alike, so every row stays on the cold path
+    for ent in ("k", ["k", "v"]):
+        assert df.where(hot_predicate(ent, [])).count() == 0
+    from engine.skew import hot_broadcast_join
+
+    dim = spark.createDataFrame([(1, "a", "x"), (3, "d", "y")], "k long, v string, attr string")
+    routed = hot_broadcast_join(df, dim, ["k", "v"], hot_keys=[], how="left")
+    assert sorted(r["attr"] or "" for r in routed.collect()) == ["", "", "x", "y"]
+
+
+def test_hotwin_family_lowers_through_fused_chain(spark, sf_dir, caplog):
+    """The ``hotwin_family`` driver query is the oracle-checked coverage of
+    hot-key time splitting: its plan must keep compiling to the fused chain
+    (the ``__fx_b`` bucket column in the executed plan, no "hot_keys are
+    ignored" fallback warning) and keep matching its DuckDB oracle."""
+    import duckdb
+
+    import __spark_entry__ as E
+    from scripts.check_oracle import compare
+
+    with caplog.at_level(logging.WARNING, logger="engine.plan"):
+        df = E.queries()["hotwin_family"](spark, sf_dir)
+    assert not any("hot_keys are ignored" in r.getMessage() for r in caplog.records)
+    got = df.toPandas()
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    assert "__fx_b" in buf.getvalue()
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_dir}/events.parquet')")
+    want = con.sql(E.oracle_sql()["hotwin_family"]).df()
+    con.close()
+    assert not compare("hotwin_family", got, want)
