@@ -24,7 +24,6 @@ import json
 import os
 import time
 import uuid
-from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,23 +38,14 @@ def with_partition_id(df: DataFrame, entity: str, num_partitions: int) -> DataFr
     )
 
 
-def repartition_by_pid(df: DataFrame, extra_partition_cols: Sequence[str] = ()) -> DataFrame:
-    """Repartition ``df`` for a partitioned write that lands exactly ONE
-    file per partition directory (``__pid=X[/extra=Y…]``).
-
-    Rows are hash-repartitioned on ``__pid`` plus ``extra_partition_cols``,
-    so every directory is written by a single task. AQE may coalesce these
-    shuffle partitions, which puts several directories in one task, but it
-    never splits one, so the count stays at one. Placement only: the rows
-    are unchanged.
-
-    A write that covers fewer pids than cores runs on fewer tasks than
-    cores. Splitting each pid into hash sub-buckets bought nothing when
-    measured on 2026-10-17 (``jobs/featuregen.py --synthetic 200000
-    --chunk-size 2``, local[4]: 23.40/23.38 s without, 22.73/24.17 s
-    with), because AQE coalescing merged the sub-buckets again.
-    """
-    return df.repartition(PID_COL, *extra_partition_cols)
+def write_json_atomic(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` atomically: a tmp file in the same
+    directory, then a rename (POSIX rename is atomic), so a reader sees the
+    old file, the new one, or none, never a partial one."""
+    tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh, indent=1, sort_keys=True)
+    os.rename(tmp, path)
 
 
 class ParquetJournalTableIO:
@@ -94,23 +84,26 @@ class ParquetJournalTableIO:
         return recs
 
     def commit_partition(self, pid: int, lineage: dict, metrics: dict) -> None:
-        """Atomic: write tmp file then rename (POSIX rename is atomic)."""
-        rec = {"partition_id": pid, "lineage": lineage, "metrics": metrics}
-        tmp = os.path.join(self.journal_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(rec, fh, indent=1, sort_keys=True)
-        os.rename(tmp, self._journal_path(pid))
+        """Atomic (:func:`write_json_atomic`)."""
+        write_json_atomic(
+            self._journal_path(pid),
+            {"partition_id": pid, "lineage": lineage, "metrics": metrics},
+        )
 
     # -- data -------------------------------------------------------------
     def write_partitions(self, df: DataFrame, pids=None, lineage=None) -> None:
         """Write output for a batch of pids, directory-per-pid layout.
 
-        One file per partition directory (:func:`repartition_by_pid`).
-        Without the repartition every task of the chunk's last exchange
-        wrote a file into each pid it held. Measured 2026-10-17 on the
-        perfbench featuregen workload (12k output rows, 32 pids in 2
-        chunks of 16, 8-wide shuffles, local[4]): 256 → 32 committed files,
-        traced checkpoint time 1.87 s → 0.59 s.
+        The rows are rebalanced on the partition columns (``__pid`` plus
+        ``extra_partition_cols``), the layout rule every partitioned write
+        here follows (:func:`engine.io.write_partitioned`): one file per
+        directory unless it exceeds
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, where AQE
+        splits it into several files written in parallel. Without it every
+        task of the chunk's last exchange wrote a file into each pid it
+        held. Measured 2026-10-17 on the perfbench featuregen workload (12k
+        output rows, 32 pids in 2 chunks of 16, 8-wide shuffles, local[4]):
+        256 → 32 committed files, traced checkpoint time 1.87 s → 0.59 s.
 
         DYNAMIC partition overwrite, not append: if a previous attempt died
         after some parquet files landed but before the journal rename, the
@@ -138,7 +131,7 @@ class ParquetJournalTableIO:
                 if pid not in committed and os.path.isdir(pdir):
                     shutil.rmtree(pdir)
         (
-            repartition_by_pid(df, self.extra_partition_cols)
+            df.hint("rebalance", PID_COL, *self.extra_partition_cols)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(PID_COL, *self.extra_partition_cols)

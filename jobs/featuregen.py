@@ -32,7 +32,7 @@ from pyspark.sql import SparkSession, functions as F
 
 from engine import cache
 from engine.checkpoint import (
-    PID_COL, CheckpointManager, ParquetJournalTableIO, repartition_by_pid, with_partition_id,
+    PID_COL, CheckpointManager, ParquetJournalTableIO, with_partition_id, write_json_atomic,
 )
 from engine.io import read_table
 from engine.plan import FeatureEngine
@@ -59,49 +59,93 @@ def build_features(probes, state, entity, probe_ts, values, gap, lags,
 
 
 ROLE_COL = "__role"
+CHUNK_COL = "__chunk"
+LAYOUT_FILE = "_LAYOUT.json"
 
 
-def stage_inputs(spark, probes_p, state_p, stage_dir):
-    """Write the pid-partitioned inputs ONCE so each chunk's scan
-    partition-prunes (PartitionFilters on __pid) to its own pids instead of
-    re-decoding the full input. Without staging, the chunk filter is a
-    predicate on a COMPUTED hash column — nothing for the reader to prune —
-    so a P/chunk_size-chunk run pays P/chunk_size full input scans
-    (measured: 63% overhead at 8M docs / 4 chunks; staged overhead in the
-    same record, BENCH/BASELINE.md).
+def stage_inputs(spark, probes_p, state_p, stage_dir, chunk_size, partitions):
+    """Write the pid-tagged inputs ONCE, partitioned by chunk, so each
+    chunk's scan partition-prunes to its own rows instead of re-decoding
+    the full input. Without staging, the chunk filter is a predicate on a
+    COMPUTED hash column — nothing for the reader to prune — so a
+    P/chunk_size-chunk run pays P/chunk_size full input scans (measured:
+    63% overhead at 8M docs / 4 chunks; staged overhead in the same
+    record, BENCH/BASELINE.md).
 
     Probes and state are staged as ONE table, so staging is one exchange +
-    write job. Its layout follows the chunk scans that read it: it is
-    partitioned by ``__pid`` and a ``__role`` column, so a chunk's scan of
-    either side prunes to its own pids AND role, and each
-    ``__pid=X/__role=Y`` directory holds exactly one file
-    (:func:`engine.checkpoint.repartition_by_pid`). Measured 2026-10-17 on
-    the perfbench featuregen workload (60k events, 32 pids, chunks of 16,
-    local[4]): two tables hash-split 8 ways per pid wrote 328 files, this
-    writes 64, and traced featuregen time (mostly staging) fell
-    2.63 s → 1.09 s.
+    write job. Its layout is the unit that reads it, the chunk: a
+    ``__chunk = __pid div chunk_size`` column and a ``__role`` column are
+    its partition columns, so a chunk's scan of either side prunes to its
+    own chunk AND role (:func:`chunk_scan`). The rows are rebalanced on
+    both, so each ``__chunk=X/__role=Y`` directory holds one file unless
+    it exceeds the AQE advisory size. Measured 2026-10-17 on the perfbench
+    featuregen workload (60k events, 32 pids, chunks of 16, local[4]):
+    staged by ``__pid``/``__role`` it wrote 64 files, staged by chunk it
+    writes 4, and traced featuregen time (mostly staging) fell
+    1.02 s → 0.65 s.
 
     Resume-safe/idempotent: the table is reused only when its write
-    completed (_SUCCESS); pid assignment is data-determined, so a restaged
-    table holds identical rows.
+    completed (``_SUCCESS``) AND its ``_LAYOUT.json`` marker records the
+    same ``partitions`` and ``chunk_size``; otherwise it is restaged. A
+    resume with another ``--chunk-size`` would otherwise prune on chunk
+    ids the table was not written with and silently drop rows. Pid
+    assignment is data-determined, so a restaged table holds identical
+    rows.
     """
-    staged = probes_p.withColumn(ROLE_COL, F.lit("probes")).unionByName(
-        state_p.withColumn(ROLE_COL, F.lit("state")), allowMissingColumns=True
+    staged = (
+        probes_p.withColumn(ROLE_COL, F.lit("probes"))
+        .unionByName(state_p.withColumn(ROLE_COL, F.lit("state")), allowMissingColumns=True)
+        .withColumn(CHUNK_COL, F.expr(f"{PID_COL} div {int(chunk_size)}"))
     )
     d = os.path.join(stage_dir, "inputs")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
+    marker = os.path.join(d, LAYOUT_FILE)
+    layout = {"partitions": partitions, "chunk_size": chunk_size}
+    if not (os.path.exists(os.path.join(d, "_SUCCESS")) and _read_json(marker) == layout):
+        # a restage that dies before its own marker lands must leave none
+        if os.path.exists(marker):
+            os.remove(marker)
         (
-            repartition_by_pid(staged, (ROLE_COL,))
+            staged.hint("rebalance", CHUNK_COL, ROLE_COL)
             .write.mode("overwrite")
-            .partitionBy(PID_COL, ROLE_COL)
+            .partitionBy(CHUNK_COL, ROLE_COL)
             .parquet(d)
         )
+        write_json_atomic(marker, layout)
     table = spark.read.schema(staged.schema).parquet(d)
 
     def role(name, df):
-        return table.where(F.col(ROLE_COL) == name).select(*df.columns)
+        return table.where(F.col(ROLE_COL) == name).select(*df.columns, CHUNK_COL)
 
     return role("probes", probes_p), role("state", state_p)
+
+
+def _read_json(path):
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
+
+
+def group_by_chunk(pids, chunk_size):
+    """{chunk id: its pids}; chunk c is pids [c * chunk_size, (c + 1) *
+    chunk_size), so a fresh run's groups are consecutive slices of the
+    pending pids."""
+    chunks = {}
+    for pid in pids:
+        chunks.setdefault(pid // chunk_size, []).append(pid)
+    return chunks
+
+
+def chunk_scan(df, chunk_id, pids):
+    """The rows of one chunk's pending ``pids``. On a staged frame,
+    ``__chunk == chunk_id`` is a PartitionFilter that prunes the scan to
+    the chunk's directories, and ``__pid IN pids`` drops the pids of a
+    partly committed chunk; ``__chunk`` is dropped from the result."""
+    cond = F.col(PID_COL).isin(pids)
+    if CHUNK_COL in df.columns:
+        cond = (F.col(CHUNK_COL) == chunk_id) & cond
+    return df.where(cond).drop(CHUNK_COL)
 
 
 def main(argv=None):
@@ -120,7 +164,7 @@ def main(argv=None):
                          "(P4 pruning for downstream readers), e.g. source")
     ap.add_argument("--stage-input", action=argparse.BooleanOptionalAction,
                     default=True,
-                    help="write pid-partitioned input copies once under "
+                    help="write chunk-partitioned input copies once under "
                          "<output>/_staged so chunk scans partition-prune "
                          "instead of re-decoding the full input per chunk. "
                          "DEFAULT since r5: measured strictly better (30.6%% "
@@ -171,11 +215,11 @@ def main(argv=None):
     # tracer wraps it) is the one called.
     from engine.skew import straggler_hot_keys, straggler_threshold
 
-    n = probes.count() + state.count()
+    keys = probes.select(entity).unionByName(state.select(entity))
+    n = keys.count()
     cores = spark.sparkContext.defaultParallelism
     hot_keys = straggler_hot_keys(
-        probes.select(entity).unionByName(state.select(entity)), entity, n,
-        cores=cores, sample_fraction=0.05 if n > 1_000_000 else None,
+        keys, entity, n, cores=cores, sample_fraction=0.05 if n > 1_000_000 else None,
     )
     print(f"hot keys routed (straggler condition): total_rows={n} cores={cores} "
           f"threshold={straggler_threshold(n, cores)} routed={len(hot_keys)}")
@@ -184,17 +228,17 @@ def main(argv=None):
     state_p = with_partition_id(state, entity, args.partitions)
     if args.stage_input:
         probes_p, state_p = stage_inputs(
-            spark, probes_p, state_p, os.path.join(args.output, "_staged")
+            spark, probes_p, state_p, os.path.join(args.output, "_staged"),
+            args.chunk_size, args.partitions,
         )
 
     t_start = time.time()
     total_rows = 0
     chunks_done = 0
     lineage = None
-    for i in range(0, len(pending), args.chunk_size):
-        chunk = pending[i : i + args.chunk_size]
-        cp = probes_p.where(F.col(PID_COL).isin(chunk))
-        cs = state_p.where(F.col(PID_COL).isin(chunk)).drop(PID_COL)
+    for c, chunk in group_by_chunk(pending, args.chunk_size).items():
+        cp = chunk_scan(probes_p, c, chunk)
+        cs = chunk_scan(state_p, c, chunk).drop(PID_COL)
         feat, plan = build_features(cp, cs, entity, probe_ts, values, args.gap,
                                     args.lags, hot_keys=hot_keys)
         if lineage is None:

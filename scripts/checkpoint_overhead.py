@@ -33,7 +33,7 @@ import bench
 from engine import cache
 from engine.checkpoint import PID_COL, CheckpointManager, ParquetJournalTableIO, with_partition_id
 from engine.io import write_partitioned
-from jobs.featuregen import build_features
+from jobs.featuregen import build_features, chunk_scan, group_by_chunk, stage_inputs
 
 
 def main() -> None:
@@ -52,11 +52,9 @@ def main() -> None:
 
     from engine.skew import straggler_hot_keys
 
-    n = probes.count() + state.count()
-    hot_keys = straggler_hot_keys(
-        probes.select(entity).unionByName(state.select(entity)), entity, n,
-        cores=cores, sample_fraction=0.05,
-    )
+    keys = probes.select(entity).unionByName(state.select(entity))
+    hot_keys = straggler_hot_keys(keys, entity, keys.count(), cores=cores,
+                                  sample_fraction=0.05)
 
     def build(p, s):
         feat, _plan = build_features(
@@ -83,8 +81,8 @@ def main() -> None:
     spark.catalog.clearCache()
 
     # chunked: the featuregen loop (per-chunk plan build + atomic commit).
-    # The chunk filter is a predicate on a COMPUTED hash pid — the reader
-    # cannot prune, so every chunk re-scans the full input.
+    # Unstaged, the chunk filter is a predicate on a COMPUTED hash pid — the
+    # reader cannot prune, so every chunk re-scans the full input.
     probes_p = with_partition_id(probes, entity, partitions)
     state_p = with_partition_id(state, entity, partitions)
     lineage = {"inputs": {"corpus": root}, "params": {"partitions": partitions}}
@@ -92,11 +90,9 @@ def main() -> None:
     def chunked_loop(out_name, pp, ss):
         io = ParquetJournalTableIO(os.path.join(out_root, out_name))
         mgr = CheckpointManager(io, partitions)
-        pending = mgr.pending()
-        for i in range(0, len(pending), chunk_size):
-            chunk = pending[i : i + chunk_size]
-            cp = pp.where(F_isin(chunk))
-            cs = ss.where(F_isin(chunk)).drop(PID_COL)
+        for c, chunk in group_by_chunk(mgr.pending(), chunk_size).items():
+            cp = chunk_scan(pp, c, chunk)
+            cs = chunk_scan(ss, c, chunk).drop(PID_COL)
             mgr.run_chunk(chunk, build(cp, cs), lineage)
             cache.release_all()
 
@@ -105,14 +101,13 @@ def main() -> None:
     chunked_s = round(time.time() - t0, 2)
     spark.catalog.clearCache()
 
-    # chunked_staged: jobs/featuregen.py --stage-input — pid-partitioned
+    # chunked_staged: jobs/featuregen.py --stage-input — chunk-partitioned
     # input copies written once (timed as part of this leg), chunk scans
-    # partition-prune to their pids.
-    from jobs.featuregen import stage_inputs
-
+    # partition-prune to their chunk.
     t0 = time.time()
     sp_p, ss_p = stage_inputs(
-        spark, probes_p, state_p, os.path.join(out_root, "staged_in")
+        spark, probes_p, state_p, os.path.join(out_root, "staged_in"),
+        chunk_size, partitions,
     )
     chunked_loop("chunked_staged", sp_p, ss_p)
     staged_s = round(time.time() - t0, 2)
@@ -129,12 +124,6 @@ def main() -> None:
         "staged_overhead_pct": round((staged_s / straight_s - 1) * 100, 1),
     }))
     spark.stop()
-
-
-def F_isin(chunk):
-    from pyspark.sql import functions as F
-
-    return F.col(PID_COL).isin(chunk)
 
 
 if __name__ == "__main__":
