@@ -429,10 +429,9 @@ def run_bench(cores: int) -> dict:
 
     _p = spark.read.parquet(os.path.join(root, "probes"))
     _e = spark.read.parquet(os.path.join(root, "seq_events"))
-    _n = _p.count() + _e.count()
+    _keys = _p.select("doc_id").unionByName(_e.select("doc_id"))
     hot_keys = _shk(
-        _p.select("doc_id").unionByName(_e.select("doc_id")), "doc_id", _n,
-        cores=cores, sample_fraction=0.05,
+        _keys, "doc_id", _keys.count(), cores=cores, sample_fraction=0.05,
     )
     # the hot doc_ids' dim rows (≤ |hot_keys|), collected once for every rep
     _seqs = read_sequences(spark, root, BENCH_DOCS)

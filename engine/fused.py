@@ -1,5 +1,19 @@
-"""Fused feature chain: as-of + ffill + lag + sessionize + prefix rolling in
-TWO wide shuffles, with the engine's one hot/cold skew split built in.
+"""Fused feature chain: as-of + ffill + lag + sessionize + prefix rolling,
+compiled as ONE plan. With no hot keys it is one exchange and one sort;
+with hot keys it is TWO wide shuffles with the engine's one hot/cold skew
+split built in. ``engine.plan.lower`` compiles every plan that matches the
+chain here, with or without hot keys.
+
+**No hot keys (``hot_keys=()``)** — the as-of's own sort serves the whole
+chain. The tagged probe∪state union is hash-partitioned by entity and
+sorted by ``(entity, ts, tag)`` once; the as-of resolves with
+``last(payload)`` over that order, and every later window (ffill, lags,
+the session flag and its running sum, the rolling partials) orders by
+``(entity, ts)`` — a prefix of the child's ordering, so Catalyst adds no
+Sort. The rolling cutoff is the difference of two growing RANGE frames
+(``UNBOUNDED PRECEDING .. CURRENT ROW`` minus ``UNBOUNDED PRECEDING ..
+W+1µs PRECEDING``), each evaluated incrementally in O(n): no explode, no
+second sort.
 
 Why this exists: per-op skew splits (since removed) routed hot entities
 through a time-bucketed variant of each window operator. Each variant was
@@ -9,9 +23,9 @@ flagship pipeline compiled to ~10 wide shuffles plus 2 plan-truncation
 checkpoints, and its wall time was dominated by per-stage fixed costs that
 do not shrink with cores (measured ~0.5 scaling efficiency 4→16 cores for
 the hot branch while the cold chain sat near the CPU ceiling). This module
-is now the engine's only way to time-split hot keys:
-``engine.plan.lower(hot_keys=...)`` compiles matching plans here and
-lowers every other plan plainly.
+is now the engine's only way to time-split hot keys, and the no-hot-key
+chain shares its entry point: ``engine.plan.lower`` compiles matching
+plans here and lowers every other plan plainly.
 
 The fusion observation: every op in the chain wants the SAME physical
 layout — rows hash-clustered by ``(entity, time_bucket)`` and sorted by
@@ -65,15 +79,15 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from engine.asof import _PAYLOAD, _TAG, _TS_KEY, _tagged_union, asof_join
+from engine.asof import _PAYLOAD, _TAG, _TS_KEY, _tagged_union
 from engine.cache import tracked_persist
 from engine.hotwin import hot_predicate
 from engine.window_ops import (
-    forward_fill,
-    lag_features,
+    PREFIX_AGGS,
     parse_duration_seconds,
-    rolling_aggregates,
-    sessionize,
+    prefix_finals,
+    prefix_partials,
+    windowed_partials,
 )
 
 _B = "__fx_b"
@@ -121,7 +135,8 @@ def fused_feature_chain(
         f = rolling_aggregates(f, on, probe_ts, rolling,
                                window=rolling_window, method="prefix")
 
-    but compiled to two wide shuffles total. ``lag_cols`` name columns AFTER
+    but compiled to one exchange and one sort (no hot keys) or two wide
+    shuffles (hot keys). ``lag_cols`` name columns AFTER
     the as-of suffix is applied (e.g. ``fvalue_last``); ``rolling`` maps
     those names to agg lists among {count, sum, avg, mean, stddev}.
     ``ffill_cols`` forward-fill existing probe/as-of columns in the same
@@ -136,7 +151,7 @@ def fused_feature_chain(
     plain per-entity group in the same two exchanges, and the carry tables
     are built from the (tiny, persisted) hot slices only. Listing every
     entity time-splits them all. An empty list means "no skew": the plan
-    degenerates to the plain single-window chain.
+    is the one-exchange, one-sort chain.
     """
     keys = _as_list(on)
     state_ts = state_ts or probe_ts
@@ -163,8 +178,7 @@ def fused_feature_chain(
     )
     win_us = int(parse_duration_seconds(rolling_window) * 1_000_000)
     rolling = rolling or {}
-    decomposable = {"count", "sum", "avg", "mean", "stddev"}
-    bad = [n for ns in rolling.values() for n in ns if n not in decomposable]
+    bad = [n for ns in rolling.values() for n in ns if n not in PREFIX_AGGS]
     if bad:
         raise ValueError(f"fused chain cannot compute rolling {bad} (prefix method)")
     rsuffix = (
@@ -172,74 +186,75 @@ def fused_feature_chain(
         if isinstance(rolling_window, str)
         else f"{int(rolling_window)}s"
     )
+    unioned, probe_cols = _tagged_union(
+        probes, state, keys, probe_ts, state_ts, values, out_names,
+        with_state_ts=False,
+    )
+    tie = F.col(_TAG).asc() if not strict else F.col(_TAG).desc()
 
     hot_keys = list(hot_keys)
     if not hot_keys:
-        # Degenerate case (r3 verdict #3): an empty hot list means no entity
-        # needs time-splitting, so the two-exchange scaffolding (carry
-        # aggregations, the E2 role explode's second shuffle of 2× rows)
-        # protects nothing — at 500k docs it measured 1.6× the plain chain.
-        # Emit the plain ONE-exchange composition instead: every window op
-        # below shares partitionBy(entity), so Catalyst plans a single
-        # Exchange + sorts (the rolling prefix resolve re-sorts, no
-        # re-shuffle). The composed ops are the semantic definition the
-        # fused plan is equality-tested against, so this is by construction
-        # identical. (Since the 2026-08-19 threshold recalibration this
-        # path also runs at fact scale; a compound xxhash64 sort-prefix key
-        # like the fused plan's _SK was tried here and MEASURED OUT — an
-        # interleaved same-session A/B showed parity-within-noise at 8M
-        # docs/16 cores and a consistent 25-35% cost at 500k docs across
-        # two sessions, so the plain keys stay. The _SK win lives in the
-        # fused two-exchange plan where it was measured.)
-        out = asof_join(
-            probes, state, on=keys, probe_ts=probe_ts, state_ts=state_ts,
-            values=values, strict=strict, suffix=suffix, strategy="union",
+        # No entity needs time-splitting, so the carries and the cutoff
+        # exchange protect nothing: ONE exchange and ONE sort. The as-of
+        # window sorts the union by (keys, _TS_KEY, tag); every later
+        # window orders by (keys, _TS_KEY), a prefix of that ordering, so
+        # Catalyst adds no Sort. The rolling cutoff is a second growing
+        # RANGE frame (see rolling_aggregates(method="prefix")), not an
+        # explode. (A compound xxhash64 sort-prefix key like _SK below was
+        # measured out here: parity at 8M docs/16 cores, 25-35% slower at
+        # 500k docs.)
+        w_asof = (
+            Window.partitionBy(*keys)
+            .orderBy(F.col(_TS_KEY).asc(), tie)
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        if ffill_cols:
-            out = forward_fill(
-                out, keys, probe_ts, ffill_cols, out_suffix=ffill_suffix
+        d = (
+            unioned.withColumn(
+                _PAYLOAD, F.last(_PAYLOAD, ignorenulls=True).over(w_asof)
             )
-        if lag_cols:
-            out = lag_features(out, keys, probe_ts, lag_cols, lags=lags)
-        if session_gap is not None:
-            out = sessionize(
-                out, keys, probe_ts, gap=session_gap, session_col=session_col
+            .where(F.col(_TAG) == 1)
+            .select(
+                *keys,
+                _TS_KEY,
+                *[c for c in probe_cols if c not in keys],
+                *[F.col(_PAYLOAD).getField(n).alias(n) for n in out_names],
             )
-        if rolling:
-            out = rolling_aggregates(
-                out, keys, probe_ts, rolling,
-                window=rolling_window, method="prefix",
-            )
+        )
+        w = Window.partitionBy(*keys).orderBy(F.col(_TS_KEY))
+        w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        exprs = [
+            *[
+                F.last(c, ignorenulls=True).over(w_cum).alias(c + ffill_suffix)
+                for c in ffill_cols
+            ],
+            *[F.lag(c, k).over(w).alias(f"{c}_lag{k}") for c in lag_cols for k in lags],
+            *windowed_partials(rolling, w, win_us),
+        ]
+        if gap_us is not None:
+            prev = F.lag(_TS_KEY).over(w)
+            new = prev.isNull() | ((F.col(_TS_KEY) - prev) > gap_us)
+            exprs.append(F.when(new, 1).otherwise(0).alias("__new"))
         keep = [
             *keys,
-            *[c for c in probes.columns if c not in keys],
+            *[c for c in probe_cols if c not in keys],
             *out_names,
             *[c + ffill_suffix for c in ffill_cols],
             *[f"{c}_lag{k}" for c in lag_cols for k in lags],
-            *([session_col] if session_gap is not None else []),
-            *[f"{c}_{n}_{rsuffix}" for c, ns in rolling.items() for n in ns],
         ]
-        return out.select(*keep)
+        if gap_us is not None:
+            keep.append(F.sum("__new").over(w_cum).alias(session_col))
+        return d.select("*", *exprs).select(
+            *keep, *prefix_finals(rolling, rsuffix, F.col)
+        )
 
     pred = hot_predicate(on, hot_keys)
+    specs = prefix_partials(rolling)
+    partials = list(specs)
 
     def bucket_of(col: Column) -> Column:
         """Only hot entities are time-split; a cold entity keeps one group
         (B=0), making its in-bucket window the complete computation."""
         return F.when(pred, F.floor(col / F.lit(bucket_us))).otherwise(F.lit(0))
-
-    # rolling partial specs — identical to rolling_aggregates(method="prefix")
-    specs: dict[str, Column] = {}
-    for c, names in rolling.items():
-        need = set(names)
-        specs[f"__cn_{c}"] = (
-            F.when(F.col(c).isNotNull(), F.lit(1)).otherwise(F.lit(0))
-        )
-        if need & {"sum", "avg", "mean", "stddev"}:
-            specs[f"__cs_{c}"] = F.col(c)
-        if "stddev" in need:
-            specs[f"__cq_{c}"] = F.col(c) * F.col(c)
-    partials = list(specs)
 
     # ---- Exchange 1: one scan, one shuffle, both tags retained ----------
     # The probe∪state union is hash-clustered by (entity, B) and sorted
@@ -251,10 +266,6 @@ def fused_feature_chain(
     # tables are scanned exactly once and no carry subtree rescans them
     # (the previous design's hot-slice scans + second mini-pipeline were
     # measured at ~0.5 scaling efficiency 4→16 cores: near-constant cost).
-    unioned, probe_cols = _tagged_union(
-        probes, state, keys, probe_ts, state_ts, values, out_names,
-        with_state_ts=False,
-    )
     unioned = unioned.withColumn(_B, bucket_of(F.col(_TS_KEY)))
     # Sort-key prefix hardening: corpus entity keys routinely share a long
     # common prefix (doc%012d here; URLs/paths in real corpora), so Spark's
@@ -265,7 +276,6 @@ def fused_feature_chain(
     # exact). The hash is a pure function of the keys: window groups and
     # exchange co-location are unchanged.
     unioned = unioned.withColumn(_SK, F.xxhash64(*keys))
-    tie = F.col(_TAG).asc() if not strict else F.col(_TAG).desc()
     w_asof = (
         Window.partitionBy(_SK, *keys, _B)
         .orderBy(F.col(_TS_KEY).asc(), tie)
@@ -627,24 +637,4 @@ def fused_feature_chain(
     def minus(p: str) -> Column:
         return F.col(f"__st_{p}") - F.coalesce(base.getField(p), F.lit(0))
 
-    final = cut
-    roll_names = []
-    for c, names in rolling.items():
-        n_w = minus(f"__cn_{c}")
-        s_w = minus(f"__cs_{c}") if f"__cs_{c}" in partials else None
-        for n in names:
-            o = f"{c}_{n}_{rsuffix}"
-            roll_names.append(o)
-            if n == "count":
-                final = final.withColumn(o, n_w.cast("long"))
-            elif n == "sum":
-                final = final.withColumn(o, F.when(n_w > 0, s_w))
-            elif n in ("avg", "mean"):
-                final = final.withColumn(o, F.when(n_w > 0, s_w / n_w))
-            elif n == "stddev":
-                q_w = minus(f"__cq_{c}")
-                var = (q_w - s_w * s_w / n_w) / (n_w - F.lit(1))
-                final = final.withColumn(
-                    o, F.when(n_w > 1, F.sqrt(F.greatest(var, F.lit(0.0))))
-                )
-    return final.select(*keep, *roll_names)
+    return cut.select(*keep, *prefix_finals(rolling, rsuffix, minus))

@@ -30,6 +30,7 @@ from engine.asof import asof_join
 from engine.transforms.row import apply_row_features
 from engine.transforms.table import agg_features
 from engine.window_ops import (
+    PREFIX_AGGS,
     backward_fill,
     cumulative_stats,
     forward_fill,
@@ -158,24 +159,24 @@ _PER_ENTITY_OPS = {"asof", "lag", "ffill", "sessionize", "rolling", "cumulative"
 
 # ---- whole-pipeline fusion (engine.fused) ---------------------------------
 _FUSE_ORDER = {"asof": 0, "lag": 1, "sessionize": 2, "rolling": 3}
-_FUSE_DECOMP = {"count", "sum", "avg", "mean", "stddev"}
 
 
 def _fused_split(plan: "FeaturePlan"):
     """``(n_fused, kwargs)`` when the plan's leading window steps form the
     asof → lag? → sessionize? → rolling? pattern ``fused_feature_chain``
-    compiles to two wide exchanges, and NO per-entity step follows them —
-    else ``None`` (``lower`` then ignores its hot keys and lowers plainly).
+    compiles, and NO per-entity step follows them — else ``None`` (``lower``
+    then lowers plainly).
 
     Disqualifiers: ``lag`` with leads (the fused carry tails are
     backward-only), non-decomposable rolling aggs (min/max need the frame
     method), any trailing window-family step (it would reintroduce the
     per-entity skew the fusion just removed), a second ``ffill`` step, or
-    lag/rolling reading an ffill OUTPUT column (the fused assembly computes
-    fills after the in-bucket lag/cum expressions). The asof step's
-    ``strategy`` param is a physical choice and is ignored — the fused plan
-    IS the physical strategy. ``ffill`` is order-neutral: it fills
-    independent columns, so it may sit anywhere after the asof step."""
+    ffill/lag/rolling reading a column the chain itself produces (the fused
+    windows read only probe and as-of columns). The asof step's
+    ``strategy`` param is a physical choice: ``lower`` honours a named
+    ``merge``/``bucketed`` when there are no hot keys. ``ffill`` is
+    order-neutral: it fills independent columns, so it may sit anywhere
+    after the asof step."""
     run, last, have_ffill = 0, -1, False
     for s in plan.steps:
         if s.op == "ffill" and run > 0 and not have_ffill:
@@ -213,15 +214,16 @@ def _fused_split(plan: "FeaturePlan"):
             kw.update(session_gap=p.get("gap", "30 minutes"))
         elif s.op == "rolling":
             aggs = p["aggs"]
-            if not all(n in _FUSE_DECOMP for ns in aggs.values() for n in ns):
+            if not all(n in PREFIX_AGGS for ns in aggs.values() for n in ns):
                 return None
             kw.update(rolling=aggs, rolling_window=p["window"])
-    if have_ffill:
-        ff_out = {
-            c + kw["ffill_suffix"] for c in kw["ffill_cols"]
-        }
-        if ff_out & (set(kw.get("lag_cols", [])) | set(kw.get("rolling", {}))):
-            return None
+    lag_cols, rolling = kw.get("lag_cols", []), kw.get("rolling", {})
+    made = {f"{c}_lag{k}" for c in lag_cols for k in kw.get("lags", [])}
+    made |= {c + kw["ffill_suffix"] for c in kw.get("ffill_cols", [])}
+    if "session_gap" in kw:
+        made.add("session_id")
+    if made & (set(lag_cols) | set(rolling) | set(kw.get("ffill_cols", []))):
+        return None
     return run, kw
 
 
@@ -234,38 +236,42 @@ def lower(
 ) -> DataFrame:
     """FeaturePlan → DataFrame by composing §2 operators in step order.
 
-    All window-family steps share ``partitionBy(entity)``, so Catalyst
-    plans ONE shuffle for the whole chain (verified: the flagship 5-step
-    plan compiles to a single Exchange).
+    When the plan's leading window steps match :func:`_fused_split`, they
+    compile to the fused chain (``engine.fused``) and the remaining steps
+    lower plainly on its output. With no ``hot_keys`` that chain is one
+    exchange and one sort: every window after the as-of reuses the as-of's
+    sort. With ``hot_keys`` (e.g. from ``engine.skew.straggler_hot_keys``)
+    it is the two-exchange chain that time-splits the hot keys by
+    ``bucket``. An asof step that names ``strategy="merge"`` or
+    ``"bucketed"`` keeps that physical plan when there are no hot keys.
 
-    ``hot_keys`` (e.g. from ``engine.skew.straggler_hot_keys``): when the
-    plan's leading window steps match :func:`_fused_split`, they compile
-    to the whole-pipeline fused chain (``engine.fused`` — TWO wide
-    exchanges, hot keys time-split by ``bucket`` inside them) and the
-    remaining steps lower plainly on its output. Any other plan lowers
-    plainly: same results, but its hot keys are not skew-proofed — the
-    lowering logs a warning saying so.
+    Any other plan lowers plainly: all window-family steps share
+    ``partitionBy(entity)``, so Catalyst plans ONE shuffle for the chain.
+    Its hot keys are not skew-proofed — the lowering logs a warning saying
+    so.
     """
     tables = tables or {}
     df, rest = probes, plan.steps
-    if hot_keys:
-        fused = _fused_split(plan)
-        if fused is None:
-            _log.warning(
-                "plan %s does not fuse; its %d hot_keys are ignored and it "
-                "lowers plainly (hot entities run as serial window tasks)",
-                [s.op for s in plan.steps], len(hot_keys),
-            )
-        else:
-            from engine.fused import fused_feature_chain
+    fused = _fused_split(plan)
+    named = fused and plan.steps[0].params.get("strategy", "union") != "union"
+    if named and not hot_keys:
+        fused = None  # no key to time-split: the named as-of plan wins
+    if fused is None and hot_keys:
+        _log.warning(
+            "plan %s does not fuse; its %d hot_keys are ignored and it "
+            "lowers plainly (hot entities run as serial window tasks)",
+            [s.op for s in plan.steps], len(hot_keys),
+        )
+    elif fused is not None:
+        from engine.fused import fused_feature_chain
 
-            n_fused, kw = fused
-            state = tables[kw.pop("state_name")]
-            df = fused_feature_chain(
-                probes, state, on=plan.entity, probe_ts=plan.ts,
-                bucket=bucket, hot_keys=hot_keys, **kw,
-            )
-            rest = plan.steps[n_fused:]
+        n_fused, kw = fused
+        state = tables[kw.pop("state_name")]
+        df = fused_feature_chain(
+            probes, state, on=plan.entity, probe_ts=plan.ts,
+            bucket=bucket, hot_keys=hot_keys or (), **kw,
+        )
+        rest = plan.steps[n_fused:]
     for step in rest:
         try:
             fn = _LOWERERS[step.op]

@@ -29,6 +29,9 @@ _GAP_UNITS = {
     "day": 86400, "days": 86400, "d": 86400,
 }
 
+# aggregates the prefix method decomposes into additive partials
+PREFIX_AGGS = {"count", "sum", "avg", "mean", "stddev"}
+
 
 def _as_list(x: str | Sequence[str]) -> list[str]:
     return [x] if isinstance(x, str) else list(x)
@@ -140,16 +143,16 @@ def rolling_aggregates(
       × frame) per entity, serial per entity — so a hot key with n rows and
       wide frames costs n·w in ONE task.
     * ``method="prefix"``: decomposable aggregates (count/sum/avg/stddev)
-      as running cumulative sums (incremental expanding frame, O(n)) minus
-      their value at the window cutoff ``t − W − 1µs``. The cutoff is
-      resolved in a single pass: each row explodes into a state role (its
-      cums at ``t``) and a probe role (keyed at the cutoff), and one window
-      carries the last state cums forward to each probe — no join, the
-      upstream is evaluated once. Turns the hot-key cost from O(n·w) serial
-      into O(n); the fused chain (``engine.fused``) uses the same
-      decomposition. Float results are allclose-but-not-bitwise vs "frame"
-      (subtraction of prefix sums). min/max do not decompose and are
-      rejected under this method.
+      as the difference of two GROWING frames over one ordering: the
+      running sum up to ``t`` (``RANGE UNBOUNDED PRECEDING .. CURRENT ROW``)
+      minus the running sum up to the cutoff ``t − W − 1µs``
+      (``RANGE UNBOUNDED PRECEDING .. W+1µs PRECEDING``). Both frames only
+      grow, so Spark evaluates each incrementally — O(n) per entity — where
+      the sliding frame costs O(n·w) serial in ONE task for a hot key. Both
+      share one window spec: one sort, no explode, no join. The fused
+      chain (``engine.fused``) uses the same decomposition. Float results
+      are allclose-but-not-bitwise vs "frame" (subtraction of prefix
+      sums). min/max do not decompose and are rejected under this method.
     """
     win_us = int(parse_duration_seconds(window) * 1_000_000)
     suffix = (
@@ -176,88 +179,60 @@ def rolling_aggregates(
     if method != "prefix":
         raise ValueError(f"unknown rolling method: {method!r}")
 
-    decomposable = {"count", "sum", "avg", "mean", "stddev"}
-    bad = [n for ns in aggs.values() for n in ns if n not in decomposable]
+    bad = [n for ns in aggs.values() for n in ns if n not in PREFIX_AGGS]
     if bad:
         raise ValueError(f"method='prefix' cannot compute {bad}; use method='frame'")
+    w = Window.partitionBy(*ents).orderBy(epoch_micros(ts))
+    d = df.select("*", *windowed_partials(aggs, w, win_us))
+    return d.select(*df.columns, *prefix_finals(aggs, suffix, F.col))
 
+
+def prefix_partials(aggs: dict[str, Sequence[str]]) -> dict[str, Column]:
+    """Additive per-row partials of the prefix method, by name: a non-null
+    count for every column (it gates the empty-window → NULL rule), plus
+    the value and its square where an aggregate needs them."""
     specs: dict[str, Column] = {}
     for c, names in aggs.items():
         need = set(names)
-        # count partial always needed: it gates the empty-window → NULL rule
         specs[f"__cn_{c}"] = F.when(F.col(c).isNotNull(), F.lit(1)).otherwise(F.lit(0))
-        if need & {"sum", "avg", "mean", "stddev"}:
+        if need - {"count"}:
             specs[f"__cs_{c}"] = F.col(c)
         if "stddev" in need:
             specs[f"__cq_{c}"] = F.col(c) * F.col(c)
-    partials = list(specs)
+    return specs
 
-    # Single-pass cutoff resolution. A plain self-as-of would reference this
-    # DataFrame twice (probe + state side), making Spark compute the
-    # whole upstream chain twice per run. Instead each row explodes into
-    # its two roles — a state row at ts carrying the cums, and a probe
-    # row keyed at ts − W − 1µs — and ONE window resolves the cutoff
-    # cums: upstream is evaluated exactly once, no join.
-    wcum = (
-        Window.partitionBy(*ents)
-        .orderBy(epoch_micros(ts))
-        .rangeBetween(Window.unboundedPreceding, 0)  # peer-inclusive, incremental
-    )
-    d = df
-    for name, expr in specs.items():
-        d = d.withColumn(name, F.sum(expr).over(wcum))
-    ts_us = epoch_micros(ts)
-    pay = F.struct(*[F.col(p) for p in partials])
-    role = F.explode(
-        F.array(
-            F.struct(
-                F.lit(0).alias("__side"), ts_us.alias("__key"), pay.alias("__pay")
-            ),
-            F.struct(
-                F.lit(1).alias("__side"),
-                (ts_us - F.lit(win_us + 1)).alias("__key"),
-                # typed NULL of the same struct type, no string plumbing
-                F.when(F.lit(False), pay).alias("__pay"),
-            ),
-        )
-    )
-    e = d.withColumn("__role", role)
-    e = e.select("*", "__role.__side", "__role.__key", "__role.__pay").drop("__role")
-    # state (0) sorts before probe (1) at equal keys: a state row at
-    # exactly ts − W − 1µs is ≤ the cutoff, hence inside the base prefix.
-    w_res = (
-        Window.partitionBy(*ents)
-        .orderBy(F.col("__key").asc(), F.col("__side").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    resolved = e.withColumn("__pay", F.last("__pay", ignorenulls=True).over(w_res))
-    out = resolved.where(F.col("__side") == 1).select(
-        *[c for c in d.columns],
-        *[F.col(f"__pay.{p}").alias(p + "_b") for p in partials],
-    )
 
-    def minus(cur, base):
-        return F.col(cur) - F.coalesce(F.col(base), F.lit(0))
+def windowed_partials(aggs, w: WindowSpec, win_us: int) -> list[Column]:
+    """Each :func:`prefix_partials` partial summed over the trailing window
+    ``[t − W, t]`` of ordering ``w`` (in µs): its growing frame up to ``t``
+    (peer-inclusive) minus its growing frame up to the cutoff ``t − W − 1µs``."""
+    now = w.rangeBetween(Window.unboundedPreceding, 0)
+    cut = w.rangeBetween(Window.unboundedPreceding, -(win_us + 1))
+    return [
+        (F.sum(e).over(now) - F.coalesce(F.sum(e).over(cut), F.lit(0))).alias(p)
+        for p, e in prefix_partials(aggs).items()
+    ]
 
+
+def prefix_finals(aggs, suffix: str, in_window) -> list[Column]:
+    """The rolling outputs ``{col}_{fn}_{suffix}`` from ``in_window(p)``,
+    each partial ``p`` of :func:`prefix_partials` summed over the window."""
+    out = []
     for c, names in aggs.items():
-        n_w = minus(f"__cn_{c}", f"__cn_{c}_b")
-        s_w = minus(f"__cs_{c}", f"__cs_{c}_b") if f"__cs_{c}" in partials else None
+        n_w = in_window(f"__cn_{c}")
         for n in names:
-            o = f"{c}_{n}_{suffix}"
             if n == "count":
-                out = out.withColumn(o, n_w.cast("long"))
+                e = n_w.cast("long")
             elif n == "sum":
-                out = out.withColumn(o, F.when(n_w > 0, s_w))
+                e = F.when(n_w > 0, in_window(f"__cs_{c}"))
             elif n in ("avg", "mean"):
-                out = out.withColumn(o, F.when(n_w > 0, s_w / n_w))
-            elif n == "stddev":
-                q_w = minus(f"__cq_{c}", f"__cq_{c}_b")
+                e = F.when(n_w > 0, in_window(f"__cs_{c}") / n_w)
+            else:  # stddev
+                s_w, q_w = in_window(f"__cs_{c}"), in_window(f"__cq_{c}")
                 var = (q_w - s_w * s_w / n_w) / (n_w - F.lit(1))
-                out = out.withColumn(
-                    o,
-                    F.when(n_w > 1, F.sqrt(F.greatest(var, F.lit(0.0)))),
-                )
-    return out.drop(*partials, *[p + "_b" for p in partials])
+                e = F.when(n_w > 1, F.sqrt(F.greatest(var, F.lit(0.0))))
+            out.append(e.alias(f"{c}_{n}_{suffix}"))
+    return out
 
 
 def cumulative_stats(

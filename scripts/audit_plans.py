@@ -48,6 +48,7 @@ def stats(df, plan: str) -> str:
     wsc = len(set(re.findall(r"\*\((\d+)\)", simple)))
     lines = [
         f"exchanges={n_ops('Exchange')} (reused={n_ops('ReusedExchange')}), "
+        f"sorts={n_ops('Sort')}, "
         f"wholeStageCodegen spans={wsc}, "
         f"broadcastHashJoin={n_ops('BroadcastHashJoin')}, "
         f"sortMergeJoin={n_ops('SortMergeJoin')}",
@@ -82,15 +83,21 @@ def exchange_schemas(plan: str) -> str:
     return "\n".join(out)
 
 
-def section(title: str, desc: str, df, max_exchanges: int | None = None) -> str:
-    """``max_exchanges``: hard gate — the audit FAILS if the plan needs more
-    real exchanges than the design claims (shape regressions surface here,
-    not at 100 TB)."""
+def section(
+    title: str,
+    desc: str,
+    df,
+    max_exchanges: int | None = None,
+    max_sorts: int | None = None,
+) -> str:
+    """``max_exchanges`` / ``max_sorts``: hard gates — the audit FAILS if
+    the plan needs more real exchanges or sorts than the design claims
+    (shape regressions surface here, not at 100 TB)."""
     p = plan_of(df)
-    if max_exchanges is not None:
-        n_ex = len(re.findall(r"^\(\d+\) Exchange\b", p, re.M))
-        assert n_ex <= max_exchanges, (
-            f"{title}: {n_ex} exchanges > allowed {max_exchanges}\n{p[:2000]}"
+    for op, cap in (("Exchange", max_exchanges), ("Sort", max_sorts)):
+        n = len(re.findall(rf"^\(\d+\) {op}\b", p, re.M))
+        assert cap is None or n <= cap, (
+            f"{title}: {n} {op} > allowed {cap}\n{p[:2000]}"
         )
     return f"## {title}\n\n{desc}\n\n```\n{stats(df, p)}\n```\n\n<details><summary>full plan</summary>\n\n```\n{p}\n```\n\n</details>\n"
 
@@ -124,16 +131,18 @@ def main() -> None:
         max_exchanges=1,
     ))
 
-    r = rolling_aggregates(f.select("event_id", "user_id", "ts", "value_last"),
-                           "user_id", "ts", {"value_last": ["count", "sum"]},
+    r = rolling_aggregates(state, "user_id", "ts", {"value": ["count", "sum"]},
                            window="1 hour", method="prefix")
     secs.append(section(
-        "Prefix rolling (fused explode + window)",
-        "The cutoff lookup is fused: one generate (explode into state/probe "
-        "roles) + one window — the upstream chain appears ONCE in the plan "
-        "(no self-join, no duplicate subtree). Hard-asserted at one exchange.",
+        "Prefix rolling (two growing RANGE frames, one window)",
+        "The cutoff is a second growing frame over the same ordering "
+        "(`RANGE UNBOUNDED PRECEDING .. W+1µs PRECEDING`), subtracted from "
+        "the running sum: no explode, no join, no second sort, and the "
+        "input appears ONCE in the plan. Hard-asserted at one exchange and "
+        "one sort.",
         r,
         max_exchanges=1,
+        max_sorts=1,
     ))
 
     # Fused feature chain (engine/fused.py): the whole as-of + lag +
@@ -194,6 +203,32 @@ def main() -> None:
         "same exchange cap as the direct call above.",
         lowered,
         max_exchanges=8,
+    ))
+
+    # No hot keys (the common case: no key clears the straggler bar): the
+    # same plan compiles to the one-sort chain — every window after the as-of reuses
+    # the as-of's (user_id, ts, tag) sort.
+    one_sort = (
+        FeatureEngine(probes, entity="user_id", ts="ts")
+        .asof(state, values=["value"], suffix="_last")
+        .lag(["value_last"], lags=[1])
+        .sessionize("30 minutes")
+        .rolling({"value_last": ["count", "sum"]}, "1 hour", method="prefix")
+        .to_df()
+    )
+    one_sort_plan = plan_of(one_sort)
+    assert "Generate" not in one_sort_plan, "one-sort chain exploded its rows"
+    secs.append(section(
+        "FeaturePlan lowering with no hot keys (one exchange, one sort)",
+        "The same pipeline with no hot keys compiles to the fused chain's "
+        "one-sort form: the as-of window sorts by `(user_id, ts, tag)` and "
+        "the lag, session and rolling windows order by `(user_id, ts)`, a "
+        "prefix of it, so Catalyst adds no Sort. The rolling cutoff is a "
+        "growing `RangeFrame, unboundedpreceding$(), -3600000001` frame, "
+        "not an explode. Hard-asserted: one exchange, one sort, no Generate.",
+        one_sort,
+        max_exchanges=1,
+        max_sorts=1,
     ))
 
     orders = read_table(spark, SF, "orders").select("o_custkey", "o_totalprice")
@@ -512,8 +547,9 @@ def main() -> None:
             "Generated by `python scripts/audit_plans.py` on the sf0.001 "
             "driver testdata. The summary line above each plan is the "
             "shape check that matters at 100 TB: pushed filters, pruned "
-            "read schemas, exchange counts, codegen coverage, and join "
-            "strategies.\n\n" + "\n".join(secs)
+            "read schemas, exchange counts, sort counts, codegen coverage, "
+            "and join strategies. Scan locations under the testdata root "
+            "read `$SF`.\n\n" + "\n".join(secs).replace(SF, "$SF")
         )
     print("wrote docs/PLANS.md")
     spark.stop()

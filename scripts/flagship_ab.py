@@ -32,10 +32,9 @@ def main() -> None:
 
     p = spark.read.parquet(os.path.join(root, "probes"))
     e = spark.read.parquet(os.path.join(root, "seq_events"))
-    n = p.count() + e.count()
+    keys = p.select("doc_id").unionByName(e.select("doc_id"))
     hot = straggler_hot_keys(
-        p.select("doc_id").unionByName(e.select("doc_id")), "doc_id", n,
-        cores=cores, sample_fraction=0.05,
+        keys, "doc_id", keys.count(), cores=cores, sample_fraction=0.05,
     )
     seqs = bench.read_sequences(spark, root, bench.BENCH_DOCS)
     hot_rows = (

@@ -148,10 +148,7 @@ def test_fused_hybrid_all_hot(sides):
 def n_exchanges(df):
     """Real exchanges in the formatted physical plan, counted like
     scripts/audit_plans.py on detail headers (reused subtrees once)."""
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return len(re.findall(r"^\(\d+\) Exchange\b", buf.getvalue(), re.M))
+    return plan_ops(df)[0]
 
 
 def fused_chain_hybrid(probes, ev, bucket, hot_keys, window=WIN, gap=GAP):
@@ -167,34 +164,93 @@ def fused_chain_hybrid(probes, ev, bucket, hot_keys, window=WIN, gap=GAP):
 def test_plan_lowering_routes_through_fused(sides):
     """FeaturePlan hybrid lowering (engine.plan.lower hot_keys=...) compiles
     the asof→lag→sessionize→rolling pattern to the fused chain: results
-    equal the plain lowering, and the physical plan carries the fused
-    shape's exchange budget instead of the per-op hot branch's ~10."""
-    from engine.plan import FeatureEngine
-
+    equal the composition of the public operators, and the physical plan
+    carries the fused shape's exchange budget instead of the per-op hot
+    branch's ~10."""
     probes, ev = sides
-
-    def build():
-        return (
-            FeatureEngine(probes, entity="doc_id", ts="asof_ts")
-            .asof(ev, values=["fvalue", "fcat"], suffix="_last")
-            .lag(["fvalue_last"], lags=[1, 2])
-            .sessionize(GAP)
-            .rolling({"fvalue_last": ["count", "sum", "avg"]}, WIN, method="prefix")
-        )
-
-    plain = build().to_df()
-    hybrid = build().to_df(hot_keys=[HOT], bucket="6 hours")
-    assert_equal(plain, hybrid)
+    hybrid = flagship_plan(probes, ev).to_df(hot_keys=[HOT], bucket="6 hours")
+    assert_equal(reference_chain(probes, ev), hybrid)
     # plan shape: the lowering must emit EXACTLY the fused plan (same real
     # exchange count as calling fused_feature_chain directly). Absolute caps
     # live in the plan audit, which runs on uncached parquet inputs.
     direct = fused_chain_hybrid(probes, ev, "6 hours", hot_keys=[HOT])
-    lowered = build().to_df(hot_keys=[HOT], bucket="6 hours")
     from engine.plan import _fused_split
 
-    assert _fused_split(build().plan) is not None
-    assert n_exchanges(lowered) == n_exchanges(direct), (
-        n_exchanges(lowered), n_exchanges(direct))
+    assert _fused_split(flagship_plan(probes, ev).plan) is not None
+    assert n_exchanges(hybrid) == n_exchanges(direct), (
+        n_exchanges(hybrid), n_exchanges(direct))
+
+
+def flagship_plan(probes, ev, **asof_kw):
+    from engine.plan import FeatureEngine
+
+    return (
+        FeatureEngine(probes, entity="doc_id", ts="asof_ts")
+        .asof(ev, values=["fvalue", "fcat"], suffix="_last", **asof_kw)
+        .lag(["fvalue_last"], lags=[1, 2])
+        .sessionize(GAP)
+        .rolling({"fvalue_last": ["count", "sum", "avg"]}, WIN, method="prefix")
+    )
+
+
+def plan_ops(df):
+    """(Exchange, Sort, Window, Generate) counts and the formatted plan."""
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    p = buf.getvalue()
+    n = [
+        len(re.findall(rf"^\(\d+\) {op}\b", p, re.M))
+        for op in ("Exchange", "Sort", "Window", "Generate")
+    ]
+    return (*n, p)
+
+
+@pytest.fixture(scope="module")
+def parquet_sides(sides, spark, tmp_path_factory):
+    """``sides`` read back from parquet: a cached input's own exchanges
+    would show in the formatted plan, so absolute counts need a scan."""
+    root = tmp_path_factory.mktemp("fused_sides")
+    out = []
+    for name, df in zip(("probes", "ev"), sides):
+        df.write.parquet(str(root / name))
+        out.append(spark.read.parquet(str(root / name)))
+    return tuple(out)
+
+
+@pytest.mark.parametrize("path", ["lowering", "direct"])
+def test_no_hot_key_chain_is_one_exchange_one_sort(parquet_sides, path):
+    """With no hot keys the chain reuses the as-of's sort: every later
+    window orders by a prefix of it, and the rolling cutoff is a growing
+    RANGE frame, not an explode — 1 Exchange, 1 Sort, no Generate, and no
+    sliding frame. Rows equal the public-operator composition."""
+    probes, ev = parquet_sides
+    if path == "lowering":
+        df = flagship_plan(probes, ev).to_df()
+    else:
+        df = fused_chain_hybrid(probes, ev, "6 hours", hot_keys=[])
+    n_ex, n_sort, _n_win, n_gen, p = plan_ops(df)
+    assert (n_ex, n_sort, n_gen) == (1, 1, 0), p
+    cutoff = 86_400_000_000 + 1
+    assert f"RangeFrame, unboundedpreceding$(), -{cutoff})" in p, p
+    assert not re.search(r"RangeFrame, -\d+, currentrow\$\(\)", p), p
+    assert_equal(reference_chain(probes, ev), df)
+
+
+@pytest.mark.parametrize("strategy", ["merge", "bucketed"])
+def test_lowering_honours_named_asof_strategy(parquet_sides, strategy):
+    """A plan that names a physical as-of strategy keeps it when there are
+    no hot keys: it lowers plainly (that strategy's plan, so more than the
+    fused chain's one sort), and its rows still equal the composition.
+    ``strategy="union"`` is the default and fuses."""
+    probes, ev = parquet_sides
+    named = flagship_plan(probes, ev, strategy=strategy).to_df()
+    _, n_sort, _, _, p = plan_ops(named)
+    marker = {"merge": "FlatMapCoGroupsInPandas", "bucketed": "__afg_bucket"}
+    assert marker[strategy] in p and n_sort > 1, p
+    assert "__afg_bucket" not in plan_ops(flagship_plan(probes, ev).to_df())[4]
+    assert plan_ops(flagship_plan(probes, ev, strategy="union").to_df())[1] == 1
+    assert_equal(reference_chain(probes, ev), named)
 
 
 def test_plan_lowering_fused_fallback_on_leads(sides):
@@ -304,8 +360,9 @@ def test_fused_ffill_rejects_dependent_lag(sides):
 
 def test_plan_lowering_fuses_ffill(sides):
     """A FeaturePlan with an ffill step still fuses (order-neutral) and
-    matches the plain lowering."""
+    matches the public-operator composition, with and without hot keys."""
     from engine.plan import FeatureEngine, _fused_split
+    from engine.window_ops import forward_fill
 
     probes, ev = sides
 
@@ -319,9 +376,15 @@ def test_plan_lowering_fuses_ffill(sides):
         )
 
     assert _fused_split(build().plan) is not None
-    plain = build().to_df()
-    hybrid = build().to_df(hot_keys=[HOT], bucket="6 hours")
-    assert_equal(plain, hybrid)
+    ref = asof_join(
+        probes, ev, on="doc_id", probe_ts="asof_ts", state_ts="ts",
+        values=["fvalue", "fcat"], suffix="_last",
+    )
+    ref = forward_fill(ref, "doc_id", "asof_ts", ["fvalue_last"], out_suffix="_f")
+    ref = lag_features(ref, "doc_id", "asof_ts", ["fvalue_last"], lags=[1])
+    ref = sessionize(ref, "doc_id", "asof_ts", gap=GAP)
+    for hot in ([], [HOT]):
+        assert_equal(ref, build().to_df(hot_keys=hot, bucket="6 hours"))
     # lag over the ffill OUTPUT cannot fuse — falls back, still matches
     def build_dep():
         return (
@@ -332,6 +395,15 @@ def test_plan_lowering_fuses_ffill(sides):
         )
 
     assert _fused_split(build_dep().plan) is None
+    # nor can rolling over a lag OUTPUT: it lowers plainly and still runs
+    roll_lag = (
+        FeatureEngine(probes, entity="doc_id", ts="asof_ts")
+        .asof(ev, values=["fvalue"], suffix="_last")
+        .lag(["fvalue_last"], lags=[1])
+        .rolling({"fvalue_last_lag1": ["sum"]}, WIN, method="prefix")
+    )
+    assert _fused_split(roll_lag.plan) is None
+    assert roll_lag.to_df().count() == probes.count()
 
 
 def test_fused_no_state_rows(sides, spark):

@@ -150,3 +150,70 @@ def test_hash_sample_rate_nesting_property(sess, ids, r1, r2):
     assert s_lo <= s_hi
     coin = lambda i: int(hashlib.md5(f"afg|{i}".encode()).hexdigest()[:4], 16)
     assert s_hi == {i for i in ids if coin(i) < rate_threshold(hi)}
+
+
+# Edge inputs for the FeaturePlan lowering: probe and state (entity, ts)
+# each unique (lag order among tied probes, and the winner among tied state
+# rows, are engine-chosen), but a probe may tie a state row on ts.
+_edge_state = st.dictionaries(
+    st.tuples(st.integers(0, 2), st.integers(0, 30)),
+    st.one_of(st.none(), st.integers(-100, 100)),
+    max_size=20,
+)
+_edge_probes = st.lists(
+    st.tuples(st.integers(0, 2), st.integers(0, 30)),
+    max_size=20, unique=True,
+)
+
+
+@given(
+    state=_edge_state, probes=_edge_probes, strict=st.booleans(),
+    one_entity=st.booleans(),
+)
+@settings(**_SETTINGS)
+def test_feature_plan_lowering_equals_composition_on_edge_inputs(
+    sess, state, probes, strict, one_entity
+):
+    """``FeatureEngine(...).to_df()`` with no hot keys (the fused one-sort
+    chain) equals the composition of the public operators — as-of, ffill,
+    lags, sessions and avg/stddev rolling — on histories with null and
+    all-null values, probe/state ts ties under both tie policies, a
+    one-entity corpus and an empty probe side."""
+    from engine.plan import FeatureEngine
+    from engine.window_ops import forward_fill, lag_features, sessionize
+
+    spark = sess
+    if one_entity:
+        state = {(0, t): v for (_, t), v in state.items()}
+        probes = sorted({(0, t) for _, t in probes})
+    ts = F.timestamp_micros(F.col("tsec") * 1_000_000).alias("ts")
+    sdf = spark.createDataFrame(
+        [(e, t, None if v is None else float(v)) for (e, t), v in state.items()],
+        "e long, tsec long, v double",
+    ).select("e", ts, "v", F.lit(None).cast("double").alias("z"))
+    pdf = spark.createDataFrame(
+        [(i, e, t) for i, (e, t) in enumerate(probes)], "pid long, e long, tsec long"
+    ).select("pid", "e", ts)
+    aggs = {"v_last": ["count", "sum", "avg", "stddev"], "z_last": ["count", "avg"]}
+
+    got = (
+        FeatureEngine(pdf, entity="e", ts="ts")
+        .asof(sdf, values=["v", "z"], suffix="_last", strict=strict)
+        .ffill(["v_last", "z_last"])
+        .lag(["v_last"], lags=[1, 2])
+        .sessionize(3)
+        .rolling(aggs, 5, method="prefix")
+        .to_df()
+    )
+    ref = asof_join(pdf, sdf, on="e", probe_ts="ts", state_ts="ts",
+                    values=["v", "z"], suffix="_last", strict=strict)
+    ref = forward_fill(ref, "e", "ts", ["v_last", "z_last"], out_suffix="_f")
+    ref = lag_features(ref, "e", "ts", ["v_last"], lags=[1, 2])
+    ref = sessionize(ref, "e", "ts", gap=3)
+    ref = rolling_aggregates(ref, "e", "ts", aggs, window=5, method="frame")
+
+    assert sorted(got.columns) == sorted(ref.columns)
+    a = ref.toPandas().sort_values("pid").reset_index(drop=True)
+    b = got.select(*ref.columns).toPandas().sort_values("pid").reset_index(drop=True)
+    assert len(a) == len(b) == len(probes)
+    pd.testing.assert_frame_equal(a, b, check_dtype=False, rtol=1e-9, atol=1e-6)
