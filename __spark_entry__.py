@@ -84,26 +84,32 @@ def q_asof_union(spark, sf_dir):
     probes, state = _probe_state(spark, sf_dir)
     return asof_join(
         probes, state, on="user_id", probe_ts="ts", state_ts="ts",
-        values=["value", "etype"], suffix="_last", strategy="union",
+        values=["value", "etype"], suffix="_last",
+    )
+
+
+def _asof_plan(spark, sf_dir):
+    from engine.plan import FeatureEngine
+
+    probes, state = _probe_state(spark, sf_dir)
+    return FeatureEngine(probes, "user_id", "ts").asof(
+        state, values=["value", "etype"], suffix="_last"
     )
 
 
 def q_asof_merge(spark, sf_dir):
-    probes, state = _probe_state(spark, sf_dir)
-    return asof_join(
-        probes, state, on="user_id", probe_ts="ts", state_ts="ts",
-        values=["value", "etype"], suffix="_last", strategy="merge",
-    )
+    """A1 as production lowers it: the sorted-partition as-of merge through
+    ``FeatureEngine`` (one exchange by user, one sort by (ts, tag), one
+    streaming last-known-value pass)."""
+    return _asof_plan(spark, sf_dir).to_df()
 
 
 def q_asof_bucketed(spark, sf_dir):
-    """A1b: skew-proof as-of (window over (entity, time bucket) + cross-bucket
-    carry) — identical semantics to asof_union, hot keys parallelized."""
-    probes, state = _probe_state(spark, sf_dir)
-    return asof_join(
-        probes, state, on="user_id", probe_ts="ts", state_ts="ts",
-        values=["value", "etype"], suffix="_last", strategy="bucketed",
-        bucket="6 hours",
+    """A1b: the same plan with users 0-4 routed hot — the fused chain
+    (engine/fused.py) time-splits them into 6-hour buckets stitched by a
+    cross-bucket carry. Identical semantics to asof_merge."""
+    return _asof_plan(spark, sf_dir).to_df(
+        hot_keys=[0, 1, 2, 3, 4], bucket="6 hours"
     )
 
 
@@ -111,7 +117,7 @@ def q_asof_strict(spark, sf_dir):
     probes, state = _probe_state(spark, sf_dir)
     return asof_join(
         probes, state, on="user_id", probe_ts="ts", state_ts="ts",
-        values=["value", "etype"], suffix="_last", strict=True, strategy="union",
+        values=["value", "etype"], suffix="_last", strict=True,
     )
 
 
@@ -2059,7 +2065,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (tests/test_tail_oracle.py); the named cover keeps the kernel
         # exercised inside the current driver window.
         "sessionize": q_sessionize,          # cover: session_agg, fused_chain
-        "asof_bucketed": q_asof_bucketed,    # cover: asof_merge (same oracle), fused_chain hybrid
+        "asof_bucketed": q_asof_bucketed,    # cover: asof_merge (same plan and oracle), hotwin_family (same fused hot-key lowering)
         "rollup_events": q_rollup_events,    # cover: grouping_sets (same GROUPING SETS engine path)
         "cube_events": q_cube_events,        # cover: grouping_sets
         "session_window_agg": q_session_window_agg,  # cover: session_agg (same agg; streaming variant pytest-checked)
@@ -2067,7 +2073,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_near_dup": q_embedding_near_dup,  # cover: embedding_near_dup_lsh (same verify kernel)
         "ann_lsh_topk": q_ann_lsh_topk,      # cover: ann_lsh_multitable (superset, L=1 special case)
         # r5-demoted twins (driver-green in CORRECTNESS_r04.json):
-        "asof_union": q_asof_union,          # cover: asof_merge (identical oracle, A1 union strategy)
+        "asof_union": q_asof_union,          # cover: asof_merge (same asof_join window, through the public operator)
         "asof_strict": q_asof_strict,        # cover: asof_merge (same kernel, <= -> < flag)
         "bfill": q_bfill,                    # cover: ffill (same carry kernel, reversed frame)
         "minmax": q_minmax,                  # cover: direct_features (same column-transform family)

@@ -244,7 +244,7 @@ def flagship_pipeline(spark, root: str, strategy: str = "hybrid", hot_keys=None,
 
     def plain_chain(p, e):
         f = asof_join(p, e, on="doc_id", probe_ts="asof_ts", state_ts="ts",
-                      values=["fvalue", "fcat"], suffix="_last", strategy="union")
+                      values=["fvalue", "fcat"], suffix="_last")
         f = lag_features(f, "doc_id", "asof_ts", ["fvalue_last"], lags=[1, 2])
         f = sessionize(f, "doc_id", "asof_ts", gap="1 hour")
         return rolling_aggregates(
@@ -355,15 +355,8 @@ def run_bench(cores: int) -> dict:
     # plan with the same task count and the rows measure per-core speed,
     # not task-overhead amortization. The flagship (the protocol's actual
     # measurement) runs at the full pinned 128 width below.
-    # asof_merge stays at the full width: its cogrouped Arrow merge stage
-    # is genuinely partition-parallel (6.4 s@4 -> 2.3 s@16 in r3) and the
-    # pin would serialize it to 8 pandas tasks.
-    unpinned = {"asof_merge"}
+    spark.conf.set("spark.sql.shuffle.partitions", str(SMALL_QUERY_WIDTH))
     for n in names:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(SHUFFLE_WIDTH if n in unpinned else SMALL_QUERY_WIDTH),
-        )
         # best-of-3 with isolation per rep: rep 1 compiles codegen, later reps
         # are the steady-state engine cost; min is the standard estimator here
         # (3 reps, not 2: at sf0.1 these queries run 0.2-8 s, where one GC

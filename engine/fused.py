@@ -128,7 +128,7 @@ def fused_feature_chain(
     Equivalent to::
 
         f = asof_join(probes, state, on, probe_ts, state_ts, values,
-                      strict=strict, suffix=suffix)           # any strategy
+                      strict=strict, suffix=suffix)
         f = forward_fill(f, on, probe_ts, ffill_cols, ffill_suffix)  # W1
         f = lag_features(f, on, probe_ts, lag_cols, lags=lags)
         f = sessionize(f, on, probe_ts, gap=session_gap)      # if gap given
@@ -296,9 +296,11 @@ def fused_feature_chain(
     mid_all = tracked_persist(mid_full.where((F.col(_TAG) == 1) | pred))
 
     # ---- as-of cross-bucket carry (tiny, broadcast) ---------------------
-    # Per-(entity, bucket) last state payload (max_by — ties resolved as in
-    # engine.asof._asof_bucketed), forward-filled over the union of probe
-    # and state bucket axes, for hot entities only: a cold row misses the
+    # Per-(entity, bucket) last state payload, forward-filled over the union
+    # of probe and state bucket axes, for hot entities only. Among exact-
+    # duplicate (ts) state rows max_by picks by the payload struct's field
+    # order: deterministic, the same class of tie the in-bucket window
+    # resolves by arrival order (as does pd.merge_asof). A cold row misses the
     # carry join and coalesces to the no-earlier-bucket defaults, which is
     # exactly its single-group semantics.
     carry_src = mid_all.where(pred)

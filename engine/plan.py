@@ -79,36 +79,53 @@ class FeaturePlan:
 
     @staticmethod
     def from_dict(d: Mapping[str, Any]) -> "FeaturePlan":
-        return FeaturePlan(
+        plan = FeaturePlan(
             entity=d["entity"],
             ts=d["ts"],
             steps=tuple(Step(s["op"], dict(s["params"])) for s in d["steps"]),
         )
+        _check_steps(plan.steps)
+        return plan
 
 
-_LOWERERS = {}
+_LOWERERS = {}  # op -> (lowering fn, the param keys it reads)
 
 
-def _lowerer(op: str):
+def _lowerer(op: str, *keys: str):
     def deco(fn):
-        _LOWERERS[op] = fn
+        _LOWERERS[op] = (fn, frozenset(keys))
         return fn
 
     return deco
 
 
-@_lowerer("asof")
+def _check_steps(steps) -> None:
+    """Reject an unknown op or param key. Lowerings read params with
+    defaults, so a misspelt key (``stict=True``) would otherwise be dropped
+    and the plan would run with the default — for ``strict`` that is a
+    same-timestamp label leak."""
+    for s in steps:
+        if s.op not in _LOWERERS:
+            raise ValueError(f"unknown plan op: {s.op!r}")
+        extra = set(s.params) - _LOWERERS[s.op][1]
+        if extra:
+            raise ValueError(
+                f"plan op {s.op!r} got unknown params {sorted(extra)}; "
+                f"it takes {sorted(_LOWERERS[s.op][1])}"
+            )
+
+
+@_lowerer("asof", "state", "state_ts", "values", "strict", "suffix")
 def _lower_asof(df, plan, p, tables):
     state = tables[p["state"]]
     return asof_join(
         df, state, on=plan.entity, probe_ts=plan.ts,
         state_ts=p.get("state_ts", "ts"), values=p.get("values"),
-        strict=p.get("strict", False), strategy=p.get("strategy", "union"),
-        suffix=p.get("suffix", ""), bucket=p.get("bucket", "1 day"),
+        strict=p.get("strict", False), suffix=p.get("suffix", ""),
     )
 
 
-@_lowerer("lag")
+@_lowerer("lag", "cols", "lags", "leads")
 def _lower_lag(df, plan, p, tables):
     return lag_features(
         df, plan.entity, plan.ts, p["cols"],
@@ -116,22 +133,22 @@ def _lower_lag(df, plan, p, tables):
     )
 
 
-@_lowerer("ffill")
+@_lowerer("ffill", "cols", "out_suffix")
 def _lower_ffill(df, plan, p, tables):
     return forward_fill(df, plan.entity, plan.ts, p["cols"], out_suffix=p.get("out_suffix", "_f"))
 
 
-@_lowerer("bfill")
+@_lowerer("bfill", "cols", "out_suffix")
 def _lower_bfill(df, plan, p, tables):
     return backward_fill(df, plan.entity, plan.ts, p["cols"], out_suffix=p.get("out_suffix", "_b"))
 
 
-@_lowerer("sessionize")
+@_lowerer("sessionize", "gap")
 def _lower_sessionize(df, plan, p, tables):
     return sessionize(df, plan.entity, plan.ts, gap=p.get("gap", "30 minutes"))
 
 
-@_lowerer("rolling")
+@_lowerer("rolling", "aggs", "window", "method")
 def _lower_rolling(df, plan, p, tables):
     return rolling_aggregates(
         df, plan.entity, plan.ts, p["aggs"], window=p["window"],
@@ -139,17 +156,17 @@ def _lower_rolling(df, plan, p, tables):
     )
 
 
-@_lowerer("cumulative")
+@_lowerer("cumulative", "aggs")
 def _lower_cumulative(df, plan, p, tables):
     return cumulative_stats(df, plan.entity, plan.ts, p["aggs"])
 
 
-@_lowerer("row_features")
+@_lowerer("row_features", "specs")
 def _lower_row_features(df, plan, p, tables):
     return apply_row_features(df, [tuple(s) for s in p["specs"]])
 
 
-@_lowerer("agg_features")
+@_lowerer("agg_features", "key", "aggs")
 def _lower_agg_features(df, plan, p, tables):
     return agg_features(df, p.get("key", plan.entity), p["aggs"])
 
@@ -172,9 +189,7 @@ def _fused_split(plan: "FeaturePlan"):
     method), any trailing window-family step (it would reintroduce the
     per-entity skew the fusion just removed), a second ``ffill`` step, or
     ffill/lag/rolling reading a column the chain itself produces (the fused
-    windows read only probe and as-of columns). The asof step's
-    ``strategy`` param is a physical choice: ``lower`` honours a named
-    ``merge``/``bucketed`` when there are no hot keys. ``ffill`` is
+    windows read only probe and as-of columns). ``ffill`` is
     order-neutral: it fills independent columns, so it may sit anywhere
     after the asof step."""
     run, last, have_ffill = 0, -1, False
@@ -242,20 +257,20 @@ def lower(
     exchange and one sort: every window after the as-of reuses the as-of's
     sort. With ``hot_keys`` (e.g. from ``engine.skew.straggler_hot_keys``)
     it is the two-exchange chain that time-splits the hot keys by
-    ``bucket``. An asof step that names ``strategy="merge"`` or
-    ``"bucketed"`` keeps that physical plan when there are no hot keys.
+    ``bucket``.
 
     Any other plan lowers plainly: all window-family steps share
     ``partitionBy(entity)``, so Catalyst plans ONE shuffle for the chain.
     Its hot keys are not skew-proofed — the lowering logs a warning saying
     so.
+
+    Raises ``ValueError`` on an unknown op or param key, before either
+    lowering reads the plan.
     """
     tables = tables or {}
+    _check_steps(plan.steps)
     df, rest = probes, plan.steps
     fused = _fused_split(plan)
-    named = fused and plan.steps[0].params.get("strategy", "union") != "union"
-    if named and not hot_keys:
-        fused = None  # no key to time-split: the named as-of plan wins
     if fused is None and hot_keys:
         _log.warning(
             "plan %s does not fuse; its %d hot_keys are ignored and it "
@@ -273,11 +288,7 @@ def lower(
         )
         rest = plan.steps[n_fused:]
     for step in rest:
-        try:
-            fn = _LOWERERS[step.op]
-        except KeyError:
-            raise ValueError(f"unknown plan op: {step.op!r}") from None
-        df = fn(df, plan, step.params, tables)
+        df = _LOWERERS[step.op][0](df, plan, step.params, tables)
     return df
 
 

@@ -270,13 +270,3 @@ def top_k_per_group(
     w = Window.partitionBy(*_as_list(keys)).orderBy(*order)
     out = df.withColumn(rank_col, F.row_number().over(w)).where(F.col(rank_col) <= k)
     return out if keep_rank else out.drop(rank_col)
-
-
-def dedup_latest(
-    df: DataFrame,
-    keys: str | Sequence[str],
-    ts: str,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Latest row per key — the A1 state-dedup step."""
-    return top_k_per_group(df, keys, ts, k=1, desc=True, tiebreak=tiebreak)

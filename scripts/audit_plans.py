@@ -15,6 +15,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -294,21 +295,25 @@ def main() -> None:
     # CHECK, not prose: the audit fails if the partition filter is missing.
     from engine.io import write_partitioned
 
-    part_dir = "/tmp/afg_plans_partitioned_docs"
-    write_partitioned(docs, part_dir, "source")
-    pruned = spark.read.parquet(part_dir).where(F.col("source") == "src3")
-    pplan = plan_of(pruned)
-    pf = [l.strip() for l in pplan.splitlines() if "PartitionFilters" in l]
-    assert pf and "source" in pf[0], f"partition pruning missing: {pf}"
-    secs.append(section(
-        "Partition-pruned scan (P4 layout)",
-        "`documents` written `partitionBy('source')`; a source-filtered read "
-        "must show a non-empty `PartitionFilters` — whole directories are "
-        "skipped before any file opens. At 10^12 rows this is the difference "
-        "between scanning one source and scanning the corpus.\n\n"
-        f"Checked: `{pf[0]}`",
-        pruned,
-    ))
+    # The fixture lives in a temporary directory, gone once the plan text
+    # is rendered; its location reads `$TMP` in the report.
+    with tempfile.TemporaryDirectory(prefix="afg_plans_") as tmp:
+        part_dir = os.path.join(tmp, "partitioned_docs")
+        write_partitioned(docs, part_dir, "source")
+        pruned = spark.read.parquet(part_dir).where(F.col("source") == "src3")
+        pplan = plan_of(pruned)
+        pf = [l.strip() for l in pplan.splitlines() if "PartitionFilters" in l]
+        assert pf and "source" in pf[0], f"partition pruning missing: {pf}"
+        secs.append(section(
+            "Partition-pruned scan (P4 layout)",
+            "`documents` written `partitionBy('source')`; a source-filtered "
+            "read must show a non-empty `PartitionFilters` — whole "
+            "directories are skipped before any file opens. At 10^12 rows "
+            "this is the difference between scanning one source and "
+            "scanning the corpus.\n\n"
+            f"Checked: `{pf[0]}`",
+            pruned,
+        ).replace(tmp, "$TMP"))
 
     # ANN paths: corpus side must stay shuffle-free until the keyed join
     from engine.corpus.similarity import ivf_topk, lsh_topk
@@ -549,7 +554,8 @@ def main() -> None:
             "shape check that matters at 100 TB: pushed filters, pruned "
             "read schemas, exchange counts, sort counts, codegen coverage, "
             "and join strategies. Scan locations under the testdata root "
-            "read `$SF`.\n\n" + "\n".join(secs).replace(SF, "$SF")
+            "read `$SF`, and the partition-pruning fixture's temporary "
+            "directory reads `$TMP`.\n\n" + "\n".join(secs).replace(SF, "$SF")
         )
     print("wrote docs/PLANS.md")
     spark.stop()

@@ -2,7 +2,24 @@ import pandas as pd
 import pytest
 
 from engine.asof import asof_join
+from engine.plan import FeatureEngine
 from tests.oracle import assert_frames_allclose, oracle_asof
+
+# The plans of the three driver as-of queries: ``union`` is the public
+# operator (asof_union), ``merge`` the FeatureEngine lowering with no hot
+# keys (asof_merge: the one-sort fused chain), ``bucketed`` the same plan
+# with every entity routed hot (asof_bucketed: the fused time split).
+PATHS = ["union", "merge", "bucketed"]
+
+
+def run_asof(path, probes, state, on, probe_ts="ts", bucket="6 hours", **kw):
+    if path == "union":
+        return asof_join(probes, state, on=on, probe_ts=probe_ts, **kw)
+    eng = FeatureEngine(probes, entity=on, ts=probe_ts).asof(state, **kw)
+    if path == "merge":
+        return eng.to_df()
+    ids = probes.select(on).unionByName(state.select(on)).distinct()
+    return eng.to_df(hot_keys=[r[0] for r in ids.collect()], bucket=bucket)
 
 
 @pytest.fixture(scope="module")
@@ -12,10 +29,11 @@ def pdata(seq_fixtures):
     return probes, state
 
 
-@pytest.mark.parametrize("strategy", ["union", "merge", "bucketed"])
+@pytest.mark.parametrize("path", PATHS)
 @pytest.mark.parametrize("strict", [False, True])
-def test_asof_matches_pandas_oracle(seq_fixtures, pdata, strategy, strict):
-    got = asof_join(
+def test_asof_matches_pandas_oracle(seq_fixtures, pdata, path, strict):
+    got = run_asof(
+        path,
         seq_fixtures["probes"],
         seq_fixtures["seq_events"],
         on="doc_id",
@@ -23,24 +41,12 @@ def test_asof_matches_pandas_oracle(seq_fixtures, pdata, strategy, strict):
         state_ts="ts",
         values=["fvalue", "fcat"],
         strict=strict,
-        strategy=strategy,
     ).toPandas()
     probes, state = pdata
     want = oracle_asof(
         probes, state, "doc_id", "asof_ts", "ts", ["fvalue", "fcat"], strict=strict
     )
     assert_frames_allclose(got, want)
-
-
-def test_all_strategies_agree(seq_fixtures):
-    kw = dict(
-        on="doc_id", probe_ts="asof_ts", state_ts="ts", values=["fvalue", "fcat"]
-    )
-    u = asof_join(seq_fixtures["probes"], seq_fixtures["seq_events"], strategy="union", **kw).toPandas()
-    m = asof_join(seq_fixtures["probes"], seq_fixtures["seq_events"], strategy="merge", **kw).toPandas()
-    b = asof_join(seq_fixtures["probes"], seq_fixtures["seq_events"], strategy="bucketed", **kw).toPandas()
-    assert_frames_allclose(u, m)
-    assert_frames_allclose(u, b)
 
 
 @pytest.mark.parametrize("strict", [False, True])
@@ -52,8 +58,9 @@ def test_hybrid_matches_oracle(seq_fixtures, pdata, strict, hot_threshold):
     keys are time-split by 6-hour buckets and the rest stay one window
     group each; None uses the job's own routing rule
     (``straggler_hot_keys``), which routes nothing at fixture size, so the
-    plan lowers plainly. Every case must match the merge_asof oracle."""
-    from engine.plan import FeatureEngine, _fused_split
+    plan runs the one-sort chain. Every case must match the merge_asof
+    oracle."""
+    from engine.plan import _fused_split
     from engine.skew import detect_hot_keys, straggler_hot_keys
 
     probes, state = seq_fixtures["probes"], seq_fixtures["seq_events"]
@@ -76,16 +83,15 @@ def test_hybrid_matches_oracle(seq_fixtures, pdata, strict, hot_threshold):
 
 
 def test_bucketed_tiny_buckets_cross_bucket_carry(seq_fixtures):
-    """1-hour buckets over a 30-day span: most probes resolve via the
-    cross-bucket carry table, not the in-bucket window."""
+    """Every doc_id routed hot with 1-hour buckets over a 30-day span: most
+    probes resolve via the fused chain's cross-bucket carry table, not the
+    in-bucket window."""
     kw = dict(
         on="doc_id", probe_ts="asof_ts", state_ts="ts", values=["fvalue", "fcat"]
     )
-    u = asof_join(seq_fixtures["probes"], seq_fixtures["seq_events"], strategy="union", **kw).toPandas()
-    b = asof_join(
-        seq_fixtures["probes"], seq_fixtures["seq_events"],
-        strategy="bucketed", bucket="1 hour", **kw,
-    ).toPandas()
+    sides = seq_fixtures["probes"], seq_fixtures["seq_events"]
+    u = run_asof("union", *sides, **kw).toPandas()
+    b = run_asof("bucketed", *sides, bucket="1 hour", **kw).toPandas()
     assert_frames_allclose(u, b)
 
 
@@ -103,9 +109,9 @@ def test_asof_last_row_not_last_nonnull(spark):
     probes = spark.createDataFrame(
         pd.DataFrame({"k": ["a"], "ts": pd.to_datetime(["2024-01-01 02:00:00"])})
     )
-    for strategy in ("union", "merge", "bucketed"):
-        row = asof_join(probes, state, on="k", strategy=strategy).collect()[0]
-        assert row["v"] is None, strategy
+    for path in PATHS:
+        row = run_asof(path, probes, state, on="k").collect()[0]
+        assert row["v"] is None, path
 
 
 def test_asof_no_state_entity_yields_nulls(spark):
@@ -117,12 +123,9 @@ def test_asof_no_state_entity_yields_nulls(spark):
     probes = spark.createDataFrame(
         pd.DataFrame({"k": ["a", "b"], "ts": pd.to_datetime(["2024-06-01"] * 2)})
     )
-    for strategy in ("union", "merge", "bucketed"):
-        got = {
-            r["k"]: r["v"]
-            for r in asof_join(probes, state, on="k", strategy=strategy).collect()
-        }
-        assert got["a"] == 5.0 and got["b"] is None, strategy
+    for path in PATHS:
+        got = {r["k"]: r["v"] for r in run_asof(path, probes, state, on="k").collect()}
+        assert got["a"] == 5.0 and got["b"] is None, path
 
 
 def test_asof_include_state_ts(seq_fixtures):

@@ -181,12 +181,12 @@ def test_plan_lowering_routes_through_fused(sides):
         n_exchanges(hybrid), n_exchanges(direct))
 
 
-def flagship_plan(probes, ev, **asof_kw):
+def flagship_plan(probes, ev):
     from engine.plan import FeatureEngine
 
     return (
         FeatureEngine(probes, entity="doc_id", ts="asof_ts")
-        .asof(ev, values=["fvalue", "fcat"], suffix="_last", **asof_kw)
+        .asof(ev, values=["fvalue", "fcat"], suffix="_last")
         .lag(["fvalue_last"], lags=[1, 2])
         .sessionize(GAP)
         .rolling({"fvalue_last": ["count", "sum", "avg"]}, WIN, method="prefix")
@@ -235,22 +235,6 @@ def test_no_hot_key_chain_is_one_exchange_one_sort(parquet_sides, path):
     assert f"RangeFrame, unboundedpreceding$(), -{cutoff})" in p, p
     assert not re.search(r"RangeFrame, -\d+, currentrow\$\(\)", p), p
     assert_equal(reference_chain(probes, ev), df)
-
-
-@pytest.mark.parametrize("strategy", ["merge", "bucketed"])
-def test_lowering_honours_named_asof_strategy(parquet_sides, strategy):
-    """A plan that names a physical as-of strategy keeps it when there are
-    no hot keys: it lowers plainly (that strategy's plan, so more than the
-    fused chain's one sort), and its rows still equal the composition.
-    ``strategy="union"`` is the default and fuses."""
-    probes, ev = parquet_sides
-    named = flagship_plan(probes, ev, strategy=strategy).to_df()
-    _, n_sort, _, _, p = plan_ops(named)
-    marker = {"merge": "FlatMapCoGroupsInPandas", "bucketed": "__afg_bucket"}
-    assert marker[strategy] in p and n_sort > 1, p
-    assert "__afg_bucket" not in plan_ops(flagship_plan(probes, ev).to_df())[4]
-    assert plan_ops(flagship_plan(probes, ev, strategy="union").to_df())[1] == 1
-    assert_equal(reference_chain(probes, ev), named)
 
 
 def test_plan_lowering_fused_fallback_on_leads(sides):

@@ -73,6 +73,35 @@ def test_plan_unknown_op_raises(spark, sf_dir):
         lower(probes, bad)
 
 
+@pytest.mark.parametrize("path", ["fused", "plain", "from_dict"])
+def test_plan_unknown_param_raises(spark, sf_dir, path):
+    """A misspelt or stale step param is an error, not a silent default:
+    ``stict=True`` would otherwise run the inclusive as-of (a same-timestamp
+    label leak)."""
+    from engine.plan import _fused_split
+
+    probes, state = _probe_state(spark, sf_dir)
+    eng = FeatureEngine(probes, entity="user_id", ts="ts")
+    if path == "fused":
+        eng.asof(state, values=["value"], stict=True).sessionize("30 minutes")
+        assert _fused_split(eng.plan) is not None
+        key = "stict"
+    elif path == "plain":
+        eng.asof(state, values=["value"], strategy="merge").lag(["value"], leads=[1])
+        assert _fused_split(eng.plan) is None
+        key = "strategy"
+    else:
+        d = eng.asof(state, values=["value"]).plan.to_dict()
+        d["steps"][0]["params"]["bucket"] = "6 hours"
+        with pytest.raises(ValueError, match="'asof'.*'bucket'"):
+            FeaturePlan.from_dict(d)
+        return
+    with pytest.raises(ValueError, match=f"'asof'.*'{key}'"):
+        eng.to_df(hot_keys=[0, 1])
+    with pytest.raises(ValueError, match=f"'asof'.*'{key}'"):
+        eng.to_df()
+
+
 # ------------------------------------------------------------- streaming ----
 
 def test_session_window_agg_batch_matches_gap_sessionize(spark, sf_dir):
