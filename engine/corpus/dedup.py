@@ -30,6 +30,8 @@ Scale design (10^12 docs):
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -37,6 +39,11 @@ from engine.cache import tracked_persist
 from engine.corpus.text import shingles, words
 
 MINHASH_K = 16
+# simhash_near_pairs routes at most this many hot buckets to the salted
+# self-join (the routing list is collected to the driver)
+_HOT_CAP = 100_000
+
+_log = logging.getLogger(__name__)
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -343,7 +350,6 @@ def simhash_near_pairs(
     # NOTE: this groupBy+collect is an EAGER Spark job at DataFrame-
     # construction time (hot-bucket routing is input metadata, like table
     # stats) — callers building this frame in a loop should hoist it.
-    _HOT_CAP = 100_000
     hot_rows = (
         b.groupBy(*join_keys)
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -356,13 +362,10 @@ def simhash_near_pairs(
         # no-silent-caps convention: buckets beyond the cap stay on the
         # single-task equi-join path — exactly the anti-scaling this split
         # exists to fix — so say so instead of silently truncating.
-        import sys
-
-        print(
-            f"simhash_near_pairs: hot-bucket list truncated at {_HOT_CAP}; "
-            f"excess hot buckets fall back to the plain equi-join "
-            f"(raise hot_bucket_rows or shard the input)",
-            file=sys.stderr,
+        _log.warning(
+            "simhash_near_pairs: hot-bucket list truncated at %d; excess hot "
+            "buckets fall back to the plain equi-join (raise hot_bucket_rows "
+            "or shard the input)", _HOT_CAP,
         )
         hot_rows = hot_rows[:_HOT_CAP]
     if hot_rows:

@@ -30,7 +30,6 @@ from engine.asof import asof_join
 from engine.transforms.row import apply_row_features
 from engine.transforms.table import agg_features
 from engine.window_ops import (
-    PREFIX_AGGS,
     backward_fill,
     cumulative_stats,
     forward_fill,
@@ -185,13 +184,15 @@ def _fused_split(plan: "FeaturePlan"):
     then lowers plainly).
 
     Disqualifiers: ``lag`` with leads (the fused carry tails are
-    backward-only), non-decomposable rolling aggs (min/max need the frame
-    method), any trailing window-family step (it would reintroduce the
-    per-entity skew the fusion just removed), a second ``ffill`` step, or
-    ffill/lag/rolling reading a column the chain itself produces (the fused
-    windows read only probe and as-of columns). ``ffill`` is
-    order-neutral: it fills independent columns, so it may sit anywhere
-    after the asof step."""
+    backward-only), a rolling step whose ``method`` is not ``"prefix"``
+    (the fused chain computes the prefix decomposition, whose float sums
+    differ from the sliding frame's in the last bits, so a ``"frame"``
+    step keeps its bit-exact plain lowering), any trailing window-family
+    step (it would reintroduce the per-entity skew the fusion just
+    removed), a second ``ffill`` step, or ffill/lag/rolling reading a
+    column the chain itself produces (the fused windows read only probe
+    and as-of columns). ``ffill`` is order-neutral: it fills independent
+    columns, so it may sit anywhere after the asof step."""
     run, last, have_ffill = 0, -1, False
     for s in plan.steps:
         if s.op == "ffill" and run > 0 and not have_ffill:
@@ -228,10 +229,9 @@ def _fused_split(plan: "FeaturePlan"):
         elif s.op == "sessionize":
             kw.update(session_gap=p.get("gap", "30 minutes"))
         elif s.op == "rolling":
-            aggs = p["aggs"]
-            if not all(n in PREFIX_AGGS for ns in aggs.values() for n in ns):
+            if p.get("method", "frame") != "prefix":
                 return None
-            kw.update(rolling=aggs, rolling_window=p["window"])
+            kw.update(rolling=p["aggs"], rolling_window=p["window"])
     lag_cols, rolling = kw.get("lag_cols", []), kw.get("rolling", {})
     made = {f"{c}_lag{k}" for c in lag_cols for k in kw.get("lags", [])}
     made |= {c + kw["ffill_suffix"] for c in kw.get("ffill_cols", [])}

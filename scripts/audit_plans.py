@@ -429,6 +429,27 @@ def main() -> None:
         cc,
         max_exchanges=5,
     ))
+    # The O(log n) star-contraction fallback (algorithm="star"): one
+    # alternation is the unit its loop checkpoints, so its shape is the
+    # steady-state cost. Input: the canonical (u > v) edge set, as the loop
+    # holds it after its first checkpoint.
+    from engine.corpus.dedup import _star_round
+
+    star_edges = cc_edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
+    star = _star_round(_star_round(star_edges, large=True), large=False)
+    star_plan = plan_of(star)
+    assert "CartesianProduct" not in star_plan and "BroadcastNestedLoopJoin" not in star_plan, (
+        "star-contraction alternation degenerated to a cross join"
+    )
+    secs.append(section(
+        "Connected-components star alternation (large-star → small-star)",
+        "One alternation of `connected_components(algorithm=\"star\")`: each "
+        "step is a group-min keyed on `u` plus an equi-join back onto the "
+        "symmetrized (id, id) edge frame, then a `distinct`. Hard-asserted: "
+        "no cartesian/nested-loop join, bounded exchanges.",
+        star,
+        max_exchanges=5,
+    ))
     # r4 sampling/mixing (C16-C18): membership must be a per-row predicate
     # pipelined into the scan — hash_sample/stratified_sample get ZERO
     # exchanges; weighted_mix's only exchanges run on the |sources|-row

@@ -83,9 +83,7 @@ def main() -> None:
     hot_rows = seqs.where(hotwin.hot_predicate("doc_id", hot)).collect()
 
     def run(hot_keys, hot_rows_):
-        out, stats = bench.flagship_pipeline(
-            spark, root, strategy="hybrid", hot_keys=hot_keys, hot_rows=hot_rows_
-        )
+        out, stats = bench.flagship_pipeline(spark, root, hot_keys, hot_rows_)
         bench.materialize(out)
         bench.materialize(stats)
 

@@ -170,6 +170,37 @@ def test_simhash_pigeonhole_parameters(docs):
     assert key(base) == key(multi)
 
 
+def test_simhash_hot_bucket_cap_logs_and_keeps_pairs(spark, monkeypatch, caplog):
+    """Hot buckets beyond the routing cap fall back to the plain equi-join:
+    the cap says so in a warning on the module logger, and the pairs equal
+    the uncapped result."""
+    import logging
+
+    from engine.corpus import dedup
+
+    # ten identical signatures fill both blocks' 0-buckets (2 hot buckets at
+    # max_hamming=1: blocks = 2); the rest are spread out
+    rng = np.random.RandomState(3)
+    rows = [(i, 0) for i in range(10)] + [
+        (10 + i, int(v)) for i, v in enumerate(rng.randint(-2**62, 2**62, 20))
+    ]
+    sh = spark.createDataFrame(rows, "doc_id long, simhash long")
+
+    def pairs():
+        got = simhash_near_pairs(sh, max_hamming=1, hot_bucket_rows=10).toPandas()
+        return sorted(zip(got["id_a"], got["id_b"], got["hamming"]))
+
+    with caplog.at_level(logging.WARNING, logger="engine.corpus.dedup"):
+        uncapped = pairs()
+    assert not caplog.records
+    monkeypatch.setattr(dedup, "_HOT_CAP", 1)
+    with caplog.at_level(logging.WARNING, logger="engine.corpus.dedup"):
+        capped = pairs()
+    assert any("truncated at 1" in r.getMessage() for r in caplog.records)
+    assert capped == uncapped
+    assert len(uncapped) >= 45  # every pair of the ten identical signatures
+
+
 # ------------------------------------------------------------- similarity ----
 
 @pytest.fixture(scope="module")

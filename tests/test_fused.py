@@ -290,6 +290,42 @@ def test_plan_lowering_unfusable_lowers_plainly(sides, caplog):
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_plan_lowering_frame_rolling_is_bit_exact(sides, caplog):
+    """A rolling step with the default method='frame' does not fuse (the
+    fused chain computes the prefix decomposition): with or without hot
+    keys it lowers to exactly ``asof_join`` → ``rolling_aggregates(
+    method="frame")`` — bit-equal rows both ways, a sliding RANGE frame in
+    the plan — and with hot keys it logs that they were ignored."""
+    from engine.plan import FeatureEngine, _fused_split
+
+    probes, ev = sides
+    aggs = {"fvalue_last": ["sum", "avg", "stddev"]}
+
+    def build():
+        return (
+            FeatureEngine(probes, entity="doc_id", ts="asof_ts")
+            .asof(ev, values=["fvalue"], suffix="_last")
+            .rolling(aggs, WIN)
+        )
+
+    assert _fused_split(build().plan) is None
+    ref = rolling_aggregates(
+        asof_join(probes, ev, on="doc_id", probe_ts="asof_ts", state_ts="ts",
+                  values=["fvalue"], suffix="_last"),
+        "doc_id", "asof_ts", aggs, window=WIN, method="frame",
+    )
+    for hot in (None, [HOT]):
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger="engine.plan"):
+            df = build().to_df(hot_keys=hot, bucket="6 hours").select(*ref.columns)
+        assert df.exceptAll(ref).count() == 0
+        assert ref.exceptAll(df).count() == 0
+        p = plan_ops(df)[-1]
+        assert re.search(r"RangeFrame, -\d+, currentrow\$\(\)", p), p
+        ignored = any("hot_keys are ignored" in r.getMessage() for r in caplog.records)
+        assert ignored == bool(hot)
+
+
 def test_featuregen_plan_fuses(sides):
     """The production job's plan must keep matching the fused pattern, or
     its detected hot keys would silently stop being time-split."""
