@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import sys
 import time
@@ -42,6 +43,8 @@ EVENTS_PER_DOC = 8
 # at the per-query pin (r3 verdict task #6).
 SHUFFLE_WIDTH = 128
 SMALL_QUERY_WIDTH = 8
+# spark.local.dir under AFG_SHUFFLE_TMPFS=1 (the --scaling legs' default)
+SHUFFLE_TMPFS_DIR = "/dev/shm/afg_shuffle"
 
 
 def get_spark(cores: int) -> SparkSession:
@@ -101,8 +104,8 @@ def get_spark(cores: int) -> SparkSession:
         # bandwidth scales with executor count; the sandbox's one local disk
         # does not. Opt-in (A/B-measured) so the default stays the honest
         # single-disk config.
-        os.makedirs("/dev/shm/afg_shuffle", exist_ok=True)
-        builder = builder.config("spark.local.dir", "/dev/shm/afg_shuffle")
+        os.makedirs(SHUFFLE_TMPFS_DIR, exist_ok=True)
+        builder = builder.config("spark.local.dir", SHUFFLE_TMPFS_DIR)
     return builder.getOrCreate()
 
 
@@ -486,30 +489,34 @@ def run_scaling() -> None:
     n_lo = int(os.environ.get("AFG_SCALE_N", "4"))
     n_hi = 4 * n_lo
     res = {}
-    for cores in (n_lo, n_hi):
-        # Scaling legs default to tmpfs shuffle (overridable): on a real
-        # cluster, aggregate shuffle/spill bandwidth GROWS with executor
-        # count (each executor brings its own local NVMe), while this
-        # sandbox has ONE ~750 MB/s disk shared by both legs — with disk
-        # shuffle the 16-core leg saturates it and the measurement grades
-        # the disk, not the engine (measured: 0.655 eff on disk vs 0.75+
-        # on tmpfs for the identical plan). Absolute single-node numbers
-        # (BENCH_r{N}.json) keep the honest disk default.
-        env = {**os.environ}
-        env.setdefault("AFG_SHUFFLE_TMPFS", "1")
-        # 6 reps per leg (round-2 verdict #7): at ±30% sandbox variance the
-        # min of 4 made the efficiency gate a coin flip; the md records each
-        # leg's spread so the estimator's stability is auditable.
-        env.setdefault("AFG_FLAGSHIP_REPS", "6")
-        env["SPARK_GRAFT_CPUS"] = str(cores)
-        p = subprocess.run(
-            [sys.executable, here], env=env, capture_output=True, text=True,
-            # the local[1] envelope leg runs the full bench serially
-            # (~75 min at 8M docs / 6 reps) — far beyond the old 1 h cap
-            timeout=10800,
-        )
-        line = [l for l in p.stdout.strip().splitlines() if l.startswith("{")][-1]
-        res[cores] = json.loads(line)
+    try:
+        for cores in (n_lo, n_hi):
+            # Scaling legs default to tmpfs shuffle (overridable): on a real
+            # cluster, aggregate shuffle/spill bandwidth GROWS with executor
+            # count (each executor brings its own local NVMe), while this
+            # sandbox has ONE ~750 MB/s disk shared by both legs — with disk
+            # shuffle the 16-core leg saturates it and the measurement grades
+            # the disk, not the engine (measured: 0.655 eff on disk vs 0.75+
+            # on tmpfs for the identical plan). Absolute single-node numbers
+            # (BENCH_r{N}.json) keep the honest disk default.
+            env = {**os.environ}
+            env.setdefault("AFG_SHUFFLE_TMPFS", "1")
+            # 6 reps per leg (round-2 verdict #7): at ±30% sandbox variance the
+            # min of 4 made the efficiency gate a coin flip; the md records each
+            # leg's spread so the estimator's stability is auditable.
+            env.setdefault("AFG_FLAGSHIP_REPS", "6")
+            env["SPARK_GRAFT_CPUS"] = str(cores)
+            p = subprocess.run(
+                [sys.executable, here], env=env, capture_output=True, text=True,
+                # the local[1] envelope leg runs the full bench serially
+                # (~75 min at 8M docs / 6 reps) — far beyond the old 1 h cap
+                timeout=10800,
+            )
+            line = [l for l in p.stdout.strip().splitlines() if l.startswith("{")][-1]
+            res[cores] = json.loads(line)
+    finally:
+        # the legs' tmpfs shuffle dir holds RAM until removed
+        shutil.rmtree(SHUFFLE_TMPFS_DIR, ignore_errors=True)
     lo, hi = res[n_lo], res[n_hi]
     write_baseline_md(lo, hi, n_lo, n_hi)
     thr_lo = lo["sequences_per_sec_flagship"]

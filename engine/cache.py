@@ -21,7 +21,16 @@ engine-created blocks without touching user caches (unlike
     with cache.tracked():
         df = near_dup_jaccard(...)
         df.write.parquet(out)      # persists live while the job runs
-    # all operator-internal caches are dropped here
+    # the caches tracked inside the block are dropped here
+
+A ``tracked()`` block OWNS the frames its thread tracks inside it: a
+``release_all()`` inside the block releases only those, and one outside
+it never touches them. That is what lets pipelines that overlap in one
+process release independently: ``jobs/featuregen.py`` runs each chunk in
+its own block on a worker thread, and a chunk that finishes must not
+unpersist the frames another in-flight chunk still reads. Without any
+block, every frame has the same (no) owner and ``release_all()`` drops
+them all, as in a single-threaded driver.
 """
 
 from __future__ import annotations
@@ -32,8 +41,15 @@ import threading
 from pyspark.sql import DataFrame
 
 _LOCK = threading.Lock()
-_TRACKED: list[DataFrame] = []
-_CHECKPOINTED: list[DataFrame] = []
+# (frame, owner): the owner is the tracked() block open in the registering
+# thread, or None
+_TRACKED: list[tuple[DataFrame, object]] = []
+_CHECKPOINTED: list[tuple[DataFrame, object]] = []
+_SCOPE = threading.local()
+
+
+def _owner():
+    return getattr(_SCOPE, "owner", None)
 
 
 def tracked_persist(df: DataFrame, level=None) -> DataFrame:
@@ -41,7 +57,7 @@ def tracked_persist(df: DataFrame, level=None) -> DataFrame:
     optional pyspark StorageLevel (default MEMORY_AND_DISK as in persist)."""
     out = df.persist(level) if level is not None else df.persist()
     with _LOCK:
-        _TRACKED.append(out)
+        _TRACKED.append((out, _owner()))
     return out
 
 
@@ -67,19 +83,28 @@ def chain_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     can reclaim them at the pipeline barrier."""
     out = df.localCheckpoint(eager=eager)
     with _LOCK:
-        _CHECKPOINTED.append(out)
+        _CHECKPOINTED.append((out, _owner()))
     return out
 
 
+def _take(registry: list, owner) -> list:
+    mine = [df for df, o in registry if o is owner]
+    registry[:] = [(df, o) for df, o in registry if o is not owner]
+    return mine
+
+
 def release_all() -> int:
-    """Unpersist every engine-tracked frame (blocking=False: executors drop
-    blocks asynchronously, the driver does not wait) and drop references to
-    chain-checkpointed frames (their blocks are reclaimed by Spark's
-    ContextCleaner once unreferenced). Returns the number of frames
-    released. Safe to call with a stopped SparkContext."""
+    """Unpersist every engine-tracked frame of the caller's owner — the
+    ``tracked()`` block open in this thread, else the frames tracked outside
+    any block — (blocking=False: executors drop blocks asynchronously, the
+    driver does not wait) and drop references to its chain-checkpointed
+    frames (their blocks are reclaimed by Spark's ContextCleaner once
+    unreferenced). Returns the number of frames released. Safe to call with
+    a stopped SparkContext."""
+    owner = _owner()
     with _LOCK:
-        frames, _TRACKED[:] = _TRACKED[:], []
-        ckpts, _CHECKPOINTED[:] = _CHECKPOINTED[:], []
+        frames = _take(_TRACKED, owner)
+        ckpts = _take(_CHECKPOINTED, owner)
     n = len(ckpts)
     del ckpts
     for df in frames:
@@ -98,10 +123,15 @@ def tracked_count() -> int:
 
 @contextlib.contextmanager
 def tracked():
-    """Scope operator-internal caches to a block (release on exit, even on
-    error). Nesting releases everything registered since process start or
-    the last release — acceptable for the engine's single-pipeline jobs."""
+    """Scope operator-internal caches to a block: the frames this thread
+    tracks inside it are the block's own, released on exit (even on error).
+    A nested block owns its frames apart from the enclosing one's."""
+    outer = _owner()
+    _SCOPE.owner = object()
     try:
         yield
     finally:
-        release_all()
+        try:
+            release_all()
+        finally:
+            _SCOPE.owner = outer

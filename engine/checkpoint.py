@@ -38,6 +38,26 @@ def with_partition_id(df: DataFrame, entity: str, num_partitions: int) -> DataFr
     )
 
 
+def footer_rows(directory: str) -> int:
+    """Row count of the parquet files under ``directory`` (walked, so nested
+    partition directories count too), from their footers: no Spark job,
+    no data page decoded. Entries Spark's reader skips are skipped: names
+    starting with ``.``, or with ``_`` unless they are a ``col=value``
+    partition directory (``__pid=3``)."""
+    import pyarrow.parquet as pq
+
+    def hidden(name):
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    n = 0
+    for root, dirs, files in os.walk(directory):
+        dirs[:] = [d for d in dirs if not hidden(d)]
+        for f in files:
+            if f.endswith(".parquet") and not hidden(f):
+                n += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+    return n
+
+
 def write_json_atomic(path: str, obj) -> None:
     """Write ``obj`` as JSON to ``path`` atomically: a tmp file in the same
     directory, then a rename (POSIX rename is atomic), so a reader sees the
@@ -138,23 +158,21 @@ class ParquetJournalTableIO:
             .parquet(self.data_dir)
         )
 
+    def clear_staging(self) -> None:
+        """Delete the ``.spark-staging-*`` directories that a dynamic
+        overwrite killed before its commit left in ``data/``. Call it at job
+        start, before any write: a running write keeps its files there."""
+        import shutil
+
+        for d in os.listdir(self.data_dir):
+            if d.startswith(".spark-staging-"):
+                shutil.rmtree(os.path.join(self.data_dir, d), ignore_errors=True)
+
     def count_rows(self, pids: list[int]) -> dict[int, int]:
         """Per-pid row counts from parquet footer metadata — no Spark job,
         no second evaluation of the chunk DAG."""
-        import pyarrow.parquet as pq
-
-        out: dict[int, int] = {}
-        for pid in pids:
-            pdir = os.path.join(self.data_dir, f"{PID_COL}={pid}")
-            n = 0
-            if os.path.isdir(pdir):
-                # walk: files may sit under nested extra_partition_cols dirs
-                for root, _dirs, files in os.walk(pdir):
-                    for f in files:
-                        if f.endswith(".parquet"):
-                            n += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-            out[pid] = n
-        return out
+        return {pid: footer_rows(os.path.join(self.data_dir, f"{PID_COL}={pid}"))
+                for pid in pids}
 
     def read_all(self, spark: SparkSession, committed_only: bool = True) -> DataFrame:
         df = spark.read.parquet(self.data_dir)
@@ -209,6 +227,9 @@ class IcebergTableIO:
             w = w.option("snapshot-property.afg.lineage", json.dumps(lineage))
         w.overwritePartitions()
 
+    def clear_staging(self) -> None:
+        """Nothing to clear: a failed attempt never commits a snapshot."""
+
     def commit_partition(self, pid: int, lineage: dict, metrics: dict) -> None:
         rec = self.spark.createDataFrame(
             [(pid, json.dumps(lineage), json.dumps(metrics))],
@@ -257,25 +278,43 @@ class CheckpointManager:
         return [p for p in range(self.num_partitions) if p not in done]
 
     def run_chunk(self, pids: list[int], df_for_pids: DataFrame, lineage: dict) -> dict:
-        """Materialize one chunk and journal each pid with throughput metrics.
+        """Materialize one chunk and journal each pid with throughput metrics:
+        :meth:`write_chunk`, then :meth:`journal_chunk`."""
+        return self.journal_chunk(self.write_chunk(pids, df_for_pids, lineage))
 
-        One evaluation of the chunk DAG (the write); per-pid row counts come
-        from the written parquet footers, not a second count job."""
+    def write_chunk(self, pids: list[int], df_for_pids: DataFrame, lineage: dict) -> dict:
+        """The write-and-count half of :meth:`run_chunk`: one evaluation of
+        the chunk DAG (the write), then per-pid row counts from the written
+        parquet footers, not a second count job. Nothing is committed yet:
+        a pid written here but never journaled is orphan data, which the
+        next write of that pid deletes. Safe to run for two chunks at once
+        (disjoint pids, dynamic overwrite). Returns what
+        :meth:`journal_chunk` needs."""
         t0 = time.time()
         self.io.write_partitions(df_for_pids, pids=pids, lineage=lineage)
         wall = time.time() - t0
-        counts = self.io.count_rows(pids)
-        total = sum(counts.values()) or 1
-        for pid in pids:
+        return {"pids": list(pids), "lineage": lineage, "wall_s": wall,
+                "counts": self.io.count_rows(pids)}
+
+    def journal_chunk(self, written: dict) -> dict:
+        """The journal half of :meth:`run_chunk`: commit each pid of a
+        :meth:`write_chunk` result, with its metrics. ``chunk_wall_s`` is
+        the wall time of the chunk's write (its Spark job and commit). When
+        chunks are written concurrently their walls overlap: it is the
+        chunk's latency, and its sum over chunks overstates the job's wall
+        time (and ``rows_per_s`` understates the job's throughput)."""
+        counts, wall = written["counts"], written["wall_s"]
+        total = sum(counts.values())
+        for pid in written["pids"]:
             rows = counts.get(pid, 0)
             self.io.commit_partition(
                 pid,
-                lineage=lineage,
+                lineage=written["lineage"],
                 metrics={
                     "rows_out": rows,
                     "chunk_wall_s": round(wall, 3),
                     "rows_per_s": round(rows / wall, 1) if wall > 0 else None,
-                    "chunk_share_rows_per_s": round(total / wall, 1),
+                    "chunk_share_rows_per_s": round(total / wall, 1) if wall > 0 else None,
                 },
             )
         return {"rows": total, "wall_s": wall}

@@ -5,8 +5,9 @@ benched).  Same materialized corpus, same pipeline, two sinks:
   straight — flagship pipeline once, single hive-partitioned write
              (the bench.py flagship_compute + flagship_write_io shape)
   chunked  — the jobs/featuregen.py shape: P hash-partitions committed
-             atomically in chunks through CheckpointManager (per-chunk
-             pipeline build, journal write, cache.release_all barrier)
+             atomically in chunks by the job's own chunk loop
+             (``featuregen.run_chunks``: per-chunk pipeline build and
+             write, two chunks in flight, journal in chunk order)
 
 Usage:
 
@@ -31,9 +32,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 from engine import cache
-from engine.checkpoint import PID_COL, CheckpointManager, ParquetJournalTableIO, with_partition_id
+from engine.checkpoint import CheckpointManager, ParquetJournalTableIO, with_partition_id
 from engine.io import write_partitioned
-from jobs.featuregen import build_features, chunk_scan, group_by_chunk, stage_inputs
+from jobs.featuregen import build_features, run_chunks, stage_inputs
 
 
 def main() -> None:
@@ -88,13 +89,10 @@ def main() -> None:
     lineage = {"inputs": {"corpus": root}, "params": {"partitions": partitions}}
 
     def chunked_loop(out_name, pp, ss):
-        io = ParquetJournalTableIO(os.path.join(out_root, out_name))
-        mgr = CheckpointManager(io, partitions)
-        for c, chunk in group_by_chunk(mgr.pending(), chunk_size).items():
-            cp = chunk_scan(pp, c, chunk)
-            cs = chunk_scan(ss, c, chunk).drop(PID_COL)
-            mgr.run_chunk(chunk, build(cp, cs), lineage)
-            cache.release_all()
+        mgr = CheckpointManager(ParquetJournalTableIO(os.path.join(out_root, out_name)),
+                                partitions)
+        for _ in run_chunks(mgr, pp, ss, chunk_size, lambda p, s: (build(p, s), lineage)):
+            pass
 
     t0 = time.time()
     chunked_loop("chunked", probes_p, state_p)

@@ -70,7 +70,7 @@ def oracle_rolling(
                 out[i] = np.nanmean(vals) if ok.any() else np.nan
         return pd.Series(out, index=g.index)
 
-    return df.groupby(key, group_keys=False).apply(per_group)
+    return df.groupby(key, group_keys=False)[[ts, col]].apply(per_group)
 
 
 def sorted_frame(pdf: pd.DataFrame) -> pd.DataFrame:

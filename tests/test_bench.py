@@ -4,6 +4,9 @@ legs' payloads and the dated records in BENCH/envelope.json — no Spark."""
 import json
 import os
 import re
+import subprocess
+
+import pytest
 
 import bench
 
@@ -35,3 +38,36 @@ def test_write_baseline_md_renders_committed_payloads(tmp_path, monkeypatch):
     assert md.rstrip().endswith(json.dumps(hi))
     with open(BASELINE, "rb") as fh:
         assert fh.read() == committed
+
+
+def _fake_leg(created, fail_at=None):
+    """A stand-in for the ``subprocess.run`` of one scaling leg: it creates
+    the tmpfs shuffle dir, as the leg's session would, and prints a payload."""
+    def run(cmd, env, **kw):
+        os.makedirs(bench.SHUFFLE_TMPFS_DIR, exist_ok=True)
+        created.append(env["SPARK_GRAFT_CPUS"])
+        if env["SPARK_GRAFT_CPUS"] == fail_at:
+            raise subprocess.TimeoutExpired(cmd, 1)
+        payload = {"sequences_per_sec_flagship": 100.0 * int(env["SPARK_GRAFT_CPUS"])}
+        return subprocess.CompletedProcess(cmd, 0, stdout=json.dumps(payload) + "\n")
+    return run
+
+
+def test_scaling_removes_its_tmpfs_shuffle_dir(tmp_path, monkeypatch):
+    """``--scaling`` removes the tmpfs shuffle dir its legs create, also
+    when a leg fails."""
+    monkeypatch.setattr(bench, "SHUFFLE_TMPFS_DIR", str(tmp_path / "afg_shuffle"))
+    monkeypatch.setattr(bench, "write_baseline_md", lambda *a: None)
+    monkeypatch.setenv("AFG_SCALE_N", "1")
+    created = []
+    monkeypatch.setattr(subprocess, "run", _fake_leg(created))
+    bench.run_scaling()
+    assert created == ["1", "4"]
+    assert not os.path.exists(bench.SHUFFLE_TMPFS_DIR)
+
+    created.clear()
+    monkeypatch.setattr(subprocess, "run", _fake_leg(created, fail_at="4"))
+    with pytest.raises(subprocess.TimeoutExpired):
+        bench.run_scaling()
+    assert created == ["1", "4"]
+    assert not os.path.exists(bench.SHUFFLE_TMPFS_DIR)

@@ -4,9 +4,11 @@ partitions were NOT recomputed (journal records untouched)."""
 
 import glob
 import json
+import logging
 import os
 import subprocess
 import sys
+import threading
 
 import pandas as pd
 import pytest
@@ -29,6 +31,11 @@ def _read_output(spark, outdir):
 
 @pytest.mark.slow
 def test_resume_without_recompute(spark, tmp_path):
+    """Four chunks, killed right after the first is journaled: exactly its
+    pids are committed, while the chunk then in flight may have written
+    pid directories or a ``.spark-staging-*`` directory. The resume
+    deletes both, recomputes only the pending pids, and its output equals
+    a clean run's."""
     clean = str(tmp_path / "clean")
     faulty = str(tmp_path / "faulty")
 
@@ -36,18 +43,31 @@ def test_resume_without_recompute(spark, tmp_path):
     assert r.returncode == 0, r.stdout + r.stderr
     assert "SUMMARY" in r.stdout
 
-    r1 = _run(faulty, "--kill-after-chunks", "1")
+    r1 = _run(faulty, "--chunk-size", "2", "--kill-after-chunks", "1")
     assert r1.returncode == 42, r1.stdout + r1.stderr
     journal = os.path.join(faulty, "_journal")
     committed_after_kill = sorted(os.listdir(journal))
-    assert len(committed_after_kill) == 4  # one chunk of 4 pids
+    assert committed_after_kill == ["pid-000000.json", "pid-000001.json"]  # chunk 0
     mtimes = {f: os.path.getmtime(os.path.join(journal, f)) for f in committed_after_kill}
+    # what a write cut off before its commit leaves, in case the kill fell
+    # between two writes
+    data = os.path.join(faulty, "data")
+    planted = os.path.join(data, ".spark-staging-killed", "__pid=7")
+    os.makedirs(planted)
+    open(os.path.join(planted, "part-0.parquet"), "w").close()
+    left_over = {
+        os.path.join(root, f) for d in os.listdir(data) if d not in ("__pid=0", "__pid=1")
+        for root, _, fs in os.walk(os.path.join(data, d)) for f in fs
+    }
 
-    r2 = _run(faulty)
+    r2 = _run(faulty, "--chunk-size", "2")
     assert r2.returncode == 0, r2.stdout + r2.stderr
-    assert "pending=4 committed=4" in r2.stdout
+    assert "pending=6 committed=2" in r2.stdout
     for f, m in mtimes.items():
         assert os.path.getmtime(os.path.join(journal, f)) == m, f"{f} recomputed"
+    assert not glob.glob(os.path.join(data, ".spark-staging-*"))
+    now = {os.path.join(root, f) for root, _, fs in os.walk(data) for f in fs}
+    assert not left_over & now
 
     a = _read_output(spark, clean)
     b = _read_output(spark, faulty)
@@ -257,3 +277,127 @@ def test_rerun_of_finished_job_writes_nothing(spark, sf_dir, tmp_path, capsys):
     assert "pending=0 committed=4" in capsys.readouterr().out
     assert {f: os.path.getmtime(f) for f in mtimes} == mtimes
     assert sorted(os.path.join(root, f) for root, _, fs in os.walk(out) for f in fs) == sorted(mtimes)
+
+
+def _featuregen(sf_dir, out, *extra):
+    from jobs import featuregen
+
+    return featuregen.main(["--input", sf_dir, "--output", out, "--partitions", "8",
+                            "--parallelism", "8", *extra])
+
+
+def test_chunks_journal_in_chunk_order(spark, sf_dir, tmp_path, monkeypatch):
+    """Two chunks are written at once, and the journal still commits them
+    in chunk order: chunk 0's write is held until chunk 1's has finished,
+    yet chunk 0's pids are journaled first."""
+    from engine.checkpoint import CheckpointManager, ParquetJournalTableIO
+    from jobs import featuregen
+
+    write_chunk, commit = CheckpointManager.write_chunk, ParquetJournalTableIO.commit_partition
+    chunk1_written = threading.Event()
+    lock = threading.Lock()
+    running, peak, written, journaled = [0], [0], [], []
+
+    def held_write(mgr, pids, df, lineage):
+        with lock:
+            running[0] += 1
+            peak[0] = max(peak[0], running[0])
+        try:
+            if 0 in pids:
+                assert chunk1_written.wait(120), "chunk 1 was not in flight with chunk 0"
+            return write_chunk(mgr, pids, df, lineage)
+        finally:
+            with lock:
+                running[0] -= 1
+                written.append(pids[0] // 2)
+            if 2 in pids:
+                chunk1_written.set()
+
+    def record(io, pid, lineage, metrics):
+        journaled.append(pid)
+        return commit(io, pid, lineage, metrics)
+
+    monkeypatch.setattr(CheckpointManager, "write_chunk", held_write)
+    monkeypatch.setattr(ParquetJournalTableIO, "commit_partition", record)
+    assert _featuregen(sf_dir, str(tmp_path / "out"), "--chunk-size", "2") == 0
+    assert written[:2] == [1, 0]
+    assert peak[0] == featuregen.IN_FLIGHT
+    assert journaled == list(range(8))
+
+
+def test_hot_key_pipeline_equals_one_chunk_run(spark, sf_dir, tmp_path, monkeypatch):
+    """With hot keys routed, every chunk persists frames of the fused
+    chain. Four chunks two at a time write exactly the rows of one chunk
+    of all pids, and every chunk releases its frames."""
+    from pyspark.sql import functions as F
+
+    from engine import cache, skew
+    from engine.checkpoint import CheckpointManager
+    from engine.io import read_table
+
+    e = read_table(spark, sf_dir, "events")
+    hot = [r["user_id"] for r in e.groupBy("user_id").count()
+           .orderBy(F.desc("count"), "user_id").limit(2).collect()]
+    monkeypatch.setattr(skew, "straggler_hot_keys", lambda *a, **k: hot)
+    write_chunk = CheckpointManager.write_chunk
+    tracked = []
+
+    def counting_write(mgr, *a):
+        out = write_chunk(mgr, *a)
+        tracked.append(cache.tracked_count())
+        return out
+
+    monkeypatch.setattr(CheckpointManager, "write_chunk", counting_write)
+    cache.release_all()
+    outs = {}
+    for chunk_size in (2, 8):
+        out = str(tmp_path / f"chunk{chunk_size}")
+        assert _featuregen(sf_dir, out, "--chunk-size", str(chunk_size)) == 0
+        outs[chunk_size] = _read_output(spark, out)
+        with open(os.path.join(out, "_journal", "pid-000000.json")) as fh:
+            assert json.load(fh)["lineage"]["params"]["n_hot_keys"] == 2
+    assert min(tracked) > 0
+    assert cache.tracked_count() == 0
+    pd.testing.assert_frame_equal(outs[2], outs[8])
+
+
+def test_hot_key_decision_logs_the_staged_row_count(spark, sf_dir, tmp_path, monkeypatch,
+                                                    caplog):
+    """The staged input's parquet footers count probes ∪ state exactly, and
+    no Spark job runs between staging and the hot-key decision. The
+    decision is one ``jobs.featuregen`` log record; with
+    ``--no-stage-input`` its row count comes from ``count()``."""
+    from engine import skew
+    from engine.io import read_table
+    from jobs import featuregen
+
+    sc = spark.sparkContext
+    stage, detect = featuregen.stage_inputs, skew.straggler_hot_keys
+    jobs_between = []
+
+    def staged(*a, **k):
+        out = stage(*a, **k)
+        sc.setJobGroup("after-staging", "after-staging")
+        return out
+
+    def hot_keys(*a, **k):
+        jobs_between.append(list(sc.statusTracker().getJobIdsForGroup("after-staging")))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        return detect(*a, **k)
+
+    monkeypatch.setattr(featuregen, "stage_inputs", staged)
+    monkeypatch.setattr(skew, "straggler_hot_keys", hot_keys)
+    caplog.set_level(logging.INFO, logger="jobs.featuregen")
+    n = read_table(spark, sf_dir, "events").count()  # probes ∪ state
+    cores = sc.defaultParallelism
+    for extra, rows_from in (((), "staged_footers"), (("--no-stage-input",), "count")):
+        caplog.clear()
+        try:
+            assert _featuregen(sf_dir, str(tmp_path / rows_from), "--chunk-size", "8",
+                               *extra) == 0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        [rec] = [r for r in caplog.records if r.name == "jobs.featuregen"]
+        assert rec.hot_keys == {"total_rows": n, "rows_from": rows_from, "cores": cores,
+                                "threshold": skew.straggler_threshold(n, cores), "routed": 0}
+    assert jobs_between[0] == []  # the staged run
