@@ -111,7 +111,7 @@ class ParquetJournalTableIO:
         )
 
     # -- data -------------------------------------------------------------
-    def write_partitions(self, df: DataFrame, pids=None, lineage=None) -> None:
+    def write_partitions(self, df: DataFrame, pids: list[int], lineage: dict) -> None:
         """Write output for a batch of pids, directory-per-pid layout.
 
         The rows are rebalanced on the partition columns (``__pid`` plus
@@ -138,18 +138,18 @@ class ParquetJournalTableIO:
         write never touches that pid's directory and a crashed attempt's
         orphan files would survive — then journaling the pid would turn them
         into phantom committed rows. Every chunk pid is UNcommitted by
-        construction (run_chunk only gets pending pids), so any existing
+        construction (write_chunk only gets pending pids), so any existing
         directory for one is orphan data: delete them up front.
         (IcebergTableIO has no such gap — a failed attempt never commits a
-        snapshot, so its data files are invisible by design.)"""
-        if pids is not None:
-            import shutil
+        snapshot, so its data files are invisible by design.) ``lineage``
+        rides in the journal here, not in the data write."""
+        import shutil
 
-            committed = self.committed_partitions()
-            for pid in pids:
-                pdir = os.path.join(self.data_dir, f"{PID_COL}={pid}")
-                if pid not in committed and os.path.isdir(pdir):
-                    shutil.rmtree(pdir)
+        committed = self.committed_partitions()
+        for pid in pids:
+            pdir = os.path.join(self.data_dir, f"{PID_COL}={pid}")
+            if pid not in committed and os.path.isdir(pdir):
+                shutil.rmtree(pdir)
         (
             df.hint("rebalance", PID_COL, *self.extra_partition_cols)
             .write.mode("overwrite")
@@ -174,12 +174,10 @@ class ParquetJournalTableIO:
         return {pid: footer_rows(os.path.join(self.data_dir, f"{PID_COL}={pid}"))
                 for pid in pids}
 
-    def read_all(self, spark: SparkSession, committed_only: bool = True) -> DataFrame:
-        df = spark.read.parquet(self.data_dir)
-        if committed_only:
-            pids = sorted(self.committed_partitions())
-            df = df.where(F.col(PID_COL).isin(pids))
-        return df
+    def read_all(self, spark: SparkSession) -> DataFrame:
+        """The committed pids' rows."""
+        pids = sorted(self.committed_partitions())
+        return spark.read.parquet(self.data_dir).where(F.col(PID_COL).isin(pids))
 
 
 class IcebergTableIO:
@@ -217,15 +215,15 @@ class IcebergTableIO:
                 out.update(int(p) for p in pids.split(","))
         return out
 
-    def write_partitions(self, df: DataFrame, pids=None, lineage=None) -> None:
-        w = df.writeTo(self.table)
-        if pids is not None:
-            w = w.option(
-                "snapshot-property.afg.partition_ids", ",".join(map(str, pids))
-            )
-        if lineage is not None:
-            w = w.option("snapshot-property.afg.lineage", json.dumps(lineage))
-        w.overwritePartitions()
+    def write_partitions(self, df: DataFrame, pids: list[int], lineage: dict) -> None:
+        """One snapshot; its ``afg.partition_ids`` property is what
+        :meth:`committed_partitions` reads back."""
+        (
+            df.writeTo(self.table)
+            .option("snapshot-property.afg.partition_ids", ",".join(map(str, pids)))
+            .option("snapshot-property.afg.lineage", json.dumps(lineage))
+            .overwritePartitions()
+        )
 
     def clear_staging(self) -> None:
         """Nothing to clear: a failed attempt never commits a snapshot."""
@@ -259,11 +257,10 @@ class IcebergTableIO:
             for r in rows
         ]
 
-    def read_all(self, spark, committed_only: bool = True) -> DataFrame:
-        df = spark.read.table(self.table)
-        if committed_only:
-            df = df.where(F.col(PID_COL).isin(sorted(self.committed_partitions())))
-        return df
+    def read_all(self, spark) -> DataFrame:
+        """The committed pids' rows."""
+        pids = sorted(self.committed_partitions())
+        return spark.read.table(self.table).where(F.col(PID_COL).isin(pids))
 
 
 class CheckpointManager:
@@ -279,7 +276,10 @@ class CheckpointManager:
 
     def run_chunk(self, pids: list[int], df_for_pids: DataFrame, lineage: dict) -> dict:
         """Materialize one chunk and journal each pid with throughput metrics:
-        :meth:`write_chunk`, then :meth:`journal_chunk`."""
+        :meth:`write_chunk`, then :meth:`journal_chunk`. The job pipelines
+        those two halves itself (``jobs.featuregen.run_chunks``); this is
+        their serial form, which tests drive directly and perfbench's
+        tracer patches by name."""
         return self.journal_chunk(self.write_chunk(pids, df_for_pids, lineage))
 
     def write_chunk(self, pids: list[int], df_for_pids: DataFrame, lineage: dict) -> dict:

@@ -10,6 +10,12 @@ sessionize + trailing aggregates) per stable hash-partition of the entity key,
 committing each partition atomically with lineage + throughput metrics.
 A killed run resumes: committed partitions are skipped without recomputation.
 
+The input is staged once, partitioned by chunk (:func:`stage_inputs`), and
+every chunk scans the staged table. Unstaged, the chunk filter would be a
+predicate on a computed hash column, so every chunk would re-scan the whole
+input. The staged table's parquet footers also give the row count that
+hot-key detection needs, so no Spark job counts the input.
+
 The chunks are pipelined (:func:`run_chunks`): at most ``IN_FLIGHT`` chunk
 jobs run at once, each on a worker thread that builds the chunk's plan,
 writes it and reads its footer row counts, while the main thread journals
@@ -90,11 +96,12 @@ LAYOUT_FILE = "_LAYOUT.json"
 def stage_inputs(spark, probes_p, state_p, stage_dir, chunk_size, partitions):
     """Write the pid-tagged inputs ONCE, partitioned by chunk, so each
     chunk's scan partition-prunes to its own rows instead of re-decoding
-    the full input. Without staging, the chunk filter is a predicate on a
-    COMPUTED hash column — nothing for the reader to prune — so a
-    P/chunk_size-chunk run pays P/chunk_size full input scans (measured:
-    63% overhead at 8M docs / 4 chunks; staged overhead in the same
-    record, BENCH/BASELINE.md).
+    the full input. This is the job's only input path: on the unstaged
+    frames the chunk filter would be a predicate on a COMPUTED hash
+    column — nothing for the reader to prune — so a P/chunk_size-chunk
+    run would pay P/chunk_size full input scans (dated record, 8M docs,
+    4 chunks, local[16]: 40.0% checkpoint overhead unstaged, 30.6%
+    staged; BENCH/BASELINE.md).
 
     Probes and state are staged as ONE table, so staging is one exchange +
     write job. Its layout is the unit that reads it, the chunk: a
@@ -162,23 +169,24 @@ def group_by_chunk(pids, chunk_size):
 
 
 def chunk_scan(df, chunk_id, pids):
-    """The rows of one chunk's pending ``pids``. On a staged frame,
-    ``__chunk == chunk_id`` is a PartitionFilter that prunes the scan to
-    the chunk's directories, and ``__pid IN pids`` drops the pids of a
-    partly committed chunk; ``__chunk`` is dropped from the result.
+    """The rows of one chunk's pending ``pids`` in a staged frame
+    (:func:`stage_inputs`): ``__chunk == chunk_id`` is a PartitionFilter
+    that prunes the scan to the chunk's directories, and ``__pid IN pids``
+    drops the pids of a partly committed chunk; ``__chunk`` is dropped
+    from the result.
 
     The filter is one SQL expression, parsed in one py4j call (``isin``
     makes several calls per pid: 184 per scan at 16 pids)."""
-    cond = f"{PID_COL} IN ({', '.join(str(int(p)) for p in pids)})"
-    if CHUNK_COL in df.columns:
-        cond = f"{CHUNK_COL} = {int(chunk_id)} AND {cond}"
+    pid_list = ", ".join(str(int(p)) for p in pids)
+    cond = f"{CHUNK_COL} = {int(chunk_id)} AND {PID_COL} IN ({pid_list})"
     return df.where(F.expr(cond)).drop(CHUNK_COL)
 
 
 def run_chunks(mgr, probes_p, state_p, chunk_size, build):
     """The job's chunk loop over ``mgr``'s pending pids, pipelined: at most
     ``IN_FLIGHT`` chunk jobs at once. A worker thread scans the chunk's
-    rows, calls ``build(probes, state) -> (features, lineage)``, writes the
+    rows from the staged frames (``probes_p``, ``state_p``, as
+    :func:`stage_inputs` returns them), calls ``build(probes, state) -> (features, lineage)``, writes the
     features and reads their footer counts (``CheckpointManager.
     write_chunk``) inside its own ``cache.tracked()`` block, so it releases
     exactly the frames its chunk persisted. This generator journals the
@@ -226,15 +234,6 @@ def main(argv=None):
     ap.add_argument("--output-partition-by", nargs="*", default=[],
                     help="extra hive-partition columns under the pid layout "
                          "(P4 pruning for downstream readers), e.g. source")
-    ap.add_argument("--stage-input", action=argparse.BooleanOptionalAction,
-                    default=True,
-                    help="write chunk-partitioned input copies once under "
-                         "<output>/_staged so chunk scans partition-prune "
-                         "instead of re-decoding the full input per chunk. "
-                         "DEFAULT since r5: measured strictly better (30.6%% "
-                         "vs 40%% checkpoint overhead at 8M docs/4 chunks, "
-                         "BENCH/BASELINE.md); --no-stage-input is the escape "
-                         "hatch for outputs on write-expensive storage")
     ap.add_argument("--kill-after-chunks", type=int, default=0,
                     help="fault injection: exit ungracefully (status 42) right "
                          "after the K-th chunk is journaled; chunks in flight "
@@ -276,11 +275,10 @@ def main(argv=None):
 
     probes_p = with_partition_id(probes, entity, args.partitions)
     state_p = with_partition_id(state, entity, args.partitions)
-    if args.stage_input:
-        stage_dir = os.path.join(args.output, "_staged")
-        probes_p, state_p = stage_inputs(
-            spark, probes_p, state_p, stage_dir, args.chunk_size, args.partitions,
-        )
+    stage_dir = os.path.join(args.output, "_staged")
+    probes_p, state_p = stage_inputs(
+        spark, probes_p, state_p, stage_dir, args.chunk_size, args.partitions,
+    )
 
     # per-input metadata, detected once (sampled partial-agg count).
     # Cost-based (r3): a key is only routed to the time-bucketed plan when
@@ -292,17 +290,14 @@ def main(argv=None):
     from engine.skew import straggler_hot_keys, straggler_threshold
 
     keys = probes_p.select(entity).unionByName(state_p.select(entity))
-    if args.stage_input:
-        # the staged table holds exactly probes ∪ state: its parquet
-        # footers count it without a Spark job
-        n, rows_from = footer_rows(os.path.join(stage_dir, "inputs")), "staged_footers"
-    else:
-        n, rows_from = keys.count(), "count"
+    # the staged table holds exactly probes ∪ state: its parquet footers
+    # count it without a Spark job
+    n = footer_rows(os.path.join(stage_dir, "inputs"))
     cores = spark.sparkContext.defaultParallelism
     hot_keys = straggler_hot_keys(
         keys, entity, n, cores=cores, sample_fraction=0.05 if n > 1_000_000 else None,
     )
-    decision = {"total_rows": n, "rows_from": rows_from, "cores": cores,
+    decision = {"total_rows": n, "cores": cores,
                 "threshold": straggler_threshold(n, cores), "routed": len(hot_keys)}
     log.info("hot keys routed (straggler condition): %s",
              " ".join(f"{k}={v}" for k, v in decision.items()),
@@ -314,7 +309,6 @@ def main(argv=None):
         return feat, {
             "inputs": {"input": args.input, "synthetic": args.synthetic, "seed": args.seed},
             "params": {"gap": args.gap, "lags": args.lags, "partitions": args.partitions,
-                       "stage_input": args.stage_input,
                        "n_hot_keys": len(hot_keys)},
             "plan": plan.to_dict(),
             "code_version": os.environ.get("AFG_CODE_VERSION", "dev"),

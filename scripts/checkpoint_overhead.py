@@ -4,19 +4,21 @@ benched).  Same materialized corpus, same pipeline, two sinks:
 
   straight — flagship pipeline once, single hive-partitioned write
              (the bench.py flagship_compute + flagship_write_io shape)
-  chunked  — the jobs/featuregen.py shape: P hash-partitions committed
-             atomically in chunks by the job's own chunk loop
-             (``featuregen.run_chunks``: per-chunk pipeline build and
-             write, two chunks in flight, journal in chunk order)
+  staged   — the jobs/featuregen.py shape: the input staged once by
+             chunk (``featuregen.stage_inputs``, timed), then P
+             hash-partitions committed atomically in chunks by the job's
+             own chunk loop (``featuregen.run_chunks``: per-chunk pipeline
+             build and write, two chunks in flight, journal in chunk order)
 
 Usage:
 
     AFG_BENCH_DOCS=8000000 python scripts/checkpoint_overhead.py [cores] \
         [partitions] [chunk_size]
 
-Prints one JSON line suitable for appending to BENCH/envelope.json's
-``checkpoint_overhead`` record: {"straight_s": ..., "chunked_s": ...,
-"overhead_pct": ...}.  Run it alone on the host — never overlapped with
+Prints one JSON line suitable for BENCH/envelope.json's
+``checkpoint_overhead`` record: {"straight_s": ..., "staged_s": ...,
+"staged_overhead_pct": ...}.  The outputs go to a temporary directory,
+removed at exit.  Run it alone on the host — never overlapped with
 another bench (shared memory bandwidth corrupts both).
 """
 
@@ -24,8 +26,8 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -64,51 +66,38 @@ def main() -> None:
         )
         return feat
 
-    out_root = "/tmp/afg_ckpt_overhead"
-    shutil.rmtree(out_root, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="afg_ckpt_overhead-") as out_root:
+        # warmup (codegen + page cache), untimed — same protocol as flagship_ab
+        bench.materialize(build(probes, state))
+        cache.release_all()
+        spark.catalog.clearCache()
 
-    # warmup (codegen + page cache), untimed — same protocol as flagship_ab
-    bench.materialize(build(probes, state))
-    cache.release_all()
-    spark.catalog.clearCache()
+        # straight: one pipeline, one partitioned write
+        t0 = time.time()
+        feat = build(probes, state)
+        write_partitioned(feat, os.path.join(out_root, "straight"), "source",
+                          max_records_per_file=4_000_000)
+        straight_s = round(time.time() - t0, 2)
+        cache.release_all()
+        spark.catalog.clearCache()
 
-    # straight: one pipeline, one partitioned write
-    t0 = time.time()
-    feat = build(probes, state)
-    write_partitioned(feat, os.path.join(out_root, "straight"), "source",
-                      max_records_per_file=4_000_000)
-    straight_s = round(time.time() - t0, 2)
-    cache.release_all()
-    spark.catalog.clearCache()
-
-    # chunked: the featuregen loop (per-chunk plan build + atomic commit).
-    # Unstaged, the chunk filter is a predicate on a COMPUTED hash pid — the
-    # reader cannot prune, so every chunk re-scans the full input.
-    probes_p = with_partition_id(probes, entity, partitions)
-    state_p = with_partition_id(state, entity, partitions)
-    lineage = {"inputs": {"corpus": root}, "params": {"partitions": partitions}}
-
-    def chunked_loop(out_name, pp, ss):
-        mgr = CheckpointManager(ParquetJournalTableIO(os.path.join(out_root, out_name)),
-                                partitions)
-        for _ in run_chunks(mgr, pp, ss, chunk_size, lambda p, s: (build(p, s), lineage)):
+        # staged: the featuregen input path and chunk loop — chunk-partitioned
+        # input copies written once (timed as part of this leg), chunk scans
+        # partition-prune to their chunk, per-chunk plan build + atomic commit.
+        lineage = {"inputs": {"corpus": root}, "params": {"partitions": partitions}}
+        t0 = time.time()
+        sp_p, ss_p = stage_inputs(
+            spark,
+            with_partition_id(probes, entity, partitions),
+            with_partition_id(state, entity, partitions),
+            os.path.join(out_root, "staged_in"), chunk_size, partitions,
+        )
+        mgr = CheckpointManager(
+            ParquetJournalTableIO(os.path.join(out_root, "chunked_staged")), partitions)
+        for _ in run_chunks(mgr, sp_p, ss_p, chunk_size,
+                            lambda p, s: (build(p, s), lineage)):
             pass
-
-    t0 = time.time()
-    chunked_loop("chunked", probes_p, state_p)
-    chunked_s = round(time.time() - t0, 2)
-    spark.catalog.clearCache()
-
-    # chunked_staged: jobs/featuregen.py --stage-input — chunk-partitioned
-    # input copies written once (timed as part of this leg), chunk scans
-    # partition-prune to their chunk.
-    t0 = time.time()
-    sp_p, ss_p = stage_inputs(
-        spark, probes_p, state_p, os.path.join(out_root, "staged_in"),
-        chunk_size, partitions,
-    )
-    chunked_loop("chunked_staged", sp_p, ss_p)
-    staged_s = round(time.time() - t0, 2)
+        staged_s = round(time.time() - t0, 2)
 
     print(json.dumps({
         "cores": cores,
@@ -116,8 +105,6 @@ def main() -> None:
         "partitions": partitions,
         "chunk_size": chunk_size,
         "straight_s": straight_s,
-        "chunked_s": chunked_s,
-        "overhead_pct": round((chunked_s / straight_s - 1) * 100, 1),
         "staged_s": staged_s,
         "staged_overhead_pct": round((staged_s / straight_s - 1) * 100, 1),
     }))

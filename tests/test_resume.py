@@ -24,9 +24,12 @@ def _run(outdir, *extra, env=None):
     return subprocess.run(cmd, capture_output=True, text=True, timeout=420, env=env)
 
 
-def _read_output(spark, outdir):
-    df = spark.read.parquet(os.path.join(outdir, "data")).toPandas()
+def _sorted(df):
     return df.sort_values(sorted(df.columns), kind="mergesort").reset_index(drop=True)
+
+
+def _read_output(spark, outdir):
+    return _sorted(spark.read.parquet(os.path.join(outdir, "data")).toPandas())
 
 
 @pytest.mark.slow
@@ -143,7 +146,7 @@ def test_zero_row_retry_deletes_orphans(spark, tmp_path):
 
     assert io.committed_partitions() == {0, 1, 2}
     assert io.count_rows([2])[2] == 0, "phantom orphan rows survived the retry"
-    out = io.read_all(spark, committed_only=True)
+    out = io.read_all(spark)
     assert out.count() == 10
 
 
@@ -170,22 +173,21 @@ def test_output_partitioned_by_source(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_stage_input_default_and_escape_hatch(tmp_path):
-    """r5 (r4 verdict #4): --stage-input is the DEFAULT — measured strictly
-    better (30.6% vs 40% checkpoint overhead) and it removes the per-chunk
-    full-input re-scan. The default run must leave the chunk-partitioned
-    staged copies (with their completion markers); --no-stage-input must
-    not stage and still complete."""
+def test_input_is_always_staged(tmp_path):
+    """Staging is the job's only input path: a default run leaves the
+    chunk-partitioned staged table with its completion markers, and the
+    option that once turned staging off is an argparse error."""
     staged = str(tmp_path / "staged")
     r = _run(staged)
     assert r.returncode == 0, r.stdout + r.stderr
-    assert os.path.exists(os.path.join(staged, "_staged", "inputs", "_SUCCESS"))
+    inputs = os.path.join(staged, "_staged", "inputs")
+    assert os.path.exists(os.path.join(inputs, "_SUCCESS"))
+    with open(os.path.join(inputs, "_LAYOUT.json")) as fh:
+        assert json.load(fh) == {"partitions": 8, "chunk_size": 4}
 
-    nostage = str(tmp_path / "nostage")
-    r2 = _run(nostage, "--no-stage-input")
-    assert r2.returncode == 0, r2.stdout + r2.stderr
-    assert not os.path.exists(os.path.join(nostage, "_staged"))
-    assert "SUMMARY" in r2.stdout
+    r2 = _run(str(tmp_path / "nostage"), "--no-stage-input")
+    assert r2.returncode == 2, r2.stdout + r2.stderr
+    assert "unrecognized arguments: --no-stage-input" in r2.stderr
 
 
 @pytest.mark.slow
@@ -221,30 +223,43 @@ def _parquet_files(d):
 
 
 @pytest.mark.slow
-def test_one_file_per_pid_directory(spark, tmp_path):
+def test_one_file_per_pid_directory(spark, sf_dir, tmp_path):
     """Staged input and committed output hold exactly one parquet file per
-    partition directory, with and without staging, and under an extra
-    ``source`` level; staging changes no output row. AQE partition
+    partition directory, also under an extra ``source`` level. The
+    committed rows equal, row for row, one unchunked, unstaged
+    ``build_features`` pass over the whole input, which checks staging,
+    chunking and the two-in-flight pipeline at once. AQE partition
     coalescing is off, as it is at sizes where every shuffle partition is
     big: at test size it would merge the 8-wide exchanges into one task and
     hide a layout that spreads a pid over several files."""
+    from pyspark.sql import functions as F
+
+    from engine.io import read_table
+    from jobs import featuregen
+
     # the job's session is created in the subprocess, from these submit args
     env = {**os.environ, "PYSPARK_SUBMIT_ARGS":
            "--conf spark.sql.adaptive.coalescePartitions.enabled=false pyspark-shell"}
-    staged, nostage = str(tmp_path / "staged"), str(tmp_path / "nostage")
-    r = _run(staged, env=env)
+    staged = str(tmp_path / "staged")
+    r = _run(staged, "--input", sf_dir, env=env)
     assert r.returncode == 0, r.stdout + r.stderr
-    r2 = _run(nostage, "--no-stage-input", env=env)
-    assert r2.returncode == 0, r2.stdout + r2.stderr
-    pd.testing.assert_frame_equal(_read_output(spark, staged), _read_output(spark, nostage))
+
+    e = read_table(spark, sf_dir, "events")
+    probes = e.where(F.col("event_type") == "click").select("event_id", "user_id", "ts")
+    state = e.where(F.col("event_type") != "click").select("user_id", "ts", "value",
+                                                           "event_type")
+    want, _ = featuregen.build_features(probes, state, "user_id", "ts",
+                                        ["value", "event_type"], "30 minutes", [1])
+    want = _sorted(want.toPandas())
+    got = _read_output(spark, staged).drop(columns="__pid")
+    pd.testing.assert_frame_equal(_sorted(got[list(want.columns)]), want)
 
     nested = str(tmp_path / "nested")
-    r3 = _run(nested, "--synthetic", "400", "--output-partition-by", "source", env=env)
-    assert r3.returncode == 0, r3.stdout + r3.stderr
+    r2 = _run(nested, "--synthetic", "400", "--output-partition-by", "source", env=env)
+    assert r2.returncode == 0, r2.stdout + r2.stderr
     dirs = {
         "staged data": glob.glob(os.path.join(staged, "data", "__pid=*")),
         "staged input": glob.glob(os.path.join(staged, "_staged", "inputs", "__chunk=*", "__role=*")),
-        "unstaged data": glob.glob(os.path.join(nostage, "data", "__pid=*")),
         "nested data": glob.glob(os.path.join(nested, "data", "__pid=*", "source=*")),
     }
     for name, ds in dirs.items():
@@ -365,8 +380,7 @@ def test_hot_key_decision_logs_the_staged_row_count(spark, sf_dir, tmp_path, mon
                                                     caplog):
     """The staged input's parquet footers count probes ∪ state exactly, and
     no Spark job runs between staging and the hot-key decision. The
-    decision is one ``jobs.featuregen`` log record; with
-    ``--no-stage-input`` its row count comes from ``count()``."""
+    decision is one ``jobs.featuregen`` log record."""
     from engine import skew
     from engine.io import read_table
     from jobs import featuregen
@@ -390,14 +404,11 @@ def test_hot_key_decision_logs_the_staged_row_count(spark, sf_dir, tmp_path, mon
     caplog.set_level(logging.INFO, logger="jobs.featuregen")
     n = read_table(spark, sf_dir, "events").count()  # probes ∪ state
     cores = sc.defaultParallelism
-    for extra, rows_from in (((), "staged_footers"), (("--no-stage-input",), "count")):
-        caplog.clear()
-        try:
-            assert _featuregen(sf_dir, str(tmp_path / rows_from), "--chunk-size", "8",
-                               *extra) == 0
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        [rec] = [r for r in caplog.records if r.name == "jobs.featuregen"]
-        assert rec.hot_keys == {"total_rows": n, "rows_from": rows_from, "cores": cores,
-                                "threshold": skew.straggler_threshold(n, cores), "routed": 0}
-    assert jobs_between[0] == []  # the staged run
+    try:
+        assert _featuregen(sf_dir, str(tmp_path / "out"), "--chunk-size", "8") == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    [rec] = [r for r in caplog.records if r.name == "jobs.featuregen"]
+    assert rec.hot_keys == {"total_rows": n, "cores": cores,
+                            "threshold": skew.straggler_threshold(n, cores), "routed": 0}
+    assert jobs_between == [[]]
