@@ -281,15 +281,23 @@ def route_hot_keys(spark, root: str, cores: int):
     Routing is per-corpus input metadata (like table stats), computed once
     and shared by every rep: a key is only time-bucketed when its serial
     window task would outlast the parallel work, so at small corpora the
-    list comes back empty and the fused chain runs its one-sort form."""
+    list comes back empty and the chain runs as the one-sort composition.
+
+    The row count the condition needs is read from the parquet footers
+    (exact, no Spark job), as featuregen reads its staged input's."""
     from engine import hotwin
+    from engine.checkpoint import footer_rows
     from engine.skew import straggler_hot_keys
 
     p = spark.read.parquet(os.path.join(root, "probes"))
     e = spark.read.parquet(os.path.join(root, "seq_events"))
     keys = p.select("doc_id").unionByName(e.select("doc_id"))
+    # the exact row count from the parquet footers: no Spark job
+    total = footer_rows(os.path.join(root, "probes")) + footer_rows(
+        os.path.join(root, "seq_events")
+    )
     hot_keys = straggler_hot_keys(
-        keys, "doc_id", keys.count(), cores=cores, sample_fraction=0.05,
+        keys, "doc_id", total, cores=cores, sample_fraction=0.05,
     )
     n_docs = int(os.path.basename(root).split("_")[0])
     seqs = read_sequences(spark, root, n_docs)

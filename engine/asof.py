@@ -31,14 +31,11 @@ from __future__ import annotations
 
 from typing import Iterable, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from engine.tstools import epoch_micros
 
 _TAG = "__afg_is_probe"
 _PAYLOAD = "__afg_payload"
-_TS_KEY = "__afg_ts_key"
 
 
 def _as_list(x: str | Sequence[str]) -> list[str]:
@@ -75,25 +72,25 @@ def asof_join(
         values = [c for c in state.columns if c not in set(keys) | {state_ts}]
     values = list(values)
     out_names = [v + suffix for v in values]
-    unioned, probe_cols = _tagged_union(
-        probes, state, keys, probe_ts, state_ts, values, out_names
-    )
+    fields = [F.col(v).alias(n) for v, n in zip(values, out_names)]
+    if include_state_ts:
+        fields.append(F.col(state_ts).cast("timestamp").alias(include_state_ts))
+        out_names.append(include_state_ts)
+    unioned = _tagged_union(probes, state, keys, probe_ts, state_ts, fields)
     # Tie policy via the secondary sort key: inclusive → state (0) sorts before
     # probe (1) at equal ts, so an exact-tie state row is inside the probe's
     # frame; strict → probe first, exact ties excluded.
     tie = F.col(_TAG).asc() if not strict else F.col(_TAG).desc()
     w = (
         Window.partitionBy(*keys)
-        .orderBy(F.col(_TS_KEY).asc(), tie)
+        .orderBy(F.col(probe_ts).asc(), tie)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     matched = unioned.withColumn(_PAYLOAD, F.last(_PAYLOAD, ignorenulls=True).over(w))
     return matched.where(F.col(_TAG) == 1).select(
         *keys,
-        *[c for c in probe_cols if c not in keys],
+        *[c for c in probes.columns if c not in keys],
         *[F.col(f"{_PAYLOAD}.{n}").alias(n) for n in out_names],
-        *([F.col(f"{_PAYLOAD}.__state_ts").alias(include_state_ts)]
-          if include_state_ts else []),
     )
 
 
@@ -103,45 +100,38 @@ def _tagged_union(
     keys: list[str],
     probe_ts: str,
     state_ts: str,
-    values: list[str],
-    out_names: list[str],
-    with_state_ts: bool = True,
-) -> tuple[DataFrame, list[str]]:
+    fields: list[Column],
+) -> DataFrame:
     """The tagged probe∪state input of the sorted-partition merge, shared by
-    :func:`asof_join` and the fused chain (``engine.fused``).
+    :func:`asof_join` and the fused chain (``engine.fused``): the probe
+    columns, a tag, and the state ``fields`` in one payload struct.
+
+    The union's time column is the probe's own ``probe_ts`` (state rows put
+    their ``state_ts``, cast to its type, there), so the output keeps the
+    column the as-of sorted by: a later window that orders by ``probe_ts``
+    reuses that sort instead of adding its own.
 
     State rows carry their values inside ONE struct so "last state ROW" is
     well-defined even when individual value columns are null (merge_asof
     parity); the struct itself is null on probe rows, so ignorenulls skips
     probes but never skips a state row.
-
-    ``with_state_ts=False`` omits the matched-state-timestamp field from the
-    payload (callers that never serve ``include_state_ts`` — the fused
-    chain): 8 bytes per state row less through the fact-scale exchange.
     """
-    probe_cols = probes.columns
-    payload = F.struct(
-        *[F.col(v).alias(n) for v, n in zip(values, out_names)],
-        *(
-            [F.col(state_ts).cast("timestamp").alias("__state_ts")]
-            if with_state_ts
-            else []
-        ),
-    )
+    payload = F.struct(*fields)
+    ts_type = probes.schema[probe_ts].dataType
     state_side = state.select(
         *[F.col(k) for k in keys],
-        epoch_micros(state_ts).alias(_TS_KEY),
         F.lit(0).alias(_TAG),
         payload.alias(_PAYLOAD),
-        *[F.lit(None).cast(probes.schema[c].dataType).alias(c)
-          for c in probe_cols if c not in keys],
+        *[
+            F.col(state_ts).cast(ts_type).alias(c) if c == probe_ts
+            else F.lit(None).cast(probes.schema[c].dataType).alias(c)
+            for c in probes.columns if c not in keys
+        ],
     )
     probe_side = probes.select(
         *[F.col(k) for k in keys],
-        epoch_micros(probe_ts).alias(_TS_KEY),
         F.lit(1).alias(_TAG),
         F.lit(None).cast(state_side.schema[_PAYLOAD].dataType).alias(_PAYLOAD),
-        *[F.col(c) for c in probe_cols if c not in keys],
+        *[F.col(c) for c in probes.columns if c not in keys],
     )
-    return state_side.unionByName(probe_side), probe_cols
-
+    return state_side.unionByName(probe_side)

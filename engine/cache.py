@@ -52,16 +52,16 @@ def _owner():
     return getattr(_SCOPE, "owner", None)
 
 
-def tracked_persist(df: DataFrame, level=None) -> DataFrame:
-    """persist() + register for later release_all(). ``level`` is an
-    optional pyspark StorageLevel (default MEMORY_AND_DISK as in persist)."""
-    out = df.persist(level) if level is not None else df.persist()
+def tracked_persist(df: DataFrame) -> DataFrame:
+    """persist() at its default storage level + register for later
+    release_all()."""
+    out = df.persist()
     with _LOCK:
         _TRACKED.append((out, _owner()))
     return out
 
 
-def chain_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
+def chain_checkpoint(df: DataFrame) -> DataFrame:
     """Plan-lineage barrier for ITERATIVELY CHAINED operators (the
     connected-components rounds in ``engine.corpus.dedup``):
     ``localCheckpoint`` truncates the logical plan to a LogicalRDD.
@@ -80,8 +80,11 @@ def chain_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     The checkpointed blocks are MEMORY_AND_DISK RDD cache entries owned by
     Spark's ContextCleaner: they are freed when the DataFrame is
     garbage-collected. release_all() drops the registry references so GC
-    can reclaim them at the pipeline barrier."""
-    out = df.localCheckpoint(eager=eager)
+    can reclaim them at the pipeline barrier.
+
+    The checkpoint is eager: it materializes here, so a caller that counts
+    rounds to convergence sees each round's rows computed once."""
+    out = df.localCheckpoint(eager=True)
     with _LOCK:
         _CHECKPOINTED.append((out, _owner()))
     return out

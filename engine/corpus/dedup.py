@@ -468,7 +468,7 @@ def connected_components(
 
     converged = False
     for _ in range(max_iter):
-        stepped = chain_checkpoint(_cc_round(labels, edges), eager=True)
+        stepped = chain_checkpoint(_cc_round(labels, edges))
         if stepped.where(F.col("__changed")).limit(1).count() == 0:
             labels = stepped
             converged = True
@@ -537,13 +537,12 @@ def _cc_star(edges: DataFrame, max_iter: int) -> DataFrame:
         .select(
             F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
         )
-        .distinct(),
-        eager=True,
+        .distinct()
     )
     converged = False
     for _ in range(max_iter):
         e_new = chain_checkpoint(
-            _star_round(_star_round(e, large=True), large=False), eager=True
+            _star_round(_star_round(e, large=True), large=False)
         )
         if (
             e_new.exceptAll(e).limit(1).count() == 0

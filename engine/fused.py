@@ -1,19 +1,9 @@
-"""Fused feature chain: as-of + ffill + lag + sessionize + prefix rolling,
-compiled as ONE plan. With no hot keys it is one exchange and one sort;
-with hot keys it is TWO wide shuffles with the engine's one hot/cold skew
-split built in. ``engine.plan.lower`` compiles every plan that matches the
-chain here, with or without hot keys.
-
-**No hot keys (``hot_keys=()``)** — the as-of's own sort serves the whole
-chain. The tagged probe∪state union is hash-partitioned by entity and
-sorted by ``(entity, ts, tag)`` once; the as-of resolves with
-``last(payload)`` over that order, and every later window (ffill, lags,
-the session flag and its running sum, the rolling partials) orders by
-``(entity, ts)`` — a prefix of the child's ordering, so Catalyst adds no
-Sort. The rolling cutoff is the difference of two growing RANGE frames
-(``UNBOUNDED PRECEDING .. CURRENT ROW`` minus ``UNBOUNDED PRECEDING ..
-W+1µs PRECEDING``), each evaluated incrementally in O(n): no explode, no
-second sort.
+"""Fused feature chain with hot keys: as-of + ffill + lag + sessionize +
+prefix rolling, compiled as ONE plan of TWO wide shuffles with the
+engine's one hot/cold skew split built in. ``engine.plan.lower`` compiles
+a matching plan here when it is given hot keys; with none, every plan
+lowers plainly, and ``fused_feature_chain(hot_keys=())`` is the public
+operators' composition, which already shares the as-of's one sort.
 
 Why this exists: per-op skew splits (since removed) routed hot entities
 through a time-bucketed variant of each window operator. Each variant was
@@ -23,9 +13,7 @@ flagship pipeline compiled to ~10 wide shuffles plus 2 plan-truncation
 checkpoints, and its wall time was dominated by per-stage fixed costs that
 do not shrink with cores (measured ~0.5 scaling efficiency 4→16 cores for
 the hot branch while the cold chain sat near the CPU ceiling). This module
-is now the engine's only way to time-split hot keys, and the no-hot-key
-chain shares its entry point: ``engine.plan.lower`` compiles matching
-plans here and lowers every other plan plainly.
+is now the engine's only way to time-split hot keys.
 
 The fusion observation: every op in the chain wants the SAME physical
 layout — rows hash-clustered by ``(entity, time_bucket)`` and sorted by
@@ -66,8 +54,8 @@ broadcastable (e.g. 10k hot keys × 120 buckets ≈ 1.2M tiny rows).
 Semantics are IDENTICAL to composing the public operators
 (``asof_join`` → ``lag_features`` → ``sessionize`` →
 ``rolling_aggregates(method="prefix")``); tests/test_fused.py asserts
-row-level equality against that composition for no, some, and all
-entities hot. Determinism requires unique ``(entity, ts)`` probe rows
+row-level equality against that composition for some and all entities
+hot. Determinism requires unique ``(entity, ts)`` probe rows
 (same as the composed ops — window ordering among exact ties is
 engine-chosen either way).
 """
@@ -79,17 +67,22 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from engine.asof import _PAYLOAD, _TAG, _TS_KEY, _tagged_union
+from engine.asof import _PAYLOAD, _TAG, _tagged_union, asof_join
 from engine.cache import tracked_persist
 from engine.hotwin import hot_predicate
+from engine.tstools import epoch_micros
 from engine.window_ops import (
     PREFIX_AGGS,
+    forward_fill,
+    lag_features,
     parse_duration_seconds,
     prefix_finals,
     prefix_partials,
-    windowed_partials,
+    rolling_aggregates,
+    sessionize,
 )
 
+_TS_KEY = "__fx_ts"
 _B = "__fx_b"
 _SK = "__fx_sk"
 
@@ -135,8 +128,8 @@ def fused_feature_chain(
         f = rolling_aggregates(f, on, probe_ts, rolling,
                                window=rolling_window, method="prefix")
 
-    but compiled to one exchange and one sort (no hot keys) or two wide
-    shuffles (hot keys). ``lag_cols`` name columns AFTER
+    — with no ``hot_keys`` it IS that composition (one exchange, one
+    sort); with hot keys it is two wide shuffles. ``lag_cols`` name columns AFTER
     the as-of suffix is applied (e.g. ``fvalue_last``); ``rolling`` maps
     those names to agg lists among {count, sum, avg, mean, stddev}.
     ``ffill_cols`` forward-fill existing probe/as-of columns in the same
@@ -186,67 +179,30 @@ def fused_feature_chain(
         if isinstance(rolling_window, str)
         else f"{int(rolling_window)}s"
     )
-    unioned, probe_cols = _tagged_union(
-        probes, state, keys, probe_ts, state_ts, values, out_names,
-        with_state_ts=False,
-    )
-    tie = F.col(_TAG).asc() if not strict else F.col(_TAG).desc()
-
     hot_keys = list(hot_keys)
     if not hot_keys:
-        # No entity needs time-splitting, so the carries and the cutoff
-        # exchange protect nothing: ONE exchange and ONE sort. The as-of
-        # window sorts the union by (keys, _TS_KEY, tag); every later
-        # window orders by (keys, _TS_KEY), a prefix of that ordering, so
-        # Catalyst adds no Sort. The rolling cutoff is a second growing
-        # RANGE frame (see rolling_aggregates(method="prefix")), not an
-        # explode. (A compound xxhash64 sort-prefix key like _SK below was
-        # measured out here: parity at 8M docs/16 cores, 25-35% slower at
-        # 500k docs.)
-        w_asof = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col(_TS_KEY).asc(), tie)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        d = (
-            unioned.withColumn(
-                _PAYLOAD, F.last(_PAYLOAD, ignorenulls=True).over(w_asof)
-            )
-            .where(F.col(_TAG) == 1)
-            .select(
-                *keys,
-                _TS_KEY,
-                *[c for c in probe_cols if c not in keys],
-                *[F.col(_PAYLOAD).getField(n).alias(n) for n in out_names],
-            )
-        )
-        w = Window.partitionBy(*keys).orderBy(F.col(_TS_KEY))
-        w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        exprs = [
-            *[
-                F.last(c, ignorenulls=True).over(w_cum).alias(c + ffill_suffix)
-                for c in ffill_cols
-            ],
-            *[F.lag(c, k).over(w).alias(f"{c}_lag{k}") for c in lag_cols for k in lags],
-            *windowed_partials(rolling, w, win_us),
-        ]
+        # No entity needs time-splitting: the public operators compose to
+        # one exchange and one sort (every window after the as-of orders by
+        # a prefix of its sort).
+        f = asof_join(probes, state, keys, probe_ts, state_ts, values,
+                      strict=strict, suffix=suffix)
+        if ffill_cols:
+            f = forward_fill(f, keys, probe_ts, ffill_cols, ffill_suffix)
+        if lag_cols:
+            f = lag_features(f, keys, probe_ts, lag_cols, lags=lags)
         if gap_us is not None:
-            prev = F.lag(_TS_KEY).over(w)
-            new = prev.isNull() | ((F.col(_TS_KEY) - prev) > gap_us)
-            exprs.append(F.when(new, 1).otherwise(0).alias("__new"))
-        keep = [
-            *keys,
-            *[c for c in probe_cols if c not in keys],
-            *out_names,
-            *[c + ffill_suffix for c in ffill_cols],
-            *[f"{c}_lag{k}" for c in lag_cols for k in lags],
-        ]
-        if gap_us is not None:
-            keep.append(F.sum("__new").over(w_cum).alias(session_col))
-        return d.select("*", *exprs).select(
-            *keep, *prefix_finals(rolling, rsuffix, F.col)
-        )
+            f = sessionize(f, keys, probe_ts, gap=session_gap, session_col=session_col)
+        if rolling:
+            f = rolling_aggregates(f, keys, probe_ts, rolling,
+                                   window=rolling_window, method="prefix")
+        return f
 
+    probe_cols = probes.columns
+    unioned = _tagged_union(
+        probes, state, keys, probe_ts, state_ts,
+        [F.col(v).alias(n) for v, n in zip(values, out_names)],
+    ).withColumn(_TS_KEY, epoch_micros(probe_ts))
+    tie = F.col(_TAG).asc() if not strict else F.col(_TAG).desc()
     pred = hot_predicate(on, hot_keys)
     specs = prefix_partials(rolling)
     partials = list(specs)
@@ -341,8 +297,8 @@ def fused_feature_chain(
     for c in lag_cols:
         for k in lags:
             exprs.append(F.lag(F.col(c), k).over(w_rows).alias(f"__lg_{c}_{k}"))
-    for p, addend in specs.items():
-        exprs.append(F.sum(addend).over(w_range).alias(f"__cum_{p}"))
+    for p, agg in specs.items():
+        exprs.append(F.expr(agg).over(w_range).alias(f"__cum_{p}"))
     # in-bucket forward fill: same partitioning+ordering, one more window
     # expression in the shared pass (no extra exchange)
     w_cumrows = w_rows.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -389,7 +345,12 @@ def fused_feature_chain(
     agg_exprs = [
         F.min(F.col(_TS_KEY)).alias("__min_ts"),
         F.max(F.col(_TS_KEY)).alias("__max_ts"),
-        *[F.max(f"__cum_{p}").alias(f"__tot_{p}") for p in partials],
+        # the bucket's total is its last row's running partial (peers at
+        # the max ts share it); max() would be wrong for negative values
+        *[
+            F.max_by(f"__cum_{p}", F.col(_TS_KEY)).alias(f"__tot_{p}")
+            for p in partials
+        ],
         # the bucket's last NON-NULL fill value = the in-bucket ffill at the
         # bucket's last row (null iff the whole bucket is null). Tie-break
         # like the as-of payload carry: among rows sharing the bucket's max

@@ -180,8 +180,9 @@ _FUSE_ORDER = {"asof": 0, "lag": 1, "sessionize": 2, "rolling": 3}
 def _fused_split(plan: "FeaturePlan"):
     """``(n_fused, kwargs)`` when the plan's leading window steps form the
     asof → lag? → sessionize? → rolling? pattern ``fused_feature_chain``
-    compiles, and NO per-entity step follows them — else ``None`` (``lower``
-    then lowers plainly).
+    compiles, and NO per-entity step follows them — else ``None``. ``lower``
+    asks only when hot keys are given (without them the plain lowering is
+    already one exchange and one sort) and lowers plainly on ``None``.
 
     Disqualifiers: ``lag`` with leads (the fused carry tails are
     backward-only), a rolling step whose ``method`` is not ``"prefix"``
@@ -251,18 +252,18 @@ def lower(
 ) -> DataFrame:
     """FeaturePlan → DataFrame by composing §2 operators in step order.
 
-    When the plan's leading window steps match :func:`_fused_split`, they
-    compile to the fused chain (``engine.fused``) and the remaining steps
-    lower plainly on its output. With no ``hot_keys`` that chain is one
-    exchange and one sort: every window after the as-of reuses the as-of's
-    sort. With ``hot_keys`` (e.g. from ``engine.skew.straggler_hot_keys``)
-    it is the two-exchange chain that time-splits the hot keys by
-    ``bucket``.
+    With no ``hot_keys`` every plan lowers plainly. All window-family steps
+    share ``partitionBy(entity)`` and order by the bare ts column, so
+    Catalyst plans ONE shuffle for the chain, and the as-of's sort serves
+    every later window: asof → ffill → lag → sessionize → rolling is one
+    exchange and one sort.
 
-    Any other plan lowers plainly: all window-family steps share
-    ``partitionBy(entity)``, so Catalyst plans ONE shuffle for the chain.
-    Its hot keys are not skew-proofed — the lowering logs a warning saying
-    so.
+    With ``hot_keys`` (e.g. from ``engine.skew.straggler_hot_keys``) a plan
+    whose leading window steps match :func:`_fused_split` compiles them to
+    the two-exchange fused chain (``engine.fused``) that time-splits the
+    hot keys by ``bucket``, and the remaining steps lower plainly on its
+    output. A plan that does not match lowers plainly and logs a warning
+    that its hot keys are not skew-proofed.
 
     Raises ``ValueError`` on an unknown op or param key, before either
     lowering reads the plan.
@@ -270,8 +271,8 @@ def lower(
     tables = tables or {}
     _check_steps(plan.steps)
     df, rest = probes, plan.steps
-    fused = _fused_split(plan)
-    if fused is None and hot_keys:
+    fused = _fused_split(plan) if hot_keys else None
+    if hot_keys and fused is None:
         _log.warning(
             "plan %s does not fuse; its %d hot_keys are ignored and it "
             "lowers plainly (hot entities run as serial window tasks)",
@@ -284,7 +285,7 @@ def lower(
         state = tables[kw.pop("state_name")]
         df = fused_feature_chain(
             probes, state, on=plan.entity, probe_ts=plan.ts,
-            bucket=bucket, hot_keys=hot_keys or (), **kw,
+            bucket=bucket, hot_keys=hot_keys, **kw,
         )
         rest = plan.steps[n_fused:]
     for step in rest:

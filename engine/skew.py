@@ -134,8 +134,8 @@ def straggler_hot_keys(
       holding multiples of a core's share.
 
     Returns the same shape as ``detect_hot_keys``. An empty list is the
-    correct result for "no key can straggle here" — the fused chain then
-    compiles to its one-exchange, one-sort form.
+    correct result for "no key can straggle here" — the plan then lowers
+    plainly to its one-exchange, one-sort chain.
 
     ``total_rows`` must be the row count of ``df``: when it is at or below
     the bar, no key can clear it, and the empty list is returned without

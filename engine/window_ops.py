@@ -19,6 +19,7 @@ from typing import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType, TimestampType
 
 from engine.tstools import epoch_micros
 
@@ -29,6 +30,11 @@ _GAP_UNITS = {
     "day": 86400, "days": 86400, "d": 86400,
 }
 
+# the frame method's aggregates, by name → SQL function
+_FRAME_AGGS = {
+    "count": "count", "sum": "sum", "avg": "avg", "mean": "avg",
+    "min": "min", "max": "max", "stddev": "stddev",
+}
 # aggregates the prefix method decomposes into additive partials
 PREFIX_AGGS = {"count", "sum", "avg", "mean", "stddev"}
 
@@ -108,16 +114,41 @@ def sessionize(
     """W4: new session when the gap since the previous event exceeds ``gap``.
 
     ``session_col`` is a per-entity ordinal starting at 1 (first event of the
-    first session = 1). Timestamp math goes through epoch_micros (TIMESTAMP_NTZ
-    rule, SURVEY.md §0.1).
+    first session = 1). The window takes ``lag(ts)`` of the bare column and
+    only then converts both ends to µs through epoch_micros (TIMESTAMP_NTZ
+    rule, SURVEY.md §0.1): a window function over a computed expression
+    would keep Catalyst from merging this window with its neighbours.
     """
     gap_us = int(parse_duration_seconds(gap) * 1_000_000)
     w = _entity_window(entity, ts)
     wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ts_us = epoch_micros(ts)
-    prev_us = F.lag(ts_us).over(w)
-    is_new = F.when(prev_us.isNull() | ((ts_us - prev_us) > gap_us), 1).otherwise(0)
+    prev = F.lag(ts).over(w)
+    is_new = F.when(
+        prev.isNull() | ((epoch_micros(ts) - epoch_micros(prev)) > gap_us), 1
+    ).otherwise(0)
     return df.withColumn(session_col, F.sum(is_new).over(wsum))
+
+
+def _quote(c: str) -> str:
+    return "`" + c.replace("`", "``") + "`"
+
+
+def _interval(us: int) -> str:
+    """A µs duration as an exact SQL day-time interval literal."""
+    return f"INTERVAL '{us // 1_000_000}.{us % 1_000_000:06d}' SECOND"
+
+
+def _range_over(agg: str, entity: Sequence[str], ts: str, frame: str) -> Column:
+    """SQL aggregate ``agg`` over ``partitionBy(entity).orderBy(ts)`` with
+    ``RANGE BETWEEN frame``. The DataFrame API takes only numeric RANGE
+    bounds, which would force ordering by a computed µs column; SQL takes
+    interval bounds on the bare ts column, so the window reuses an
+    existing ``(entity, ts)`` sort."""
+    part = ", ".join(_quote(c) for c in entity)
+    return F.expr(
+        f"{agg} OVER (PARTITION BY {part} ORDER BY {_quote(ts)} "
+        f"RANGE BETWEEN {frame})"
+    )
 
 
 def rolling_aggregates(
@@ -133,7 +164,10 @@ def rolling_aggregates(
     ``aggs`` maps column → aggregate names among {count,sum,avg,min,max,stddev}.
     Output columns ``{col}_{fn}_{suffix}`` where suffix is the window spec with
     spaces stripped (e.g. value_sum_1hour). Inclusive both ends, matching SQL
-    ``RANGE BETWEEN INTERVAL W PRECEDING AND CURRENT ROW``.
+    ``RANGE BETWEEN INTERVAL W PRECEDING AND CURRENT ROW``. Both methods
+    order by the bare ``ts`` column with interval frame bounds, so ``ts``
+    must be TIMESTAMP or TIMESTAMP_NTZ (``ValueError`` otherwise) and the
+    window reuses an earlier ``(entity, ts)`` sort (an as-of, a lag).
 
     Two physical methods, identical semantics (allclose; tests compare both):
 
@@ -144,74 +178,67 @@ def rolling_aggregates(
       wide frames costs n·w in ONE task.
     * ``method="prefix"``: decomposable aggregates (count/sum/avg/stddev)
       as the difference of two GROWING frames over one ordering: the
-      running sum up to ``t`` (``RANGE UNBOUNDED PRECEDING .. CURRENT ROW``)
-      minus the running sum up to the cutoff ``t − W − 1µs``
+      running partial up to ``t`` (``RANGE UNBOUNDED PRECEDING .. CURRENT
+      ROW``) minus the running partial up to the cutoff ``t − W − 1µs``
       (``RANGE UNBOUNDED PRECEDING .. W+1µs PRECEDING``). Both frames only
       grow, so Spark evaluates each incrementally — O(n) per entity — where
       the sliding frame costs O(n·w) serial in ONE task for a hot key. Both
-      share one window spec: one sort, no explode, no join. The fused
-      chain (``engine.fused``) uses the same decomposition. Float results
-      are allclose-but-not-bitwise vs "frame" (subtraction of prefix
-      sums). min/max do not decompose and are rejected under this method.
+      share one window spec: one sort, no explode, no join. The hot-key
+      chain (``engine.fused``) uses the same partials. Float results are
+      allclose-but-not-bitwise vs "frame" (subtraction of prefix sums).
+      min/max do not decompose and are rejected under this method.
     """
     win_us = int(parse_duration_seconds(window) * 1_000_000)
     suffix = (
         window.replace(" ", "") if isinstance(window, str) else f"{int(window)}s"
     )
     ents = _as_list(entity)
-    if method == "frame":
-        order = epoch_micros(ts)
-        w = (
-            Window.partitionBy(*ents)
-            .orderBy(order)
-            .rangeBetween(-win_us, 0)
+    ts_type = df.schema[ts].dataType
+    if not isinstance(ts_type, (TimestampType, TimestampNTZType)):
+        raise ValueError(
+            f"rolling_aggregates needs a TIMESTAMP or TIMESTAMP_NTZ ts column; "
+            f"{ts!r} is {ts_type.simpleString()}"
         )
-        fns = {
-            "count": F.count, "sum": F.sum, "avg": F.avg, "mean": F.avg,
-            "min": F.min, "max": F.max, "stddev": F.stddev,
-        }
-        exprs = [
-            fns[n](F.col(c)).over(w).alias(f"{c}_{n}_{suffix}")
+    if method == "frame":
+        frame = f"{_interval(win_us)} PRECEDING AND CURRENT ROW"
+        return df.select("*", *[
+            _range_over(f"{_FRAME_AGGS[n]}({_quote(c)})", ents, ts, frame)
+            .alias(f"{c}_{n}_{suffix}")
             for c, names in aggs.items()
             for n in names
-        ]
-        return df.select("*", *exprs)
+        ])
     if method != "prefix":
         raise ValueError(f"unknown rolling method: {method!r}")
 
     bad = [n for ns in aggs.values() for n in ns if n not in PREFIX_AGGS]
     if bad:
         raise ValueError(f"method='prefix' cannot compute {bad}; use method='frame'")
-    w = Window.partitionBy(*ents).orderBy(epoch_micros(ts))
-    d = df.select("*", *windowed_partials(aggs, w, win_us))
+    now = "UNBOUNDED PRECEDING AND CURRENT ROW"
+    cut = f"UNBOUNDED PRECEDING AND {_interval(win_us + 1)} PRECEDING"
+    d = df.select("*", *[
+        (
+            _range_over(e, ents, ts, now)
+            - F.coalesce(_range_over(e, ents, ts, cut), F.lit(0))
+        ).alias(p)
+        for p, e in prefix_partials(aggs).items()
+    ])
     return d.select(*df.columns, *prefix_finals(aggs, suffix, F.col))
 
 
-def prefix_partials(aggs: dict[str, Sequence[str]]) -> dict[str, Column]:
-    """Additive per-row partials of the prefix method, by name: a non-null
-    count for every column (it gates the empty-window → NULL rule), plus
-    the value and its square where an aggregate needs them."""
-    specs: dict[str, Column] = {}
+def prefix_partials(aggs: dict[str, Sequence[str]]) -> dict[str, str]:
+    """Additive per-row partials of the prefix method, by name, as SQL
+    aggregates over bare columns: the non-null count of every column (it
+    gates the empty-window → NULL rule), plus the sum of the value and of
+    its square where an aggregate needs them."""
+    specs: dict[str, str] = {}
     for c, names in aggs.items():
-        need = set(names)
-        specs[f"__cn_{c}"] = F.when(F.col(c).isNotNull(), F.lit(1)).otherwise(F.lit(0))
+        need, q = set(names), _quote(c)
+        specs[f"__cn_{c}"] = f"count({q})"
         if need - {"count"}:
-            specs[f"__cs_{c}"] = F.col(c)
+            specs[f"__cs_{c}"] = f"sum({q})"
         if "stddev" in need:
-            specs[f"__cq_{c}"] = F.col(c) * F.col(c)
+            specs[f"__cq_{c}"] = f"sum({q} * {q})"
     return specs
-
-
-def windowed_partials(aggs, w: WindowSpec, win_us: int) -> list[Column]:
-    """Each :func:`prefix_partials` partial summed over the trailing window
-    ``[t − W, t]`` of ordering ``w`` (in µs): its growing frame up to ``t``
-    (peer-inclusive) minus its growing frame up to the cutoff ``t − W − 1µs``."""
-    now = w.rangeBetween(Window.unboundedPreceding, 0)
-    cut = w.rangeBetween(Window.unboundedPreceding, -(win_us + 1))
-    return [
-        (F.sum(e).over(now) - F.coalesce(F.sum(e).over(cut), F.lit(0))).alias(p)
-        for p, e in prefix_partials(aggs).items()
-    ]
 
 
 def prefix_finals(aggs, suffix: str, in_window) -> list[Column]:

@@ -75,9 +75,10 @@ def build_features(probes, state, entity, probe_ts, values, gap, lags,
     prove exactly what pipeline produced each committed partition.
 
     The plan is the as-of → lag → sessionize → prefix-rolling pattern that
-    ``engine.plan.lower`` compiles to the fused chain, so pre-detected
-    ``hot_keys`` are time-split inside its two exchanges; with no hot keys
-    it is the one-exchange, one-sort chain."""
+    ``engine.plan.lower`` compiles to the fused chain when given hot keys,
+    so pre-detected ``hot_keys`` are time-split inside its two exchanges;
+    with no hot keys it lowers plainly to the one-exchange, one-sort
+    chain."""
     eng = (
         FeatureEngine(probes, entity=entity, ts=probe_ts)
         .asof(state, values=values, suffix="_last")
@@ -283,7 +284,7 @@ def main(argv=None):
     # per-input metadata, detected once (sampled partial-agg count).
     # Cost-based (r3): a key is only routed to the time-bucketed plan when
     # its serial window task would actually straggle the job — below that
-    # bar the fused plan is the one-sort chain, which is faster
+    # bar the plan lowers plainly to the one-sort chain, which is faster
     # (the time split's fixed costs are real). Imported here, not at module
     # level, so a replaced ``engine.skew.straggler_hot_keys`` (perfbench's
     # tracer wraps it) is the one called.

@@ -111,7 +111,9 @@ def main() -> None:
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     from engine.asof import asof_join
     from engine.skew import salted_join, two_level_agg
-    from engine.window_ops import lag_features, rolling_aggregates, sessionize
+    from engine.window_ops import (
+        forward_fill, lag_features, rolling_aggregates, sessionize,
+    )
 
     e = read_table(spark, SF, "events")
     probes = e.where(F.col("event_type") == "click").select("event_id", "user_id", "ts")
@@ -121,15 +123,23 @@ def main() -> None:
 
     f = asof_join(probes, state, on="user_id", probe_ts="ts", state_ts="ts",
                   values=["value"], suffix="_last")
+    f = forward_fill(f, "user_id", "ts", ["value_last"])
     f = lag_features(f, "user_id", "ts", ["value_last"], lags=[1])
     f = sessionize(f, "user_id", "ts", gap="30 minutes")
+    f = rolling_aggregates(f, "user_id", "ts", {"value_last": ["count", "sum"]},
+                           window="1 hour", method="frame")
     secs.append(section(
-        "As-of (union strategy) + lag + sessionize chain",
-        "All per-entity windows share `partitionBy(user_id)` — the whole "
-        "chain needs ONE real exchange (hard-asserted); the two scans carry "
-        "pushed `event_type` filters and pruned schemas.",
+        "As-of (union strategy) + ffill + lag + sessionize + rolling chain",
+        "The public operators composed by hand. All per-entity windows share "
+        "`partitionBy(user_id)` and order by the bare `ts` column: the as-of "
+        "sorts its union by `(user_id, ts, tag)` and keeps `ts`, so every "
+        "later window's `(user_id, ts)` order is a prefix of that sort. The "
+        "whole chain needs ONE real exchange and ONE sort (both "
+        "hard-asserted); the two scans carry pushed `event_type` filters and "
+        "pruned schemas.",
         f,
         max_exchanges=1,
+        max_sorts=1,
     ))
 
     r = rolling_aggregates(state, "user_id", "ts", {"value": ["count", "sum"]},
@@ -207,8 +217,8 @@ def main() -> None:
     ))
 
     # No hot keys (the common case: no key clears the straggler bar): the
-    # same plan compiles to the one-sort chain — every window after the as-of reuses
-    # the as-of's (user_id, ts, tag) sort.
+    # same plan lowers plainly to the one-sort chain — every window after
+    # the as-of reuses the as-of's (user_id, ts, tag) sort.
     one_sort = (
         FeatureEngine(probes, entity="user_id", ts="ts")
         .asof(state, values=["value"], suffix="_last")
@@ -221,12 +231,13 @@ def main() -> None:
     assert "Generate" not in one_sort_plan, "one-sort chain exploded its rows"
     secs.append(section(
         "FeaturePlan lowering with no hot keys (one exchange, one sort)",
-        "The same pipeline with no hot keys compiles to the fused chain's "
-        "one-sort form: the as-of window sorts by `(user_id, ts, tag)` and "
-        "the lag, session and rolling windows order by `(user_id, ts)`, a "
-        "prefix of it, so Catalyst adds no Sort. The rolling cutoff is a "
-        "growing `RangeFrame, unboundedpreceding$(), -3600000001` frame, "
-        "not an explode. Hard-asserted: one exchange, one sort, no Generate.",
+        "The same pipeline with no hot keys lowers plainly, step by step, to "
+        "the public operators (no fusion): the as-of window sorts by "
+        "`(user_id, ts, tag)` and the lag, session and rolling windows order "
+        "by `(user_id, ts)`, a prefix of it, so Catalyst adds no Sort. The "
+        "rolling cutoff is a growing `RangeFrame, unboundedpreceding$(), "
+        "INTERVAL '-3600.000001' SECOND` frame, not an explode. "
+        "Hard-asserted: one exchange, one sort, no Generate.",
         one_sort,
         max_exchanges=1,
         max_sorts=1,

@@ -95,7 +95,7 @@ class _Frame:
     def __init__(self):
         self.released_by = []
 
-    def persist(self, level=None):
+    def persist(self):
         return self
 
     def unpersist(self):

@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 
 from engine.asof import asof_join
 from engine.fused import fused_feature_chain
-from engine.window_ops import lag_features, rolling_aggregates, sessionize
+from engine.plan import FeatureEngine
+from engine.window_ops import forward_fill, lag_features, rolling_aggregates, sessionize
 
 GAP = "1 hour"
 WIN = "1 day"
@@ -127,13 +128,30 @@ def test_fused_hybrid_multi_hot(sides):
     )
 
 
-def test_fused_hybrid_empty_hot_list(sides):
-    """hot_keys=[] must degenerate to the plain single-window semantics."""
-    probes, ev = sides
-    assert_equal(
-        reference_chain(probes, ev),
-        fused_chain_hybrid(probes, ev, "6 hours", hot_keys=[]),
+def test_fused_hybrid_negative_values(spark):
+    """A hot entity's rolling sums carry each bucket's total into later
+    buckets; with negative values the total is the bucket's last running
+    sum, not its largest one. Half-hourly states of alternating sign, 1-hour
+    buckets, a 3-hour window: every probe's sum crosses buckets."""
+    hour, t0 = 3_600_000_000, 1_700_000_000_000_000
+    vals = [5, -7, 3, -9, 4, -1, 2, -6]
+    state = spark.createDataFrame(
+        [("a", t0 + i * hour // 2, float(v)) for i, v in enumerate(vals)],
+        "e string, us long, v double",
+    ).select("e", F.timestamp_micros("us").alias("ts"), "v")
+    probes = spark.createDataFrame(
+        [("a", t0 + i * hour // 2 + 1, i) for i in range(len(vals))],
+        "e string, us long, pid long",
+    ).select("e", F.timestamp_micros("us").alias("ts"), "pid")
+    kw = dict(
+        on="e", probe_ts="ts", values=["v"], suffix="_last",
+        rolling={"v_last": ["count", "sum"]}, rolling_window="3 hours",
+        bucket="1 hour",
     )
+    out = ["pid", "v_last_count_3hours", "v_last_sum_3hours"]
+    ref = fused_feature_chain(probes, state, hot_keys=[], **kw).select(*out)
+    hot = fused_feature_chain(probes, state, hot_keys=["a"], **kw).select(*out)
+    assert sorted(hot.collect()) == sorted(ref.collect())
 
 
 def test_fused_hybrid_all_hot(sides):
@@ -193,6 +211,10 @@ def flagship_plan(probes, ev):
     )
 
 
+# a sliding RANGE frame ``[t − W, t]`` in formatted-plan text
+SLIDING_FRAME = r"RangeFrame, INTERVAL '-[\d.]+' SECOND, currentrow\$\(\)"
+
+
 def plan_ops(df):
     """(Exchange, Sort, Window, Generate) counts and the formatted plan."""
     buf = io.StringIO()
@@ -231,10 +253,57 @@ def test_no_hot_key_chain_is_one_exchange_one_sort(parquet_sides, path):
         df = fused_chain_hybrid(probes, ev, "6 hours", hot_keys=[])
     n_ex, n_sort, _n_win, n_gen, p = plan_ops(df)
     assert (n_ex, n_sort, n_gen) == (1, 1, 0), p
-    cutoff = 86_400_000_000 + 1
-    assert f"RangeFrame, unboundedpreceding$(), -{cutoff})" in p, p
-    assert not re.search(r"RangeFrame, -\d+, currentrow\$\(\)", p), p
+    assert "RangeFrame, unboundedpreceding$(), INTERVAL '-86400.000001' SECOND)" in p, p
+    assert not re.search(SLIDING_FRAME, p), p
     assert_equal(reference_chain(probes, ev), df)
+
+
+def hand_composed(probes, ev, strict, method):
+    f = asof_join(
+        probes, ev, on="doc_id", probe_ts="asof_ts", state_ts="ts",
+        values=["fvalue", "fcat"], suffix="_last", strict=strict,
+    )
+    f = forward_fill(f, "doc_id", "asof_ts", ["fvalue_last"], out_suffix="_f")
+    f = lag_features(f, "doc_id", "asof_ts", ["fvalue_last"], lags=[1, 2])
+    f = sessionize(f, "doc_id", "asof_ts", gap=GAP)
+    return rolling_aggregates(
+        f, "doc_id", "asof_ts", {"fvalue_last": ["count", "sum", "avg"]},
+        window=WIN, method=method,
+    )
+
+
+@pytest.mark.parametrize("method", ["frame", "prefix"])
+@pytest.mark.parametrize("strict", [False, True])
+def test_hand_composed_chain_is_one_sort(parquet_sides, strict, method):
+    """The public operators composed by hand share the as-of's sort: each
+    later window orders by the bare ts column (a prefix of the as-of's
+    ``(entity, ts, tag)`` order) and its functions read bare columns, so
+    Catalyst merges adjacent windows. 1 Exchange, 1 Sort, 3 Windows (the
+    as-of; ffill + lags + the session flag's lag; the session sum + the
+    rolling frames), no Generate — for both tie policies and both rolling
+    methods. ``fused_feature_chain(hot_keys=[])`` and the plain
+    ``FeatureEngine`` lowering are that same chain."""
+    probes, ev = parquet_sides
+    fused = fused_feature_chain(
+        probes, ev, on="doc_id", probe_ts="asof_ts", state_ts="ts",
+        values=["fvalue", "fcat"], suffix="_last", strict=strict,
+        ffill_cols=["fvalue_last"], ffill_suffix="_f",
+        lag_cols=["fvalue_last"], lags=[1, 2], session_gap=GAP,
+        rolling={"fvalue_last": ["count", "sum", "avg"]}, rolling_window=WIN,
+        hot_keys=[],
+    )
+    lowered = (
+        FeatureEngine(probes, entity="doc_id", ts="asof_ts")
+        .asof(ev, values=["fvalue", "fcat"], suffix="_last", strict=strict)
+        .ffill(["fvalue_last"])
+        .lag(["fvalue_last"], lags=[1, 2])
+        .sessionize(GAP)
+        .rolling({"fvalue_last": ["count", "sum", "avg"]}, WIN, method=method)
+        .to_df()
+    )
+    for df in (hand_composed(probes, ev, strict, method), fused, lowered):
+        n_ex, n_sort, n_win, n_gen, p = plan_ops(df)
+        assert (n_ex, n_sort, n_win, n_gen) == (1, 1, 3, 0), p
 
 
 def test_plan_lowering_fused_fallback_on_leads(sides):
@@ -321,7 +390,7 @@ def test_plan_lowering_frame_rolling_is_bit_exact(sides, caplog):
         assert df.exceptAll(ref).count() == 0
         assert ref.exceptAll(df).count() == 0
         p = plan_ops(df)[-1]
-        assert re.search(r"RangeFrame, -\d+, currentrow\$\(\)", p), p
+        assert re.search(SLIDING_FRAME, p), p
         ignored = any("hot_keys are ignored" in r.getMessage() for r in caplog.records)
         assert ignored == bool(hot)
 

@@ -89,6 +89,37 @@ def test_rolling_stddev_methods_agree(events):
     )
 
 
+@pytest.mark.parametrize("window", ["1 hour", 3600])
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+@pytest.mark.parametrize("method", ["frame", "prefix"])
+def test_rolling_microsecond_boundary(spark, method, ts_type, window):
+    """The window [t − W, t] is exact to the microsecond: a row exactly W
+    before t is counted (entity "a"), a row W + 1µs before is not ("b")."""
+    from pyspark.sql import functions as F
+
+    t, w = 1_700_000_000_000_000, 3_600_000_000
+    rows = [("a", t - w, 1.0), ("a", t, 10.0), ("b", t - w - 1, 1.0), ("b", t, 10.0)]
+    df = spark.createDataFrame(rows, "e string, us long, v double").select(
+        "e", F.timestamp_micros("us").cast(ts_type).alias("ts"), "v"
+    )
+    suf = "1hour" if isinstance(window, str) else "3600s"
+    got = rolling_aggregates(
+        df, "e", "ts", {"v": ["count", "sum"]}, window=window, method=method
+    ).where(F.col("v") == 10.0)
+    assert {r["e"]: (r[f"v_count_{suf}"], r[f"v_sum_{suf}"]) for r in got.collect()} == {
+        "a": (2, 11.0), "b": (1, 10.0),
+    }
+
+
+def test_rolling_rejects_non_timestamp_ts(events):
+    from pyspark.sql import functions as F
+
+    df = events.withColumn("ts", F.unix_micros(F.col("ts").cast("timestamp")))
+    for method in ("frame", "prefix"):
+        with pytest.raises(ValueError, match="TIMESTAMP or TIMESTAMP_NTZ"):
+            rolling_aggregates(df, "doc_id", "ts", {"fvalue": ["sum"]}, method=method)
+
+
 def test_rolling_prefix_rejects_minmax(events):
     with pytest.raises(ValueError, match="prefix"):
         rolling_aggregates(
