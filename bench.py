@@ -43,8 +43,14 @@ EVENTS_PER_DOC = 8
 # at the per-query pin (r3 verdict task #6).
 SHUFFLE_WIDTH = 128
 SMALL_QUERY_WIDTH = 8
+# timed reps per headline query (best-of; rationale at the per-query loop)
+QUERY_REPS = 3
 # spark.local.dir under AFG_SHUFFLE_TMPFS=1 (the --scaling legs' default)
 SHUFFLE_TMPFS_DIR = "/dev/shm/afg_shuffle"
+# the --scaling artifact, next to this file whatever the working directory
+BASELINE_MD = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "BENCH", "BASELINE.md"
+)
 
 
 def get_spark(cores: int) -> SparkSession:
@@ -388,7 +394,7 @@ def run_bench(cores: int) -> dict:
         # pause or page-cache miss is a 15% swing — with 2 reps that noise
         # regularly produced spurious anti-scaling rows in the 4-vs-16 table)
         reps_q = []
-        for _ in range(int(os.environ.get("AFG_QUERY_REPS", "3"))):
+        for _ in range(QUERY_REPS):
             _isolate()
             reps_q.append(timed(lambda n=n: materialize(qs[n](spark, SF_DIR))))
         results[n] = min(reps_q)
@@ -533,73 +539,41 @@ def run_scaling() -> None:
     print(json.dumps({"scaling_efficiency": eff, f"thr{n_lo}": thr_lo, f"thr{n_hi}": thr_hi}))
 
 
-def _eff(lo_s: float, hi_s: float, lo_cores, hi_cores, ndigits: int = 3) -> float:
-    """Scaling efficiency between two legs from their wall seconds:
-    (lo_s / hi_s) / (hi_cores / lo_cores)."""
-    return round((lo_s / hi_s) / (int(hi_cores) / int(lo_cores)), ndigits)
-
-
-def _records() -> dict:
-    """Dated measurement records (BENCH/envelope.json). Each record carries
-    its own `measured` date; write_baseline_md renders them AS dated records
-    so regenerating the artifact can never restamp an old measurement as
-    current evidence."""
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "BENCH", "envelope.json")
-    if not os.path.exists(path):
-        return {}
-    with open(path) as fh:
-        return json.load(fh)
-
-
-def _leg_eff(rec: dict) -> tuple:
-    """(best-based, median-based) efficiency for a two-leg rep record."""
-    lo, hi = rec["lo_reps"], rec["hi_reps"]
-    return (_eff(min(lo), min(hi), rec["lo_cores"], rec["hi_cores"]),
-            _eff(statistics.median(lo), statistics.median(hi),
-                 rec["lo_cores"], rec["hi_cores"]))
-
-
 def write_baseline_md(lo: dict, hi: dict, n_lo: int, n_hi: int) -> None:
-    """Render BENCH/BASELINE.md ENTIRELY from data: the two legs' bench
-    payloads (embedded verbatim at the bottom so the artifact can always be
-    regenerated from itself) plus the dated measurement records in
-    BENCH/envelope.json (envelope window, host calibration, cross-N walls,
-    flagship A/B records).  Nothing here reads process env or hardcodes a
-    measured number: the r3 artifact's protocol header claimed the 500k-doc
-    default corpus while its own embedded payload said 8M, because the old
-    template interpolated env-derived module globals — every figure now
-    comes from lo/hi or a dated record, and regenerating in any shell
-    reproduces the same artifact.  Point-in-time investigation narratives
-    (sort-prefix hardening, simhash parallelism reconciliation, …) live in
-    BENCH/HISTORY.md and are linked, never re-emitted as current claims."""
+    """Render BASELINE_MD from the two legs' bench payloads alone (embedded
+    verbatim at the bottom, so the artifact regenerates from itself).
+    Nothing here reads a file or process env, or types in a measured
+    number: the r3 artifact's protocol header claimed the 500k-doc default
+    corpus while its own embedded payload said 8M, because the old template
+    interpolated env-derived module globals. Dated records that no run
+    regenerates (the contention-free envelope window, host calibration,
+    cross-N walls, flagship A/Bs, checkpoint overhead, straggler
+    sensitivity) and the investigation narratives are static text in
+    BENCH/HISTORY.md, linked, never re-emitted as current claims."""
     docs = lo["bench_docs"]
     if hi["bench_docs"] != docs:
         raise ValueError(f"leg corpora differ: {docs} vs {hi['bench_docs']}")
-    # corpus-shape fields joined the payload in r4; every earlier recorded
-    # payload was generated at the generator defaults (8 events/doc, 5% hot
-    # key, 128 buckets)
-    events = docs * lo.get("events_per_doc", 8)
+    events = docs * lo["events_per_doc"]
     probes = docs * 2
-    hot_pct = lo.get("hot_pct", 5)
-    buckets = lo.get("seq_buckets", 128)
-    sf = lo.get("sf", "?")
+    hot_pct = lo["hot_pct"]
+    buckets = lo["seq_buckets"]
+    sf = lo["sf"]
     thr_lo = lo["sequences_per_sec_flagship"]
     thr_hi = hi["sequences_per_sec_flagship"]
     ratio = n_hi / n_lo
     eff = round(thr_hi / thr_lo / ratio, 3)
-    eff_med = _eff(lo["flagship_median"], hi["flagship_median"], n_lo, n_hi)
-    recs = _records()
+    eff_med = round(lo["flagship_median"] / hi["flagship_median"] / ratio, 3)
 
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/BASELINE.md", "w") as fh:
+    with open(BASELINE_MD, "w") as fh:
         fh.write(f"""# BENCH/BASELINE — measured scaling evidence
 
 Generated by `bench.write_baseline_md` from the two legs' raw JSON
-payloads (embedded verbatim at the bottom) + the dated records in
-`BENCH/envelope.json`. Every number below is computed from that data —
-nothing is typed in, so regeneration cannot restamp stale claims.
-Narrative investigation records live in `BENCH/HISTORY.md`.
+payloads (embedded verbatim at the bottom). Every number below is
+computed from them — nothing is typed in, so regeneration cannot restamp
+stale claims. The dated records no run regenerates (contention-free
+envelope window, host calibration, cross-N walls, flagship A/Bs,
+checkpoint overhead, straggler sensitivity) and the investigation
+narratives live in [`BENCH/HISTORY.md`](HISTORY.md).
 
 Protocol (BASELINE.md): identical flagship input ({docs} synthetic
 sequences → {events} seq_events, {probes} probes — materialized ONCE and
@@ -608,8 +582,9 @@ doc_id ({buckets} buckets, the Iceberg bucket-transform analogue) so the
 token join is co-located by layout and never shuffles the fat side; one
 doc_id holds {hot_pct}% of events/probes and the cost-based straggler
 condition decides per corpus whether routing it pays — `hot_keys_routed`
-below records this run's decision, and the sensitivity record further
-down measures both sides of it — plus headline
+below records this run's decision, and the dated
+[straggler-sensitivity record](HISTORY.md#2026-08-19-round-4-straggler-routing-sensitivity-and-the-recalibrated-bar)
+measures both sides of it — plus headline
 queries at {sf}), same code, two parallelism levels. Efficiency =
 (throughput@{n_hi} / throughput@{n_lo}) / {ratio:g} — the sandbox stand-in
 for the N vs 4N executor requirement (>= 0.8, BASELINE.json:2); both
@@ -619,8 +594,9 @@ shuffle/spill on tmpfs (`AFG_SHUFFLE_TMPFS=1`): on a real cluster
 aggregate shuffle bandwidth grows with executor count (per-executor local
 NVMe), while this sandbox has ONE ~750 MB/s disk shared by both legs —
 with disk shuffle the {n_hi}-core leg saturates it and the measurement
-grades the disk, not the engine (A/B on the identical plan: 0.655 eff on
-disk vs 0.75+ on tmpfs). Input parquet + the feature-table write stay on
+grades the disk, not the engine (dated
+[disk vs tmpfs shuffle A/B](HISTORY.md#2026-08-17-round-2-disk-vs-tmpfs-shuffle-ab)
+on the identical plan). Input parquet + the feature-table write stay on
 the real disk in both legs. The measured flagship job =
 scan corpus → fused as-of merge → lag → sessionize → trailing aggs →
 token join → per-source stats via doc-grain pre-agg (flagship_compute,
@@ -635,184 +611,16 @@ writes to distributed storage in parallel.
 | local[{n_hi}] | {hi['queries']['flagship_compute']} | {thr_hi} | {hi['value']} |
 
 **Scaling efficiency ({n_lo} → {n_hi} cores, this run's full-protocol
-legs): {eff}** best-based / {eff_med} median-based (target >= 0.8; see the
-envelope record below for how this window relates to the N→4N executor
-criterion on this host).
+legs): {eff}** best-based / {eff_med} median-based (target >= 0.8; the dated
+[contention-free envelope record](HISTORY.md#2026-08-19-engine-scaling-inside-the-contention-free-envelope)
+shows how this window relates to the N→4N executor criterion on this
+host).
 
 Estimator stability ({len(lo['flagship_reps'])} reps per leg): rep lists
 local[{n_lo}] {lo['flagship_reps']} (spread {lo['flagship_rep_spread']}×),
 local[{n_hi}] {hi['flagship_reps']} (spread {hi['flagship_rep_spread']}×).
-Hot keys routed (cost-based straggler condition): {lo.get('hot_keys_routed')}.
-""")
-        env = recs.get("envelope")
-        if env:
-            e_best, e_med = _leg_eff(env)
-            verdict = "MET" if e_best >= 0.8 else "NOT MET"
-            fh.write(f"""
-## Engine scaling inside the calibrated contention-free envelope (dated record, measured {env['measured']})
+Hot keys routed (cost-based straggler condition): {lo['hot_keys_routed']}.
 
-local[{env['lo_cores']}] → local[{env['hi_cores']}], same flagship, same
-{env['bench_docs']}-doc corpus, same code: **{e_best} best-based /
-{e_med} median-based — target ≥ 0.8 {verdict}.**
-Rep lists: local[{env['lo_cores']}] {env['lo_reps']}
-(spread {round(max(env['lo_reps'])/min(env['lo_reps']), 2)}×),
-local[{env['hi_cores']}] {env['hi_reps']}
-(spread {round(max(env['hi_reps'])/min(env['hi_reps']), 2)}×).
-{env['context']}
-
-The envelope window is the faithful stand-in for the N → 4N EXECUTOR
-criterion on this sandbox: a real scale-up adds a memory bus with every
-executor, while every thread of a local[] leg shares this host's single
-socket — the calibration below shows identical per-process numpy work
-inflating at high stream counts with NO Spark involved, i.e. any window
-touching 16 threads measures DRAM saturation, not the engine. Both
-envelope legs sit fully inside the flat region of that curve.
-""")
-        cal = recs.get("calibration")
-        if cal:
-            pts = ", ".join(f"procs={k}: {v}" for k, v in
-                            cal["per_process_seconds"].items())
-            c = cal["per_process_seconds"]
-            infl = round(c[max(c, key=int)] / min(c.values()), 1)
-            fh.write(f"""
-## Host-envelope calibration (dated record, measured {cal['measured']})
-
-{cal['script']}: {cal['context']}
-Per-process seconds for identical work: {pts}
-(max-concurrency inflation vs the contention-free trough: {infl}×).
-""")
-        xn = recs.get("cross_n")
-        if xn:
-            walls = xn["best_wall_s"]
-            cores_sorted = sorted(walls, key=int)
-            wtab = ", ".join(f"local[{k}] {walls[k]} s" for k in cores_sorted)
-            wins = []
-            for a in cores_sorted:
-                for b in cores_sorted:
-                    if int(b) in (2 * int(a), 4 * int(a)):
-                        wins.append((a, b, _eff(walls[a], walls[b], a, b, 2)))
-            wtxt = ", ".join(f"{a}→{b} {e}" for a, b, e in wins)
-            fh.write(f"""
-## Cross-N flagship wall times (dated record, measured {xn['measured']})
-
-{xn['context']}
-Best wall: {wtab}.
-Pairwise efficiency windows (computed from the walls above): {wtxt}.
-The decay tracks the calibration curve: windows inside the ≤8-stream
-envelope scale at ~0.9+, and any window touching 16 threads inherits the
-DRAM saturation the calibration shows is pure hardware (flat Σ task CPU
-across legs — see BENCH/HISTORY.md — proves the engine does identical
-work at every parallelism).
-""")
-        abr = recs.get("ab_records") or []
-        if abr:
-            fh.write("""
-## Flagship A/B records (isolated flagship-only legs, dated)
-
-| measured | label | window | best eff | median eff | lo reps | hi reps |
-|---|---|---|---|---|---|---|
-""")
-            for r in abr:
-                b, m = _leg_eff(r)
-                fh.write(
-                    f"| {r['measured']} | {r['label']} | "
-                    f"local[{r['lo_cores']}]→local[{r['hi_cores']}] | {b} | {m} | "
-                    f"{r['lo_reps']} | {r['hi_reps']} |\n")
-            for r in abr:
-                if r.get("context"):
-                    fh.write(f"\n- **{r['label']}** ({r['measured']}): {r['context']}\n")
-                if r.get("tasksum_lo") and r.get("tasksum_hi"):
-                    # Σ task metrics per leg (scripts/tasksum.py over the legs'
-                    # event logs, warmup fenced): equal Σ CPU + equal shuffle
-                    # bytes across legs = the plan does identical work at both
-                    # parallelism levels, so the residual wall gap is host
-                    # hardware (DRAM bandwidth), not plan shape.
-                    fh.write(
-                        "\n  | leg | Σ cpu_s | Σ gc_s | shuffle_write_mb "
-                        "| shuffle_read_mb | spill_disk_mb |\n"
-                        "  |---|---|---|---|---|---|\n")
-                    for leg, ts in (("lo", r["tasksum_lo"]), ("hi", r["tasksum_hi"])):
-                        cores = r[f"{leg}_cores"]
-                        fh.write(
-                            f"  | local[{cores}] | {ts['cpu_s']} | {ts['gc_s']} | "
-                            f"{ts['shuffle_write_mb']} | {ts['shuffle_read_mb']} | "
-                            f"{ts.get('spill_disk_mb', 0)} |\n")
-        ck = recs.get("checkpoint_overhead")
-        if ck:
-            unstaged = ""
-            if "chunked_s" in ck:
-                # records measured while the job still had an unstaged path
-                unstaged = (
-                    f" The unstaged chunk loop of that date took "
-                    f"{ck['chunked_s']} s — **{ck['overhead_pct']}% "
-                    f"overhead**: its chunk filter was a predicate on a "
-                    f"computed hash pid, so every chunk re-scanned the full "
-                    f"input."
-                )
-            fh.write(f"""
-## Checkpointing overhead on the production path (dated record, measured {ck['measured']})
-
-scripts/checkpoint_overhead.py at local[{ck['cores']}],
-{ck['bench_docs']}-doc corpus, {ck['partitions']} hash-partitions in
-chunks of {ck['chunk_size']}: straight pipeline + single partitioned
-write {ck['straight_s']} s vs the jobs/featuregen.py chunked
-atomic-commit loop over its staged input (input copies written once,
-partitioned so chunk scans partition-prune; staging write time
-included) {ck['staged_s']} s — **{ck['staged_overhead_pct']}% overhead**
-buys resumability (per-chunk plan build + journal writes +
-cache-release barrier).{unstaged} {ck.get('context', '')}
-""")
-        ss = recs.get("straggler_sensitivity")
-        if ss:
-            fh.write(f"""
-## Straggler-routing threshold sensitivity (dated record, measured {ss['measured']})
-
-{ss['context']}
-
-| docs | hot% | hot-key rows | makespan bar (as of that run's rule) | default routes? | best routed (s) | best plain (s) | faster side | decision flips at floor |
-|---|---|---|---|---|---|---|---|---|
-""")
-            for r in ss["runs"]:
-                lo_w, hi_w = sorted([r["best_routed_s"], r["best_plain_s"]])
-                if hi_w / max(lo_w, 1e-9) < 1.05:
-                    faster = "~tie (<5%)"
-                elif r["best_routed_s"] < r["best_plain_s"]:
-                    faster = "routed"
-                else:
-                    faster = "plain"
-                decisions = r["floor_sweep_routes"]
-                default = bool(r["default_decision_routes"])
-                flips = [f for f, d in sorted(decisions.items(),
-                                              key=lambda kv: int(kv[0]))
-                         if bool(d) != default]
-                flip_txt = (f"{min(flips, key=int)}" if flips else
-                            "never (250k–8M)")
-                fh.write(
-                    f"| {r['docs']} | {r.get('hot_pct', '?')} "
-                    f"| {r['hot_key_rows']} | {r['makespan_bar']} "
-                    f"| {default} | {r['best_routed_s']} | {r['best_plain_s']} "
-                    f"| {faster} | {flip_txt} |\n")
-            for r in ss["runs"]:
-                if r.get("note"):
-                    fh.write(f"- {r['docs']} docs / {r.get('hot_pct', '?')}% hot: {r['note']}\n")
-            fh.write(
-                "\nThe model is honest iff the default decision picks the "
-                "measured-faster side at every corpus size, and the flip "
-                "column shows how far `spill_floor` can move from its "
-                "calibrated 1M before the decision changes (floor sweep is "
-                "model-only: decision recomputed per candidate floor against "
-                "the exact hot-key count).\n")
-        pc = recs.get("pinned_row_crosscheck")
-        pin_note = ""
-        if pc:
-            xs = "; ".join(
-                f"{r['q']} {r['best_4']} s@4 → {r['best_16']} s@16"
-                for r in pc["runs"])
-            pin_note = (
-                f" (isolated fresh-session cross-check, dated record "
-                f"measured {pc['measured']}: {xs} — see envelope.json "
-                f"pinned_row_crosscheck for the full context)")
-        fh.write(f"""
 ANN recall at {sf} (measured per run, see raw JSON): single-table
 8-plane LSH recall@5 on the fixture's ISOTROPIC embeddings
 {lo.get('ann_recall5_isotropic_1x8')} vs {lo.get('ann_recall5_isotropic_8x4')}
@@ -830,7 +638,8 @@ them at the leg's full width measured task-overhead amortization, not the
 operator). With identical plans both legs these rows measure per-core
 speed — but in a long full-protocol process they still inherit the JVM
 state (heap, code cache, GC history) left by the preceding flagship reps,
-so a ° row can drift without the operator regressing.{pin_note} Their
+so a ° row can drift without the operator regressing (dated
+[isolated cross-check](HISTORY.md#2026-08-19-pinned-row-cross-check)). Their
 plans are bucketed/broadcast/JVM-side and audit-gated in docs/PLANS.md;
 kernel-level scaling for the ones worth isolating is recorded in
 BENCH/HISTORY.md. The flagship rows (full 128-wide plans) are the
@@ -843,6 +652,7 @@ protocol's measurement.
             mark = "°" if (lo["queries"][q] < 5.0 and not q.startswith("flagship")) else ""
             fh.write(f"| {q} | {lo['queries'][q]} | {hi['queries'][q]} | {mark} |\n")
         fh.write(f"\nRaw JSON:\n\n    {json.dumps(lo)}\n    {json.dumps(hi)}\n")
+
 
 if __name__ == "__main__":
     if "--scaling" in sys.argv:

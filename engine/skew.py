@@ -119,8 +119,8 @@ def straggler_hot_keys(
       plan's fixed stages (role explode, carry scaffolding) dominate
       anything routing could save. Measured: a 250k-row hot key at 500k
       docs / 16 cores made the routed plan 3.0× SLOWER than the plain
-      fused chain it was protecting (22.91 s vs 7.63 s, sensitivity record
-      in BENCH/BASELINE.md).
+      fused chain it was protecting (22.91 s vs 7.63 s; the dated
+      straggler-sensitivity record is in BENCH/HISTORY.md).
     * ``cnt > total_rows / cores`` — the makespan bar: a serial task only
       extends the makespan once it exceeds a full core's balanced share of
       the job. This bar was recalibrated by the 2026-08-19 sensitivity

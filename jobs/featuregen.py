@@ -102,7 +102,7 @@ def stage_inputs(spark, probes_p, state_p, stage_dir, chunk_size, partitions):
     column — nothing for the reader to prune — so a P/chunk_size-chunk
     run would pay P/chunk_size full input scans (dated record, 8M docs,
     4 chunks, local[16]: 40.0% checkpoint overhead unstaged, 30.6%
-    staged; BENCH/BASELINE.md).
+    staged; BENCH/HISTORY.md).
 
     Probes and state are staged as ONE table, so staging is one exchange +
     write job. Its layout is the unit that reads it, the chunk: a

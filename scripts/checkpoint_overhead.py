@@ -15,10 +15,10 @@ Usage:
     AFG_BENCH_DOCS=8000000 python scripts/checkpoint_overhead.py [cores] \
         [partitions] [chunk_size]
 
-Prints one JSON line suitable for BENCH/envelope.json's
-``checkpoint_overhead`` record: {"straight_s": ..., "staged_s": ...,
-"staged_overhead_pct": ...}.  The outputs go to a temporary directory,
-removed at exit.  Run it alone on the host — never overlapped with
+Prints one JSON line: {"straight_s": ..., "staged_s": ...,
+"staged_overhead_pct": ...}. A run worth keeping becomes a new dated
+checkpoint-overhead section in BENCH/HISTORY.md.  The outputs go to a
+temporary directory, removed at exit.  Run it alone on the host — never overlapped with
 another bench (shared memory bandwidth corrupts both).
 """
 

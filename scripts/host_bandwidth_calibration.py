@@ -1,8 +1,9 @@
 """Host memory-bandwidth scaling calibration for the BENCH/BASELINE.md
-protocol: N INDEPENDENT Python processes (no JVM, no Spark, no shared state)
-each sort+copy a 512 MB int64 array twice; the per-process wall time for this
-IDENTICAL work is flat while the memory subsystem has headroom and inflates
-once the concurrent bandwidth-heavy streams saturate it.
+protocol (its dated record is in BENCH/HISTORY.md): N INDEPENDENT Python
+processes (no JVM, no Spark, no shared state) each sort+copy a 512 MB int64
+array twice; the per-process wall time for this IDENTICAL work is flat while
+the memory subsystem has headroom and inflates once the concurrent
+bandwidth-heavy streams saturate it.
 
 Why this matters for the N-vs-4N evidence: a real cluster scale-up from N to
 4N executors multiplies memory buses along with cores; this single-socket

@@ -25,9 +25,9 @@ Usage:
     AFG_BENCH_DOCS=2000000 AFG_BENCH_HOT_PCT=20 AFG_SHUFFLE_TMPFS=1 \
         python scripts/straggler_sensitivity.py 16 3
 
-Prints ONE JSON line; paste (or script) the result into
-BENCH/envelope.json["straggler_sensitivity"] as a dated record —
-bench.write_baseline_md renders it.
+Prints ONE JSON line; a run worth keeping goes into a new dated
+straggler-sensitivity section of BENCH/HISTORY.md (bench.py renders no
+record of it).
 """
 
 from __future__ import annotations

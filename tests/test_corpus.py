@@ -339,8 +339,8 @@ def test_lsh_topk_planted_near_dup_recall(spark, emb):
     """LSH ANN's contract is the HIGH-similarity regime: a planted near-dup
     (cosine ≈ 0.97) must be retrieved for (nearly) every query at planes=8,
     tables=4. Isotropic-noise neighbors (cosine ~0.4) are not its job —
-    their recall follows the (1-(1-(1-θ/π)^b)^L) curve, measured in
-    BENCH/BASELINE.md."""
+    their recall follows the (1-(1-(1-θ/π)^b)^L) curve, measured per
+    scaling run in BENCH/BASELINE.md."""
     from pyspark.sql import types as T
 
     pdf = emb.limit(20).toPandas()
